@@ -56,17 +56,6 @@ _ANALYZED_EXTRA = (
     "doc_len int, first_pos array<int>"
 )
 
-POSTINGS_SCHEMA = (
-    "term string, salt int, block_seq int, n int, "
-    "first_doc_id long, last_doc_id long, doc_ids_delta binary, "
-    "tfs binary, doc_lens binary, block_max_tf int, block_max_w double"
-)
-
-# opt-in positional postings (build_index(store_positions=True)): two
-# extra binary columns per block — per-doc position counts + the
-# delta+varint position stream (codec.encode_positions)
-POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", pos_counts binary, positions binary"
-
 
 # ---------------------------------------------------------------------------
 # Tokenize (P1-P4) — one Arrow pass
@@ -433,14 +422,6 @@ def build_docs(transcripts: DataFrame,
 # Posting build (B3) — salted skew-split + block encoding
 # ---------------------------------------------------------------------------
 
-def _bm25_w(tfs: np.ndarray, doc_lens: np.ndarray, avgdl: float) -> np.ndarray:
-    """idf-less BM25 term weight (idf applied at query time from df)."""
-    tfs = tfs.astype(np.float64)
-    return (tfs * (BM25_K1 + 1.0)) / (
-        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * doc_lens.astype(np.float64) / avgdl)
-    )
-
-
 def explode_postings(docs: DataFrame) -> DataFrame:
     """docs → (term, doc_id, tf, doc_len) rows."""
     return (
@@ -543,29 +524,10 @@ def build_postings(docs: DataFrame, avgdl: float,
     def encode_group(key, pdf):
         term, salt = key
         pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        lens = pdf["doc_len"].to_numpy(dtype=np.int64)
-        pos_col = (pdf["positions"].to_numpy() if store_positions else None)
-        rows = []
-        for seq, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            b_ids, b_tfs, b_lens = ids[lo:hi], tfs[lo:hi], lens[lo:hi]
-            d, t, ln = codec.encode_block(b_ids, b_tfs, b_lens)
-            w = _bm25_w(b_tfs, b_lens, avgdl)
-            row = (term, int(salt), seq, int(hi - lo),
-                   int(b_ids[0]), int(b_ids[-1]), d, t, ln,
-                   int(b_tfs.max()), float(w.max()))
-            if store_positions:
-                row += codec.encode_positions(list(pos_col[lo:hi]))
-            rows.append(row)
-        cols = [
-            "term", "salt", "block_seq", "n", "first_doc_id", "last_doc_id",
-            "doc_ids_delta", "tfs", "doc_lens", "block_max_tf", "block_max_w",
-        ]
-        if store_positions:
-            cols += ["pos_counts", "positions"]
-        return pd.DataFrame(rows, columns=cols)
+        return codec.encode_blocks(
+            term, salt, pdf["doc_id"].to_numpy(), pdf["tf"].to_numpy(),
+            pdf["doc_len"].to_numpy(), avgdl, block_size,
+            pdf["positions"].to_numpy() if store_positions else None)
 
     # NOTE (r3 measured): a one-shuffle variant — repartition the
     # exploded rows by (term_bucket, salt) + JVM sort + streaming
@@ -590,8 +552,8 @@ def build_postings(docs: DataFrame, avgdl: float,
     postings = (
         salted.groupBy("term", "salt")
         .applyInPandas(encode_group,
-                       POSTINGS_POS_SCHEMA if store_positions
-                       else POSTINGS_SCHEMA)
+                       codec.BLOCK_POS_SCHEMA if store_positions
+                       else codec.BLOCK_SCHEMA)
         .withColumn("term_bucket",
                     F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
         # co-locate on (bucket, salt) before the partitionBy write:
@@ -870,44 +832,25 @@ def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
     union = spark.read.parquet(*seg_dirs)
 
     def merge_group(key, pdf):
+        import pyarrow as pa
         term, salt = key
-        pdf = pdf.sort_values("first_doc_id")
-        ids = np.concatenate([codec.decode_doc_ids(b) for b in pdf["doc_ids_delta"]])
-        tfs = np.concatenate([codec.decode_varint(b).astype(np.int64)
-                              for b in pdf["tfs"]])
-        lens = np.concatenate([codec.decode_varint(b).astype(np.int64)
-                               for b in pdf["doc_lens"]])
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, lens = ids[order], tfs[order], lens[order]
-        if store_positions:
-            pos_all = [p for c, v in zip(pdf["pos_counts"], pdf["positions"])
-                       for p in codec.decode_positions(c, v)]
-            pos_all = [pos_all[i] for i in order]
-        rows = []
-        for seq, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            d, t, ln = codec.encode_block(ids[lo:hi], tfs[lo:hi], lens[lo:hi])
-            w = _bm25_w(tfs[lo:hi], lens[lo:hi], avgdl)
-            row = (term, int(salt), seq, int(hi - lo),
-                   int(ids[lo]), int(ids[hi - 1]), d, t, ln,
-                   int(tfs[lo:hi].max()), float(w.max()))
-            if store_positions:
-                row += codec.encode_positions(pos_all[lo:hi])
-            rows.append(row)
-        cols = [
-            "term", "salt", "block_seq", "n", "first_doc_id", "last_doc_id",
-            "doc_ids_delta", "tfs", "doc_lens", "block_max_tf", "block_max_w",
-        ]
-        if store_positions:
-            cols += ["pos_counts", "positions"]
-        return pd.DataFrame(rows, columns=cols)
+        batch = pa.RecordBatch.from_pandas(pdf.sort_values("first_doc_id"),
+                                           preserve_index=False)
+        dec = codec.decode_blocks(batch, ("tf", "doc_len", "positions")
+                                  if store_positions else ("tf", "doc_len"))
+        order = np.argsort(dec["doc_id"], kind="stable")
+        positions = (dec["positions"].to_numpy(zero_copy_only=False)[order]
+                     if store_positions else None)
+        return codec.encode_blocks(
+            term, salt, dec["doc_id"][order], dec["tf"][order],
+            dec["doc_len"][order], avgdl, block_size, positions)
 
     merged = (
         union.repartition("term", "salt")
         .groupBy("term", "salt")
         .applyInPandas(merge_group,
-                       POSTINGS_POS_SCHEMA if store_positions
-                       else POSTINGS_SCHEMA)
+                       codec.BLOCK_POS_SCHEMA if store_positions
+                       else codec.BLOCK_SCHEMA)
         .withColumn("term_bucket",
                     F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
     )

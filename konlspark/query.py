@@ -9,7 +9,10 @@ plans:
 - ``postings`` scan filters ``term_bucket IN (...) AND term IN (...)``
   → directory-level partition pruning + row-group stats pruning; only
   buckets holding query terms are touched;
-- block decode is one Arrow ``mapInPandas`` (numpy varint decode);
+- block decode is one batch decoder (:meth:`SearchEngine._decode`): an
+  Arrow ``mapInArrow`` over ``codec.decode_blocks`` — one numpy varint
+  pass per binary column per batch, its scan projected to the columns
+  the caller asks for, with optional candidate-id block skipping;
 - AND/OR fold = groupBy(doc_id) count vs distinct (reference
   ``inverted_index.py:98-116``), PHRASE = AND + first-occurrence
   monotonicity over ``docs.first_pos`` (reference ``index.py:432-448``),
@@ -35,13 +38,15 @@ from typing import Dict, Iterator, List, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec
 from . import tokenizer as tk
 from .catalog import IndexCatalog
-from .oracle import BM25_B, BM25_K1, bm25_idf
+from .oracle import bm25_idf
 
 
 @dataclass
@@ -55,6 +60,12 @@ class ComplexRequest:
     condition1: Union["ComplexRequest", SearchRequest]
     condition2: Union["ComplexRequest", SearchRequest]
     mode: str  # "and" | "or"
+
+
+def _holds(ids_sorted: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Elementwise: does sorted ``ids_sorted`` hold an id in [lo, hi]?"""
+    return (np.searchsorted(ids_sorted, lo)
+            < np.searchsorted(ids_sorted, hi, side="right"))
 
 
 class ReadOnlyIndexError(RuntimeError):
@@ -168,111 +179,63 @@ class SearchEngine:
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def _decode(self, blocks: DataFrame, idf: Optional[Dict[str, float]] = None
-                ) -> DataFrame:
-        """blocks → (term, doc_id, tf, score) rows; score = idf * w."""
-        avgdl = self.avgdl
-        idf = idf or {}
+    # Spark type of each column :meth:`_decode` can return
+    _DECODED_TYPES = {"term": "string", "doc_id": "long", "tf": "long",
+                      "score": "double", "positions": "array<int>"}
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                terms, ids_l, tfs_l, scores_l = [], [], [], []
-                for row in pdf.itertuples(index=False):
-                    ids, tfs, lens = codec.decode_block(
-                        row.doc_ids_delta, row.tfs, row.doc_lens)
-                    w = (tfs * (BM25_K1 + 1.0)) / (
-                        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * lens / avgdl))
-                    terms.append(np.full(len(ids), row.term, dtype=object))
-                    ids_l.append(ids)
-                    tfs_l.append(tfs)
-                    scores_l.append(w * idf.get(row.term, 0.0))
-                if not ids_l:
-                    yield pd.DataFrame({"term": [], "doc_id": [], "tf": [],
-                                        "score": []}).astype(
-                        {"doc_id": "int64", "tf": "int64", "score": "float64"})
-                    continue
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(ids_l),
-                    "tf": np.concatenate(tfs_l),
-                    "score": np.concatenate(scores_l),
-                })
+    def _decode(self, blocks: DataFrame, idf: Optional[Dict[str, float]] = None,
+                cols: Sequence[str] = ("term", "doc_id", "tf", "score"),
+                cand: Optional[Broadcast] = None) -> DataFrame:
+        """blocks → one row per live (term, doc_id) posting with the
+        ``cols`` asked for, out of term, doc_id, tf, score (idf ·
+        ``codec.bm25_w``) and positions. The scan reads only the block
+        columns these need: boolean search never reads tfs/doc_lens.
+        ``cand`` broadcasts sorted candidate doc ids: blocks holding
+        none are skipped before decoding, other postings dropped."""
+        avgdl, idf = self.avgdl, idf or {}
+        wanted = {c for c in cols if c in codec.DECODE_READS}
+        if "score" in cols:
+            wanted |= {"tf", "doc_len"}
+        need = ["doc_ids_delta"] + [
+            b for c in sorted(wanted) for b in codec.DECODE_READS[c]]
+        if {"term", "score"} & set(cols):
+            need.append("term")
+        if cand is not None:
+            need += ["first_doc_id", "last_doc_id"]
 
-        cols = ["term", "doc_ids_delta", "tfs", "doc_lens"]
-        out = blocks.select(*cols).mapInPandas(
-            fn, "term string, doc_id long, tf long, score double")
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                if cand is not None:
+                    batch = batch.filter(_holds(
+                        cand.value, batch.column("first_doc_id").to_numpy(),
+                        batch.column("last_doc_id").to_numpy()))
+                dec = codec.decode_blocks(batch, wanted)
+                if cand is not None:
+                    keep = _holds(cand.value, dec["doc_id"], dec["doc_id"])
+                    dec = {c: v[keep] for c, v in dec.items()}
+                if "term" in cols:
+                    dec["term"] = batch.column("term").take(dec["block"])
+                if "score" in cols:
+                    block_idf = (batch.column("term").to_pandas().map(idf)
+                                 .fillna(0.0).to_numpy())
+                    dec["score"] = (codec.bm25_w(dec["tf"], dec["doc_len"],
+                                                 avgdl)
+                                    * block_idf[dec["block"]])
+                yield pa.RecordBatch.from_arrays([dec[c] for c in cols],
+                                                 names=list(cols))
+
+        out = blocks.select(*need).mapInArrow(
+            fn, ", ".join(f"{c} {self._DECODED_TYPES[c]}" for c in cols))
         if self.tombstones is not None:
             out = out.join(self.tombstones, "doc_id", "left_anti")
         return out
-
-    def _decode_ids(self, blocks: DataFrame) -> DataFrame:
-        """blocks → bare ``doc_id`` posting rows, one per (term, doc_id).
-
-        Boolean search never reads tf/score/term, so this path ships only
-        the 8-byte id across the Python boundary and — because the opaque
-        ``mapInPandas`` input is pre-projected to ``doc_ids_delta`` alone —
-        column pruning drops ``tfs``/``doc_lens`` from the parquet scan
-        entirely (guide §4.1: pass only the columns the function needs).
-        Skips two varint decodes, the BM25 weight math, and the per-posting
-        object-string term array the full decode materializes.
-        """
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids_l = [codec.decode_doc_ids(b)
-                         for b in pdf["doc_ids_delta"]]
-                yield pd.DataFrame({
-                    "doc_id": (np.concatenate(ids_l) if ids_l
-                               else np.empty(0, dtype=np.int64)),
-                })
-
-        out = blocks.select("doc_ids_delta").mapInPandas(fn, "doc_id long")
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
-        return out
-
-    def _decode_positions(self, blocks: DataFrame) -> DataFrame:
-        """blocks → (term, doc_id, positions array<int>) rows — only
-        meaningful on an index built with ``store_positions=True``."""
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                terms, ids_l, pos_l = [], [], []
-                for row in pdf.itertuples(index=False):
-                    ids = codec.decode_doc_ids(row.doc_ids_delta)
-                    pos = codec.decode_positions(row.pos_counts,
-                                                 row.positions)
-                    terms.append(np.full(len(ids), row.term, dtype=object))
-                    ids_l.append(ids)
-                    pos_l.extend([p.astype(np.int32) for p in pos])
-                if not ids_l:
-                    yield pd.DataFrame({"term": pd.Series([], dtype=object),
-                                        "doc_id": pd.Series([], dtype="int64"),
-                                        "positions": []})
-                    continue
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(ids_l),
-                    "positions": pos_l,
-                })
-
-        cols = ["term", "doc_ids_delta", "pos_counts", "positions"]
-        out = blocks.select(*cols).mapInPandas(
-            fn, "term string, doc_id long, positions array<int>")
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
-        return out
-
-    def _postings_df(self, terms: Sequence[str],
-                     with_scores: bool = False) -> DataFrame:
-        meta = self._term_meta(terms)
-        idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
-               if with_scores else None)
-        return self._decode(self._blocks_for(meta), idf)
 
     def postings_for(self, term: str) -> DataFrame:
         """Q1: one term's postings as (doc_id, tf), ascending — the
         reference's ``inverted_index[token]`` (inverted_index.py:60-63)."""
-        return (self._postings_df([term])
-                .select("doc_id", "tf").orderBy("doc_id"))
+        return (self._decode(self._blocks_for(self._term_meta([term])),
+                             cols=("doc_id", "tf"))
+                .orderBy("doc_id"))
 
     def __len__(self) -> int:
         """S13: maintained live-document count (index.py:457-463)."""
@@ -303,7 +266,7 @@ class SearchEngine:
             return empty  # some term has no postings → intersection empty
         if not meta:
             return empty
-        decoded = self._decode_ids(self._blocks_for(meta))
+        decoded = self._decode(self._blocks_for(meta), cols=("doc_id",))
         if mode == "or":
             return decoded.select("doc_id").distinct().orderBy("doc_id")
         # count(*), not countDistinct(term): decoded rows are unique
@@ -424,7 +387,8 @@ class SearchEngine:
         meta = self._term_meta(uniq)
         if len(meta) < len(uniq):
             return self.spark.createDataFrame([], "doc_id long")
-        pos = (self._decode_positions(self._blocks_for(meta))
+        pos = (self._decode(self._blocks_for(meta),
+                            cols=("term", "doc_id", "positions"))
                .join(candidates, "doc_id", "left_semi"))
         # merge per (doc_id, term) BEFORE map_from_entries (r6 ADVICE):
         # under mapKeyDedupPolicy=EXCEPTION a duplicate (term, doc_id)
@@ -568,7 +532,8 @@ class SearchEngine:
         agg = [F.sum("score").alias("score")]
         if mode == "and":
             agg.append(F.count(F.lit(1)).alias("_nt"))
-        scored = self._decode(blocks, idf).groupBy("doc_id").agg(*agg)
+        scored = (self._decode(blocks, idf, cols=("doc_id", "score"))
+                  .groupBy("doc_id").agg(*agg))
         if mode == "and":
             scored = scored.filter(F.col("_nt") == len(meta))
         return (
@@ -618,7 +583,9 @@ class SearchEngine:
             return None
         idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
                if with_scores else None)
-        decoded = self._decode(self._blocks_for(meta), idf)
+        decoded = self._decode(
+            self._blocks_for(meta), idf,
+            cols=("term", "doc_id") + (("score",) if with_scores else ()))
         qmap = self.spark.createDataFrame(rows, "query_id string, term string")
         joined = decoded.join(F.broadcast(qmap), "term")
         # count(1) == distinct terms here: decoded is unique per
@@ -838,8 +805,8 @@ class SearchEngine:
             [(qid, t) for qid, (E, _) in active.items() for t in E],
             "query_id string, term string")
         cand_pairs = (
-            self._decode(self._blocks_for(
-                {t: meta[t] for t in e_union}), idf)
+            self._decode(self._blocks_for({t: meta[t] for t in e_union}),
+                         cols=("term", "doc_id"))
             .join(F.broadcast(emap), "term")
             .select("query_id", "doc_id").distinct()
             .persist(StorageLevel.MEMORY_AND_DISK))
@@ -860,13 +827,13 @@ class SearchEngine:
             (F.col("c.term") == F.col("b.term"))
             & (F.col("c.doc_id") >= F.col("b.first_doc_id"))
             & (F.col("c.doc_id") <= F.col("b.last_doc_id")), "left_semi")
-        dec_pruned = (self._decode(kept, idf)
+        scored_cols = ("term", "doc_id", "score")
+        dec_pruned = (self._decode(kept, idf, cols=scored_cols)
                       .join(cand_by_term, ["term", "doc_id"], "left_semi"))
         dec_full = self._decode(
-            self._blocks_for({t: meta[t] for t in sorted(full)}), idf)
-        all_rows = (dec_full.select("term", "doc_id", "score")
-                    .unionByName(
-                        dec_pruned.select("term", "doc_id", "score")))
+            self._blocks_for({t: meta[t] for t in sorted(full)}), idf,
+            cols=scored_cols)
+        all_rows = dec_full.unionByName(dec_pruned)
         qmap = self.spark.createDataFrame(
             [(qid, t, qid in active) for qid, t in rows],
             "query_id string, term string, _split boolean")
@@ -1014,7 +981,7 @@ class SearchEngine:
         5. When the estimate pays, NE blocks are pruned by a
            doc-id-range semi-join against the candidates on metadata
            columns that already exist (``first_doc_id``/``last_doc_id``,
-           build.py POSTINGS_SCHEMA): the distinct candidate ids are
+           codec.BLOCK_SCHEMA): the distinct candidate ids are
            broadcast and the range predicate alone decides survival —
            probe work O(n_blocks_NE × |candidates| / parallelism)
            long-compares, bounded by the df pre-gate
@@ -1066,13 +1033,14 @@ class SearchEngine:
         """Small-candidate fast path (the common selective-query case):
         collect the essential partial scores — bounded by
         ``MAXSCORE_DRIVER_CANDIDATES`` rows, a few MB — broadcast the
-        SORTED candidate-id array, and prune INSIDE the decode stage:
-        one ``searchsorted`` per block skips non-overlapping blocks
-        before any varint work, and membership filtering trims decoded
-        rows to candidates. Total cost: the stats job + the (tiny)
+        SORTED candidate-id array, and prune INSIDE the decode stage
+        (:meth:`_decode`'s ``cand``): blocks holding no candidate are
+        skipped before any varint work, and membership filtering trims
+        decoded rows to candidates. Total cost: the stats job + the (tiny)
         essential decode + ONE scoring job — no extra shuffles, joins
         or broadcasts of DataFrames."""
-        pdf = (self._decode(self._blocks_for({t: meta[t] for t in E}), idf)
+        pdf = (self._decode(self._blocks_for({t: meta[t] for t in E}), idf,
+                            cols=("doc_id", "score"))
                .groupBy("doc_id").agg(F.sum("score").alias("score"))
                .toPandas())
         if pdf.empty:
@@ -1083,43 +1051,8 @@ class SearchEngine:
                           int(cand_ids[-1])):
             return None  # scattered candidates: exact decode is cheaper
         b_cand = self.spark.sparkContext.broadcast(cand_ids)
-        avgdl = self.avgdl
-        blocks_ne = self._blocks_for({t: meta[t] for t in NE})
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids_sorted = b_cand.value
-            n_c = len(ids_sorted)
-            for bdf in batches:
-                ids_l, scores_l = [], []
-                for row in bdf.itertuples(index=False):
-                    # block-level skip: any candidate in [first, last]?
-                    i = np.searchsorted(ids_sorted, row.first_doc_id)
-                    if i >= n_c or ids_sorted[i] > row.last_doc_id:
-                        continue
-                    ids, tfs, lens = codec.decode_block(
-                        row.doc_ids_delta, row.tfs, row.doc_lens)
-                    pos = np.searchsorted(ids_sorted, ids)
-                    pos[pos >= n_c] = n_c - 1
-                    member = ids_sorted[pos] == ids
-                    if not member.any():
-                        continue
-                    ids, tfs, lens = ids[member], tfs[member], lens[member]
-                    w = (tfs * (BM25_K1 + 1.0)) / (
-                        tfs + BM25_K1 * (1.0 - BM25_B
-                                         + BM25_B * lens / avgdl))
-                    ids_l.append(ids)
-                    scores_l.append(w * idf.get(row.term, 0.0))
-                if not ids_l:
-                    yield pd.DataFrame({"doc_id": [], "score": []}).astype(
-                        {"doc_id": "int64", "score": "float64"})
-                    continue
-                yield pd.DataFrame({"doc_id": np.concatenate(ids_l),
-                                    "score": np.concatenate(scores_l)})
-
-        cols = ["term", "first_doc_id", "last_doc_id",
-                "doc_ids_delta", "tfs", "doc_lens"]
-        ne_scores = blocks_ne.select(*cols).mapInPandas(
-            fn, "doc_id long, score double")
+        ne_scores = self._decode(self._blocks_for({t: meta[t] for t in NE}),
+                                 idf, cols=("doc_id", "score"), cand=b_cand)
         part_df = self.spark.createDataFrame(
             pdf, "doc_id long, score double")
         plan = (
@@ -1152,7 +1085,7 @@ class SearchEngine:
         if not prune_pays(df_e, int(rng[0]), int(rng[1])):
             return None
         partial = (
-            self._decode(blocks_e, idf)
+            self._decode(blocks_e, idf, cols=("doc_id", "score"))
             .groupBy("doc_id").agg(F.sum("score").alias("_p"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -1172,7 +1105,7 @@ class SearchEngine:
         # candidate restriction is valid regardless of block pruning:
         # the τ check proved non-candidates cannot reach the top-k
         ne_scores = (
-            self._decode(kept, idf)
+            self._decode(kept, idf, cols=("doc_id", "score"))
             .join(cand, "doc_id", "left_semi")
             .groupBy("doc_id").agg(F.sum("score").alias("_pn"))
         )
@@ -1238,28 +1171,14 @@ class SearchEngine:
 
     # -- suggestions / frequency (trie surface, SURVEY §2.4 Q6/Q7) -----------
     def search_suggestions(self, prefix: str) -> List[str]:
-        dp = tk.decompose(prefix)
-        rows = (
-            self.token_dict
-            .filter(F.col("decomposed").startswith(dp))
-            .select("term").orderBy("term").collect()
-        )
-        return [r["term"] for r in rows]
+        return [r["term"] for r in
+                self.search_suggestions_df(prefix).collect()]
 
     def search_by_frequency(self, prefix: str, k: int = 5) -> List[tuple]:
         """Top-k searched tokens under a prefix (trie.py:200-216 +
         counter.py ordering: count desc, token asc)."""
-        dp = tk.decompose(prefix)
-        freq = self._read_token_freq()
-        if freq is None:
-            return []
-        rows = (
-            freq.join(self.token_dict.select("term", "decomposed"), "term")
-            .filter(F.col("decomposed").startswith(dp))
-            .orderBy(F.desc("freq"), F.asc("term")).limit(k)
-            .select("term", "freq").collect()
-        )
-        return [(r["term"], r["freq"]) for r in rows]
+        return [(r["term"], r["freq"]) for r in
+                self.search_by_frequency_df(prefix, k).collect()]
 
     def search_suggestions_df(self, prefix: str) -> DataFrame:
         """Q6 as a DataFrame plan (no driver collect): indexed terms

@@ -64,3 +64,15 @@ def zipf_oracle(zipf_corpus):
     ordered = zipf_corpus.sort_values(["conv_id", "turn_idx"])
     ix.index_all(list(ordered["text"]))
     return ix
+
+
+@pytest.fixture(scope="session")
+def postings_rows(spark):
+    """root → every block row of the committed ``postings`` table, in
+    (term, salt, block_seq) order."""
+    def read(root):
+        from konlspark.catalog import IndexCatalog
+        path = IndexCatalog(root).table_path("postings")
+        return (spark.read.parquet(path)
+                .orderBy("term", "salt", "block_seq").collect())
+    return read

@@ -311,15 +311,19 @@ def test_batch_bm25_empty_and_k0(zeng):
 
 
 def test_lean_decode_matches_full_decode(zeng):
-    """r9: boolean search decodes ids only (`_decode_ids`). Pin its
-    (term, doc_id) multiset against the full `_decode` so the two
-    paths can never drift — the AND count relies on one row per
-    (term, doc_id) in BOTH."""
-    meta = zeng._term_meta([t for t in zeng.token_dict
-                            .select("term").limit(3).toPandas()["term"]])
+    """Every projection of the one `_decode` equals the same columns of
+    its full (term, doc_id, tf, score) output. Boolean search reads the
+    doc_id projection alone, and the AND count relies on one row per
+    (term, doc_id) in all of them."""
+    from konlspark.oracle import bm25_idf
+    meta = zeng._term_meta([t for t in zeng.token_dict.select("term")
+                            .orderBy("term").limit(3).toPandas()["term"]])
+    idf = {t: bm25_idf(zeng.n_docs, m["df"]) for t, m in meta.items()}
     blocks = zeng._blocks_for(meta)
-    lean = sorted(r["doc_id"] for r in zeng._decode_ids(blocks).collect())
-    full = sorted(r["doc_id"] for r in zeng._decode(blocks)
-                  .select("doc_id").collect())
-    assert len(lean) > 0
-    assert lean == full
+    full = zeng._decode(blocks, idf).collect()
+    assert len(full) > 0
+    for cols in (("doc_id",), ("term", "doc_id"), ("doc_id", "tf"),
+                 ("doc_id", "score"), ("term", "doc_id", "score")):
+        got = sorted(tuple(r) for r in
+                     zeng._decode(blocks, idf, cols=cols).collect())
+        assert got == sorted(tuple(r[c] for c in cols) for r in full), cols

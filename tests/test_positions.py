@@ -7,6 +7,7 @@ per-occurrence positions, one by re-tokenizing candidates.
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from konlspark import codec
@@ -43,6 +44,7 @@ def peng(spark, pos_index):
 
 def test_positions_codec_roundtrip_random():
     rng = np.random.default_rng(11)
+    all_lists = []
     for _ in range(20):
         lists = [np.sort(rng.choice(10_000, size=rng.integers(0, 40),
                                     replace=False))
@@ -52,6 +54,23 @@ def test_positions_codec_roundtrip_random():
         assert len(back) == len(lists)
         for a, b in zip(lists, back):
             assert list(a) == list(b)
+        all_lists += lists
+    # the batch codec: every list above as postings of one term, in
+    # 1-, 7- and 64-posting blocks decoded as one Arrow batch (count-0
+    # docs included), equals the per-block codec
+    n = len(all_lists)
+    for block_size in (1, 7, 64):
+        rows = codec.encode_blocks("t", 0, np.arange(1, n + 1), np.ones(n),
+                                   np.ones(n), 1.0, block_size, all_lists)
+        want = []
+        for r, lo in zip(rows.itertuples(index=False),
+                         range(0, n, block_size)):
+            assert (r.pos_counts, r.positions) == codec.encode_positions(
+                all_lists[lo:lo + block_size])
+            want += codec.decode_positions(r.pos_counts, r.positions)
+        got = codec.decode_blocks(pa.RecordBatch.from_pandas(rows),
+                                  ("positions",))["positions"].to_pylist()
+        assert got == [list(p) for p in want]
 
 
 def test_stored_positions_match_recompute(peng):
@@ -86,19 +105,56 @@ def test_stored_positions_match_bruteforce(peng, zipf_corpus):
     assert got == want
 
 
-def test_positions_survive_segment_merge(spark, tmp_root, zipf_corpus):
+@pytest.fixture(scope="module")
+def pos_seg_root(spark, tmp_root, zipf_corpus):
+    """The pos_index build, split into 3 segments and merged."""
     from konlspark import build, corpus
-    from konlspark.query import SearchEngine
     root = f"{tmp_root}/pos_seg_index"
     tdf = corpus.spark_transcripts(spark, zipf_corpus)
     manifest = build.build_index(spark, tdf, root, target_per_split=200,
                                  block_size=64, n_segments=3,
                                  store_positions=True)
     assert manifest["positions"] is True
-    eng = SearchEngine(spark, root)
+    return root
+
+
+def test_positions_survive_segment_merge(spark, pos_seg_root):
+    from konlspark.query import SearchEngine
+    eng = SearchEngine(spark, pos_seg_root)
     for q in PHRASES[:3]:
         assert ids(eng.search_phrase_contiguous(q, use_positions=True)) \
             == ids(eng.search_phrase_contiguous(q, use_positions=False)), q
+
+
+def test_merged_positional_blocks_equal_built(pos_index, pos_seg_root,
+                                              postings_rows):
+    """Merge and build share one block encoder: the merged positional
+    postings equal the 1-segment build's, pos_counts/positions
+    included."""
+    merged, built = postings_rows(pos_seg_root), postings_rows(pos_index[0])
+    assert len(merged) > 0
+    assert merged == built
+
+
+def test_positions_projection_matches_codec(peng):
+    """The positions projection of `_decode` equals per-block
+    codec.decode_positions, on terms that span several blocks."""
+    from pyspark.sql import functions as F
+    meta = peng._term_meta([t for t in peng.token_dict
+                            .orderBy(F.desc("df"), "term").limit(3)
+                            .toPandas()["term"]])
+    blocks = peng._blocks_for(meta)
+    got = sorted((r["term"], r["doc_id"], list(r["positions"])) for r in
+                 peng._decode(blocks, cols=("term", "doc_id", "positions"))
+                 .collect())
+    want = []
+    for r in blocks.select("term", "doc_ids_delta", "pos_counts",
+                           "positions").collect():
+        want += [(r["term"], int(d), [int(p) for p in pos]) for d, pos in zip(
+            codec.decode_doc_ids(r["doc_ids_delta"]),
+            codec.decode_positions(r["pos_counts"], r["positions"]))]
+    assert len(got) > 3 * 64
+    assert got == sorted(want)
 
 
 def test_positions_survive_append_and_delete(spark, tmp_root):

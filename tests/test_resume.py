@@ -67,3 +67,16 @@ def test_merged_index_query_parity(spark, seg_setup, zipf_oracle):
             assert abs(a - b) < 1e-9
         assert ([r["doc_id"] for r in eng.search(q, "and", log=False).collect()]
                 == zipf_oracle.search(q, "and", log=False))
+
+
+def test_merge_and_build_write_identical_blocks(spark, tmp_root, seg_setup,
+                                                postings_rows):
+    """Segment merge re-encodes with the build's block encoder, so a
+    3-segment build's postings equal a 1-segment build's, every block
+    column included."""
+    root, _, tdf = seg_setup
+    one = f"{tmp_root}/seg_index_one"
+    build.build_index(spark, tdf, one, target_per_split=300, block_size=64)
+    merged, built = postings_rows(root), postings_rows(one)
+    assert len(merged) > 0
+    assert merged == built
