@@ -31,7 +31,7 @@ GOLDENS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 def maxscore_reduction(eng, rh_terms) -> dict:
     """Measured decode reduction of the MaxScore rare+head plan: the
     fraction of the head term's blocks (and postings) that the
-    candidate range semi-join keeps. Wall clock at sandbox scale is
+    candidate-id broadcast keeps. Wall clock at sandbox scale is
     job-floor-bound (~0.3s/job vs ~5M decoded postings/s/core), so the
     honest scale metric is the decode/shuffle volume skipped — at
     10^9+ head postings that volume IS the query cost."""
@@ -327,14 +327,15 @@ def main() -> None:
             ["마법", "특별"], k=10, use_wand=False).collect())
         timed("q10_bm25_3term", lambda: eng.bm25_topk(
             ["spark", "query", "index"], k=10, use_wand=True).collect())
-        # single-term: the case where block-max pruning genuinely fires
-        # (k-th block max kills ~98% of blocks); the pair below is the
-        # wand<=exact guard the gate is tuned against
+        # single-term: the case where the block floor fires once the
+        # term's df reaches the pruning gate (k-th block max kills ~98%
+        # of blocks); below the gate both legs run the exact plan and
+        # the pair guards that the gate declines
         guarded2("q10_bm25_1term_wand", lambda: eng.bm25_topk(
             ["마법"], k=10, use_wand=True).collect())
         guarded2("q10_bm25_1term_exact", lambda: eng.bm25_topk(
             ["마법"], k=10, use_wand=False).collect())
-        # rare+head: the distributed-MaxScore regime — 'topicmarker' is
+        # rare+head: the MaxScore candidate regime — 'topicmarker' is
         # the clustered rare term, paired with the highest-df head term.
         # Pruned and exact results must be IDENTICAL (asserted below);
         # the gate keeps the pruned path off until the skipped decode
@@ -404,7 +405,8 @@ def main() -> None:
         # queries pairs the clustered rare term with the head term, the
         # regime where a 100 TB batch would otherwise decode the head
         # term's 10^9+ postings fully for the whole batch. At sandbox
-        # scale the production gate (MAXSCORE_MIN_NE_POSTINGS) keeps
+        # scale the production gate (MAXSCORE_MIN_NE_POSTINGS, 6M
+        # skippable postings, shared with the single-query plans) keeps
         # pruning off (the skipped decode is ~65k postings vs a ~0.3 s
         # extra-job floor), so the pruned timing TEMPORARILY drops the
         # gate to measure the ENGAGED plan — disclosed via
@@ -432,24 +434,13 @@ def main() -> None:
         old_gate = eng.MAXSCORE_MIN_NE_POSTINGS
         eng.MAXSCORE_MIN_NE_POSTINGS = 0
         try:
-            # ONE engaged-plan execution serves both the engagement
-            # check and the parity assert (r7 directive: the old
-            # separate probe ran the stats job + persist redundantly
-            # in the timed window's setup before batch_rows(True)
-            # re-ran the whole engaged plan for the assert)
-            meta_b, rows_b, _ = eng._batch_qmap(batch_rh, "or")
-            pruned = eng._batch_maxscore_scored(meta_b, rows_b, 10)
-            extras["batch_maxscore_engaged"] = pruned is not None
-            if pruned is not None:
-                scored_b, release_b = pruned
-                try:
-                    got_b = {}
-                    for r in eng._batch_topk(scored_b, 10).collect():
-                        got_b.setdefault(r["query_id"], []).append(
-                            (r["doc_id"], round(r["score"], 6)))
-                finally:
-                    release_b()
-                assert got_b == brh_exact, "batch MaxScore != exact"
+            # engagement: does the planner find a pruning plan for the
+            # batch; parity: the public engaged plan equals exact
+            meta_b = eng._term_meta(
+                [t for ts in batch_rh.values() for t in ts])
+            extras["batch_maxscore_engaged"] = (
+                eng._prune_plan(batch_rh, meta_b, 10) is not None)
+            assert batch_rows(True) == brh_exact, "batch MaxScore != exact"
             timed2("batch16_rh_wand", lambda: eng.bm25_topk_batch(
                 batch_rh, k=10, use_wand=True).collect())
         finally:

@@ -12,21 +12,20 @@ plans:
 - block decode is one batch decoder (:meth:`SearchEngine._decode`): an
   Arrow ``mapInArrow`` over ``codec.decode_blocks`` — one numpy varint
   pass per binary column per batch, its scan projected to the columns
-  the caller asks for, with optional candidate-id block skipping;
+  the caller asks for, with optional per-term candidate-id block
+  skipping;
 - AND/OR fold = groupBy(doc_id) count vs distinct (reference
   ``inverted_index.py:98-116``), PHRASE = AND + first-occurrence
   monotonicity over ``docs.first_pos`` (reference ``index.py:432-448``),
   complex = recursive set algebra (``index.py:413-429``);
-- BM25 top-k with lossless block-max pruning (MaxScore/BMW-style):
-  one metadata-only pass over the candidate blocks (no posting decode)
-  yields σ per term and a lower-bound threshold τ (the per-term k-th
-  largest block max — k doc-disjoint blocks exhibit k docs scoring at
-  least it); a block of term t survives iff
-  ``block_max_score(B) + Σ_{t'≠t} σ_{t'} ≥ τ`` — every doc with true
-  score ≥ τ has *all* its blocks decoded, so the final top-k and its
-  scores are exact (verified against the unpruned path in tests). A
-  driver-side gate skips the pruning job when it provably cannot pay
-  (symmetric multi-term queries — see ``bm25_topk``).
+- BM25 top-k, single or batched, with one lossless pruning core
+  (:meth:`SearchEngine._prune_plan`, MaxScore-style bound-then-verify):
+  a driver-side df gate, one metadata-only stats job (σ and a provable
+  τ per term), then a block floor for lone terms and, for asymmetric
+  multi-term queries, one broadcast of the essential terms' candidate
+  ids that restricts the other terms' decode. The exact plan runs on
+  the kept blocks, so the top-k and its scores equal the unpruned
+  path's (verified in tests).
 """
 
 from __future__ import annotations
@@ -66,6 +65,19 @@ def _holds(ids_sorted: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray
     """Elementwise: does sorted ``ids_sorted`` hold an id in [lo, hi]?"""
     return (np.searchsorted(ids_sorted, lo)
             < np.searchsorted(ids_sorted, hi, side="right"))
+
+
+def _cand_mask(cand: Dict[str, np.ndarray], names: List[str],
+               code: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Elementwise: does row i, of term ``names[code[i]]``, hold one of
+    that term's sorted ``cand`` ids in [lo, hi]? Terms absent from
+    ``cand`` pass."""
+    keep = np.ones(len(code), dtype=bool)
+    for j, t in enumerate(names):
+        if t in cand:
+            rows = code == j
+            keep[rows] = _holds(cand[t], lo[rows], hi[rows])
+    return keep
 
 
 class ReadOnlyIndexError(RuntimeError):
@@ -190,15 +202,16 @@ class SearchEngine:
         ``cols`` asked for, out of term, doc_id, tf, score (idf ·
         ``codec.bm25_w``) and positions. The scan reads only the block
         columns these need: boolean search never reads tfs/doc_lens.
-        ``cand`` broadcasts sorted candidate doc ids: blocks holding
-        none are skipped before decoding, other postings dropped."""
+        ``cand`` broadcasts {term: sorted candidate doc ids}: a listed
+        term's blocks holding none of its ids are skipped before
+        decoding and its other postings dropped; other terms pass."""
         avgdl, idf = self.avgdl, idf or {}
         wanted = {c for c in cols if c in codec.DECODE_READS}
         if "score" in cols:
             wanted |= {"tf", "doc_len"}
         need = ["doc_ids_delta"] + [
             b for c in sorted(wanted) for b in codec.DECODE_READS[c]]
-        if {"term", "score"} & set(cols):
+        if {"term", "score"} & set(cols) or cand is not None:
             need.append("term")
         if cand is not None:
             need += ["first_doc_id", "last_doc_id"]
@@ -206,12 +219,18 @@ class SearchEngine:
         def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 if cand is not None:
-                    batch = batch.filter(_holds(
-                        cand.value, batch.column("first_doc_id").to_numpy(),
-                        batch.column("last_doc_id").to_numpy()))
+                    enc = batch.column("term").dictionary_encode()
+                    names = enc.dictionary.to_pylist()
+                    code = enc.indices.to_numpy()
+                    kept = _cand_mask(
+                        cand.value, names, code,
+                        batch.column("first_doc_id").to_numpy(),
+                        batch.column("last_doc_id").to_numpy())
+                    batch, code = batch.filter(kept), code[kept]
                 dec = codec.decode_blocks(batch, wanted)
                 if cand is not None:
-                    keep = _holds(cand.value, dec["doc_id"], dec["doc_id"])
+                    keep = _cand_mask(cand.value, names, code[dec["block"]],
+                                      dec["doc_id"], dec["doc_id"])
                     dec = {c: v[keep] for c, v in dec.items()}
                 if "term" in cols:
                     dec["term"] = batch.column("term").take(dec["block"])
@@ -435,52 +454,33 @@ class SearchEngine:
 
     # -- BM25 top-k ----------------------------------------------------------
 
-    # MaxScore gates (multi-term pruning). The pre-gate runs on df alone
-    # (already on the driver — zero extra jobs): symmetric queries,
-    # where no term is selective, skip straight to the exact path.
+    # Pruning gates (:meth:`_prune_plan`). The df pre-gate needs only
+    # the term metadata already on the driver: zero jobs.
     MAXSCORE_MIN_DF_RATIO = 4.0          # head df / rare df asymmetry
     MAXSCORE_MAX_CANDIDATES = 500_000    # bound on Σ df(essential)
     MAXSCORE_MAX_DF_FRAC = 0.5           # essential decode ≤ half total
-    # The non-essential decode+shuffle that pruning skips must outweigh
-    # the pruned plan's extra jobs (stats + persist + broadcast).
-    # MEASURED (BENCH/batch_maxscore_crossover_r8.json, interleaved
-    # min-of-3 engaged-vs-exact at 1M and 4M turns, parity asserted at
-    # both): the net overhead is ~constant at the extra-job floor
-    # (2.50 s at 644k NE postings, 2.16 s at 2.56M) and shrinks with
-    # the saved decode at 0.173 s per M postings — zero crossing
-    # extrapolates to ~15M NE postings. The previous 5M constant was a
-    # judgment call that the measurement shows is too LOW (engaged
-    # still loses ~1.15x there on the fit). In the 100 TB regime a
-    # head term's postings are 10^9+ rows, two orders past this gate,
-    # and the exact plan's decode AND its (doc_id, score) shuffle into
-    # the groupBy run for minutes — pruning dominates there regardless
-    # of where in the 10^7 band the constant sits.
-    MAXSCORE_MIN_NE_POSTINGS = 15_000_000
-    # The SINGLE-query pruned plan pays only the stats job + (driver
-    # fast path) one small collect — measured net overhead 0.89 s at
-    # 644k NE postings vs the batch path's ~2.2-2.5 s — so it crosses
-    # over far earlier than the batch gate (r8 ADVICE item 3: one
-    # shared constant over-gated the single path several-fold past its
-    # own crossover). Fitted with the same decode-savings slope as the
-    # batch gate (0.173 s/M NE postings,
-    # BENCH/batch_maxscore_crossover_r8.json): crossover ≈ 5.79M NE
-    # postings (BENCH/single_maxscore_crossover_r9.json, 1M-turn bench
-    # corpus, parity asserted, engaged plan verified). Rounded UP so
-    # the gate never admits a losing split on the fit.
-    MAXSCORE_MIN_NE_POSTINGS_SINGLE = 6_000_000
-    MAXSCORE_DRIVER_CANDIDATES = 100_000  # ≤ this → driver-assisted path
-    # Global bound on the BATCH pruning broadcast (r7 ADVICE): each
-    # split query's candidates are capped at MAXSCORE_MAX_CANDIDATES,
-    # but Σ_t |cand(E_t)| grows with the number of active split
-    # queries × pruned terms — a large batch could blow the broadcast.
-    # Terms whose driver-side estimate pushes the total past this are
-    # demoted to the full-decode (exact) set, costliest first.
+    # The one cost gate: the postings pruning can skip — Σ df of all
+    # but a query's rarest term, or the df of a lone term — must
+    # outweigh the pruned plan's extra jobs (the stats job, 3 jobs, and
+    # one candidate collect: ≤ 4 jobs over the exact plan). MEASURED:
+    # a 9-job pruned plan (6 jobs over exact) crossed over at 5.79M
+    # skippable postings on the 1M-turn bench corpus
+    # (BENCH/single_maxscore_crossover_r9.json, fitted with the 0.173
+    # s/M decode+shuffle slope of BENCH/batch_maxscore_crossover_r8.json,
+    # parity asserted). Fewer extra jobs only move the crossover down,
+    # so 6M never admits a losing plan on that fit.
+    MAXSCORE_MIN_NE_POSTINGS = 6_000_000
+    # Bound on the candidate ids collected to the driver and broadcast
+    # (Σ over pruned terms of Σ df of the essential terms they are
+    # pruned against). Terms past it decode in full, costliest first.
     MAXSCORE_MAX_TOTAL_CAND = 2_000_000
 
     def bm25_topk(self, tokens: Sequence[str], k: int = 10, mode: str = "or",
-                  use_wand: bool = True,
-                  wand_min_postings: int = 100_000) -> DataFrame:
-        """DataFrame(doc_id, score) — exact top-k, ties by ascending id."""
+                  use_wand: bool = True) -> DataFrame:
+        """DataFrame(doc_id, score) — exact top-k, ties by ascending id.
+        With ``use_wand`` an OR query decodes only the blocks the
+        pruning planner (:meth:`_prune_plan`) keeps; results equal the
+        unpruned plan's."""
         uniq = list(dict.fromkeys(tokens))
         meta = self._term_meta(uniq)
         empty = self.spark.createDataFrame([], "doc_id long, score double")
@@ -489,58 +489,28 @@ class SearchEngine:
         if mode == "and" and len(meta) < len(uniq):
             return empty
         idf = {t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
-        blocks = self._blocks_for(meta)
 
-        # Block-max pruning gate — free driver-side checks first:
-        # (1) enough decode work to skip (the one metadata job costs a
-        #     fixed fraction of a second; below wand_min_postings the
-        #     exact decode is already cheaper);
-        # (2) the query shape is PRUNABLE. Single-term queries use the
-        #     static block-max bound (τ = k-th block max kills ~98% of
-        #     blocks). Multi-term queries use distributed MaxScore
-        #     (:meth:`_maxscore_topk`) when the df pre-gate says a
-        #     selective (essential) term exists; SYMMETRIC multi-term
-        #     queries stay exact — the r2 measured finding stands: a
-        #     static per-term τ cannot prune other terms' blocks, and
-        #     with no rare term the MaxScore candidate set is the whole
-        #     posting list (no decode saving, pure overhead).
-        total_df = sum(m["df"] for m in meta.values())
-        if (use_wand and self.wand_safe and mode == "or"
-                and total_df >= wand_min_postings):
-            if len(idf) == 1:
-                blocks = self._wand_prune(blocks, meta, idf, k)
-            else:
-                dfs = sorted(m["df"] for m in meta.values())
-                asym = dfs[-1] >= self.MAXSCORE_MIN_DF_RATIO * dfs[0]
-                # necessary condition for a worthwhile split: even the
-                # largest possible NE (all but the rarest term) must
-                # carry enough postings that skipping their decode beats
-                # the extra driver jobs
-                ne_ceiling = total_df - dfs[0]
-                if (asym and dfs[0] <= self.MAXSCORE_MAX_CANDIDATES
-                        and ne_ceiling
-                        >= self.MAXSCORE_MIN_NE_POSTINGS_SINGLE):
-                    out = self._maxscore_topk(meta, idf, k)
-                    if out is not None:
-                        return out
+        def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
+            # term count only when AND needs it, and count(1) rather
+            # than countDistinct: decoded rows are unique per (term,
+            # doc_id) (one block per doc per term — build invariant),
+            # and countDistinct plans a second aggregate level over
+            # every decoded posting (r9, guide §2.3)
+            agg = [F.sum("score").alias("score")]
+            if mode == "and":
+                agg.append(F.count(F.lit(1)).alias("_nt"))
+            scored = (self._decode(blocks, idf, cols=("doc_id", "score"),
+                                   cand=cand)
+                      .groupBy("doc_id").agg(*agg))
+            if mode == "and":
+                scored = scored.filter(F.col("_nt") == len(meta))
+            return (scored.select("doc_id", "score")
+                    .orderBy(F.desc("score"), F.asc("doc_id"))
+                    .limit(k))
 
-        # term count only when AND needs it, and count(1) rather than
-        # countDistinct: decoded rows are unique per (term, doc_id)
-        # (one block per doc per term — build invariant), and
-        # countDistinct plans a second aggregate level over every
-        # decoded posting (r9, guide §2.3)
-        agg = [F.sum("score").alias("score")]
-        if mode == "and":
-            agg.append(F.count(F.lit(1)).alias("_nt"))
-        scored = (self._decode(blocks, idf, cols=("doc_id", "score"))
-                  .groupBy("doc_id").agg(*agg))
-        if mode == "and":
-            scored = scored.filter(F.col("_nt") == len(meta))
-        return (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._run_pruned(top, meta, {"q": list(meta)}, k,
+                                use_wand and mode == "or",
+                                "doc_id long, score double")
 
     # -- batched multi-query execution ---------------------------------------
     # A production engine over this index serves a query LOG, not one
@@ -575,17 +545,22 @@ class SearchEngine:
         meta = {t: meta_all[t] for _, t in rows}
         return meta, rows, nreq
 
-    def _batch_joined(self, meta, rows, nreq, mode: str,
-                      with_scores: bool) -> Optional[DataFrame]:
+    def _batch_joined(self, meta, rows, nreq, mode: str, with_scores: bool,
+                      blocks: Optional[DataFrame] = None,
+                      cand: Optional[Broadcast] = None
+                      ) -> Optional[DataFrame]:
         """(query_id, doc_id[, score]) rows — decode once per distinct
-        term, broadcast the tiny query map, keep AND-complete docs."""
+        term (``blocks``, default every block of ``meta``'s terms, with
+        :meth:`_decode`'s ``cand``), broadcast the tiny query map, keep
+        AND-complete docs."""
         if not rows:
             return None
         idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
                if with_scores else None)
         decoded = self._decode(
-            self._blocks_for(meta), idf,
-            cols=("term", "doc_id") + (("score",) if with_scores else ()))
+            self._blocks_for(meta) if blocks is None else blocks, idf,
+            cols=("term", "doc_id") + (("score",) if with_scores else ()),
+            cand=cand)
         qmap = self.spark.createDataFrame(rows, "query_id string, term string")
         joined = decoded.join(F.broadcast(qmap), "term")
         # count(1) == distinct terms here: decoded is unique per
@@ -627,22 +602,14 @@ class SearchEngine:
         shared across queries (a head term decodes once for every query
         that uses it); batching amortizes the per-query job floor.
 
-        With ``use_wand`` (default) the batch additionally applies a
-        SHARED-CANDIDATE MaxScore split (:meth:`_batch_maxscore_scored`)
-        when the per-query df pre-gates say it pays: at the 100 TB
-        target a batch containing one rare+head query would otherwise
-        decode the head term's 10^9+ postings fully for the whole
-        batch. Falls back to the exact plan whenever no query splits or
-        pruning can't pay (same gates as :meth:`bm25_topk`).
-
-        EAGERNESS (r7 ADVICE): when the MaxScore path engages, the
-        B×k result rows are collected to the driver and rebuilt as a
-        local DataFrame — the persisted candidate pairs must be
-        released before returning, so the pruned path cannot stay
-        lazy. B×k is small by construction (k ≤ tens, B ≤ thousands →
-        ≤ a few MB), and the global broadcast cap above bounds the
-        batches that can engage at all; the exact fallback path stays
-        fully lazy."""
+        With ``use_wand`` (default) an OR batch goes through the same
+        pruning planner as :meth:`bm25_topk` (:meth:`_prune_plan`): at
+        the 100 TB target a batch holding one rare+head query would
+        otherwise decode the head term's 10^9+ postings fully for the
+        whole batch. When candidate pruning engages, the B×k result rows
+        are collected and rebuilt as a local DataFrame so the candidate
+        broadcast can be released; B×k is small by construction, and
+        every other plan stays lazy."""
         mode = mode.lower()
         empty = self.spark.createDataFrame(
             [], "query_id string, doc_id long, score double")
@@ -651,18 +618,14 @@ class SearchEngine:
         meta, rows, nreq = self._batch_qmap(queries, mode)
         if not rows:
             return empty
-        if use_wand and self.wand_safe and mode == "or":
-            pruned = self._batch_maxscore_scored(meta, rows, k)
-            if pruned is not None:
-                scored, release = pruned
-                try:
-                    out_rows = self._batch_topk(scored, k).collect()
-                finally:
-                    release()
-                return self.spark.createDataFrame(
-                    out_rows, "query_id string, doc_id long, score double")
-        scored = self._batch_joined(meta, rows, nreq, mode, with_scores=True)
-        return self._batch_topk(scored, k)
+
+        def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
+            return self._batch_topk(self._batch_joined(
+                meta, rows, nreq, mode, True, blocks, cand), k)
+
+        return self._run_pruned(top, meta, queries, k,
+                                use_wand and mode == "or",
+                                "query_id string, doc_id long, score double")
 
     def _batch_topk(self, scored: DataFrame, k: int) -> DataFrame:
         """Two-stage partial top-k per query over (query_id, doc_id,
@@ -685,170 +648,143 @@ class SearchEngine:
                         F.col("_s.score").alias("score"))
                 .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
 
-    def _batch_maxscore_scored(self, meta: Dict[str, dict], rows: list,
-                               k: int):
-        """Shared-candidate MaxScore for the batch (OR mode): per-query
-        (E, NE) splits from ONE stats job, decode the union of
-        essential + exact-query terms fully, prune each remaining term
-        against the candidates of the queries that hold IT in NE.
+    def _run_pruned(self, top, meta: Dict[str, dict],
+                    queries: Dict[str, Sequence[str]], k: int, prune: bool,
+                    schema: str) -> DataFrame:
+        """``top(blocks, cand)`` over the blocks of ``meta``'s terms,
+        pruned by :meth:`_prune_plan` when ``prune`` and a plan exists.
+        A candidate broadcast makes the result eager: it is collected
+        (Arrow, so the rebuilt local DataFrame costs no job) and the
+        broadcast released on every path, success or error."""
+        blocks = self._blocks_for(meta)
+        plan = (self._prune_plan(queries, meta, k)
+                if prune and self.wand_safe else None)
+        if plan is None:
+            return top(blocks, None)
+        keep, cand = plan
+        if keep is not None:
+            blocks = blocks.filter(keep)
+        if not cand:
+            return top(blocks, None)
+        b_cand = self.spark.sparkContext.broadcast(cand)
+        try:
+            pdf = top(blocks, b_cand).toPandas()
+        finally:
+            b_cand.unpersist()
+        return self.spark.createDataFrame(pdf, schema)
 
-        Correctness per split query q: its τ_q proof (see
-        :meth:`_maxscore_topk`) says any doc holding no E_q term misses
-        q's top-k, so restricting q's rows to cand_q = docs with ≥1 E_q
-        term is exact. A pruned term t's blocks are kept if they
-        contain a candidate of ANY query holding t in NE — a superset
-        of every such query's requirement — and t's decoded rows are
-        trimmed to that same per-term candidate set, a superset of each
-        relevant cand_q; the final per-query semi-restriction then
-        lands exactly on cand_q. Queries that don't split (symmetric,
-        single-term, or gated) keep their full exact rows — their terms
-        are forced into the full-decode set, as are pruned terms whose
-        per-term density estimate says pruning can't pay (demotion =
-        the exact path for that term).
+    def _prune_plan(self, queries: Dict[str, Sequence[str]],
+                    meta: Dict[str, dict], k: int) -> Optional[tuple]:
+        """The one pruning core, for single queries (a batch of one) and
+        batches alike: which blocks of ``queries``' terms their OR top-k
+        can need. Returns None (decode everything) or ``(keep, cand)``:
+        ``keep`` a block filter Column (or None), ``cand`` a dict
+        {term: sorted candidate doc ids} for :meth:`_decode`.
 
-        Returns None (→ caller's exact path) when no query splits, no
-        term is prunable after the full-decode union, or the density
-        estimate says pruning can't pay. Otherwise returns
-        ``(scored_rows_df, release_fn)`` — the caller MUST materialize
-        and call ``release_fn`` (the candidate pairs are persisted
-        because they feed both the broadcast pruning job and the final
-        restriction join)."""
-        qterms: Dict[str, list] = {}
-        for qid, t in rows:
-            qterms.setdefault(qid, []).append(t)
-        idf = {t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
-        # per-query df pre-gate — driver-only, zero extra jobs (same
-        # asymmetry/cap/min-NE conditions as the single-query gate)
-        prelim = []
-        for qid, ts in qterms.items():
-            if len(ts) < 2:
-                continue
+        Bounds, from one metadata-only job (:meth:`_per_term_block_stats`):
+        σ_t = idf_t · (max block weight of t) bounds t's contribution to
+        any doc; a term with ≥ k blocks exhibits k distinct docs (blocks
+        of one term are doc-disjoint, and each block max is reached by a
+        doc in it) whose score is ≥ idf_t · (its k-th largest block
+        max), so the k-th best score s_k is ≥ that value.
+
+        - Lone term (a term only ever held as a query's sole term):
+          τ = idf · kth. A block with ``idf * block_max_w < τ`` holds
+          only docs scoring < τ ≤ s_k; ``keep`` drops it.
+        - Multi-term split (:meth:`_maxscore_split`): terms σ-descending,
+          E the shortest prefix whose τ = max_{t∈E, nb_t ≥ k} idf_t ·
+          kth_t exceeds Σ_{NE} σ. A doc with no E term scores ≤ Σ_{NE}
+          σ < τ ≤ s_k, so only docs holding an E term (the candidates)
+          can reach the top-k. E terms decode in full; an NE term t
+          keeps only postings of candidates of the queries holding t in
+          NE. Every candidate is then scored exactly, and a non-candidate
+          is scored at most its true score (some of its postings may be
+          dropped), still < τ: the top-k and its scores equal exact.
+
+        A term some query needs in full (held by an unsplit query, in a
+        split query's E, or held both alone and with other terms) is
+        never pruned. Gates: a query enters only if the skippable
+        postings reach ``MAXSCORE_MIN_NE_POSTINGS`` (multi-term queries
+        also need df asymmetry and a bounded E decode) — when none does,
+        no job runs at all. A pruned term is demoted to a full decode
+        when its candidates likely overlap over half its blocks (a head
+        block spans ≈ block_size · splits doc ids), and costliest-first
+        while the candidate total exceeds ``MAXSCORE_MAX_TOTAL_CAND``.
+        The candidates come from one id-only decode of the E terms,
+        collected to the driver."""
+        qterms = {q: [t for t in dict.fromkeys(ts) if t in meta]
+                  for q, ts in queries.items()}
+        qterms = {q: ts for q, ts in qterms.items() if ts}
+
+        def gated(ts):
             dfs = sorted(meta[t]["df"] for t in ts)
-            if (dfs[-1] >= self.MAXSCORE_MIN_DF_RATIO * dfs[0]
+            if len(dfs) == 1:
+                return dfs[0] >= self.MAXSCORE_MIN_NE_POSTINGS
+            return (dfs[-1] >= self.MAXSCORE_MIN_DF_RATIO * dfs[0]
                     and dfs[0] <= self.MAXSCORE_MAX_CANDIDATES
-                    and sum(dfs) - dfs[0] >= self.MAXSCORE_MIN_NE_POSTINGS):
-                prelim.append(qid)
-        if not prelim:
+                    and sum(dfs) - dfs[0] >= self.MAXSCORE_MIN_NE_POSTINGS)
+
+        gated_q = [q for q, ts in qterms.items() if gated(ts)]
+        if not gated_q:
             return None
-        stats = {r["term"]: r for r in
-                 self._maxscore_stats(self._blocks_for(meta), k)}
-        splits = {}
-        for qid in prelim:
-            s = self._maxscore_split(
-                qterms[qid], meta, idf, stats, k)
-            if s is not None:
-                splits[qid] = s
-        if not splits:
-            return None
-        full: set = set()
-        for qid, ts in qterms.items():
-            full.update(splits[qid][0] if qid in splits else ts)
-        pruned_set = {t for qid in splits
-                      for t in splits[qid][1]} - full
-        if not pruned_set:
-            return None  # every NE term is decoded anyway — no gain
-        # PER-TERM density gate (not all-or-nothing): a pruned term t's
-        # blocks only need to contain candidates of the queries that
-        # hold t in NE, so t's keep-estimate uses ITS relevant
-        # essential union E_t — a batch mixing one clustered rare+head
-        # query with scattered mid-df queries prunes the head term hard
-        # even though the scattered queries' candidates span the
-        # corpus. Terms whose estimate says pruning can't pay are
-        # DEMOTED to the full-decode set (exactly the exact path for
-        # them); demotion is non-cascading (e_for[t] is independent of
-        # other terms' status).
-        e_for = {t: set() for t in pruned_set}
-        for qid, (E, NE) in splits.items():
-            for t in NE:
-                if t in pruned_set:
-                    e_for[t].update(E)
-        # per-E-term doc-id spans come free from the stats job
-        rngs = stats
+        idf = {t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
+        stats = {r["term"]: r for r in self._per_term_block_stats(
+            self._blocks_for({t: meta[t] for q in gated_q
+                              for t in qterms[q]}), k).collect()}
+        shared = {t for ts in qterms.values() if len(ts) > 1 for t in ts}
+        floor, splits = {}, {}
+        for q in gated_q:
+            ts = qterms[q]
+            if len(ts) > 1:
+                split = self._maxscore_split(ts, meta, idf, stats, k)
+                if split is not None:
+                    splits[q] = split
+            elif ts[0] not in shared and stats[ts[0]]["nb"] >= k:
+                floor[ts[0]] = idf[ts[0]] * stats[ts[0]]["kth"]
+        full = set()
+        for q, ts in qterms.items():
+            if q in splits:
+                full.update(splits[q][0])
+            elif ts[0] not in floor:
+                full.update(ts)
+        pruned = {t for _, NE in splits.values() for t in NE} - full
+        e_for = {t: set() for t in pruned}
+        for E, NE in splits.values():
+            for t in pruned.intersection(NE):
+                e_for[t].update(E)
         bs = int(self.manifest.get("block_size", 128))
-        corpus_span = max(1, int(self.manifest.get(
-            "max_doc_id", self.n_docs)))
-        for t in sorted(pruned_set):
+        corpus_span = max(1, int(self.manifest.get("max_doc_id",
+                                                    self.n_docs)))
+        for t in sorted(pruned):
             es = e_for[t]
-            span = (max(rngs[e]["hi"] for e in es)
-                    - min(rngs[e]["lo"] for e in es) + 1)
-            n_cand_est = sum(meta[e]["df"] for e in es)
-            frac = min(1.0, span / corpus_span,
-                       n_cand_est * bs * (stats[t]["ms"] + 1)
-                       / meta[t]["df"])
-            if frac > 0.5:
-                pruned_set.discard(t)
-                full.add(t)
-        # GLOBAL broadcast cap (r7 ADVICE): the per-query gate bounds
-        # each cand(E_q), but Σ_t |cand(E_t)| scales with active split
-        # queries × pruned terms. Estimate per-term cost from the df
-        # metadata already on the driver (Σ df over t's relevant
-        # essential union — an upper bound on |cand(E_t)|) and demote
-        # the costliest terms until the total fits; demotion is the
-        # exact path for that term, so correctness is untouched.
-        est = {t: sum(meta[e]["df"] for e in e_for[t]) for t in pruned_set}
-        while pruned_set and (sum(est[t] for t in pruned_set)
-                              > self.MAXSCORE_MAX_TOTAL_CAND):
-            worst = max(sorted(pruned_set), key=lambda t: est[t])
-            pruned_set.discard(worst)
-            full.add(worst)
-        if not pruned_set:
-            return None  # nothing prunes profitably: pure exact path
-        # queries still relying on pruning (NE ∩ pruned ≠ ∅) need the
-        # candidate restriction; a split query whose NE all demoted has
-        # complete rows for every doc and passes through like an exact
-        # query (its E ⊆ full already)
-        active = {qid: s for qid, s in splits.items()
-                  if set(s[1]) & pruned_set}
-        e_union = sorted({t for qid in active for t in active[qid][0]})
-        from pyspark import StorageLevel
-        emap = self.spark.createDataFrame(
-            [(qid, t) for qid, (E, _) in active.items() for t in E],
-            "query_id string, term string")
-        cand_pairs = (
-            self._decode(self._blocks_for({t: meta[t] for t in e_union}),
-                         cols=("term", "doc_id"))
-            .join(F.broadcast(emap), "term")
-            .select("query_id", "doc_id").distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        # per-term candidate relation for block pruning: (term, doc_id)
-        # pairs — term t keeps a block iff it contains a candidate of
-        # some query holding t in NE. Broadcast size is bounded by
-        # Σ_t |cand(E_t)| ≤ |pruned| · MAXSCORE_MAX_CANDIDATES.
-        ne_t_map = self.spark.createDataFrame(
-            [(qid, t) for qid, (_, NE) in active.items()
-             for t in NE if t in pruned_set],
-            "query_id string, term string")
-        cand_by_term = (cand_pairs
-                        .join(F.broadcast(ne_t_map), "query_id")
-                        .select("term", "doc_id").distinct())
-        kept = self._blocks_for(
-            {t: meta[t] for t in sorted(pruned_set)}).alias("b").join(
-            F.broadcast(cand_by_term).alias("c"),
-            (F.col("c.term") == F.col("b.term"))
-            & (F.col("c.doc_id") >= F.col("b.first_doc_id"))
-            & (F.col("c.doc_id") <= F.col("b.last_doc_id")), "left_semi")
-        scored_cols = ("term", "doc_id", "score")
-        dec_pruned = (self._decode(kept, idf, cols=scored_cols)
-                      .join(cand_by_term, ["term", "doc_id"], "left_semi"))
-        dec_full = self._decode(
-            self._blocks_for({t: meta[t] for t in sorted(full)}), idf,
-            cols=scored_cols)
-        all_rows = dec_full.unionByName(dec_pruned)
-        qmap = self.spark.createDataFrame(
-            [(qid, t, qid in active) for qid, t in rows],
-            "query_id string, term string, _split boolean")
-        # per-query candidate restriction: a left join on the SAME
-        # (query_id, doc_id) key as the groupBy that follows, so the
-        # exchange is reused — active split queries keep only cand_q
-        # rows, the rest pass through untouched
-        joined = all_rows.join(F.broadcast(qmap), "term")
-        restricted = (
-            joined.join(cand_pairs.withColumn("_c", F.lit(True)),
-                        ["query_id", "doc_id"], "left")
-            .filter((~F.col("_split")) | F.col("_c").isNotNull()))
-        scored = (restricted.groupBy("query_id", "doc_id")
-                  .agg(F.sum("score").alias("score")))
-        return scored, lambda: cand_pairs.unpersist()
+            span = (max(stats[e]["hi"] for e in es)
+                    - min(stats[e]["lo"] for e in es) + 1)
+            n_cand = sum(meta[e]["df"] for e in es)
+            if min(1.0, span / corpus_span,
+                   n_cand * bs * (stats[t]["ms"] + 1) / meta[t]["df"]) > 0.5:
+                pruned.discard(t)
+        est = {t: sum(meta[e]["df"] for e in e_for[t]) for t in pruned}
+        while sum(est[t] for t in pruned) > self.MAXSCORE_MAX_TOTAL_CAND:
+            pruned.discard(max(sorted(pruned), key=est.get))
+        if not pruned and not floor:
+            return None
+        keep = None
+        if floor:
+            keep = ~F.col("term").isin(list(floor))
+            for t, tau in floor.items():
+                keep = keep | ((F.col("term") == t)
+                               & (F.lit(idf[t]) * F.col("block_max_w")
+                                  >= F.lit(tau)))
+        cand = {}
+        if pruned:
+            e_union = set().union(*(e_for[t] for t in pruned))
+            pdf = self._decode(self._blocks_for({t: meta[t] for t in e_union}),
+                               cols=("term", "doc_id")).toPandas()
+            ids = {t: g.to_numpy(dtype=np.int64)
+                   for t, g in pdf.groupby("term")["doc_id"]}
+            cand = {t: np.unique(np.concatenate([ids[e] for e in e_for[t]]))
+                    for t in pruned}
+        return keep, cand
 
     def _per_term_block_stats(self, blocks: DataFrame, k: int) -> DataFrame:
         """Per-term ``(mw, nb, ms, lo, hi, kth)`` over block METADATA
@@ -900,28 +836,14 @@ class SearchEngine:
                     .alias("kth"))
         )
 
-    def _maxscore_stats(self, blocks: DataFrame, k: int) -> list:
-        """ONE metadata-only job over the candidate blocks: per term,
-        the max block weight (→ σ), the k-th largest block weight (→ a
-        provable τ lower bound), the block count and the salt-split
-        count (→ block-span estimate). Never decodes."""
-        return self._per_term_block_stats(blocks, k).collect()
-
     def _maxscore_split(self, terms: Sequence[str], meta: Dict[str, dict],
                         idf: Dict[str, float], stats: Dict[str, dict],
-                        k: int,
-                        min_ne: Optional[int] = None) -> Optional[tuple]:
-        """Driver-side (E, NE) split from per-term block stats (see
-        :meth:`_maxscore_topk` steps 1-2): smallest σ-descending prefix
-        E whose provable τ lower bound exceeds Σ_{NE} σ, subject to the
-        candidate cap and the minimum-NE-decode gates. Shared by the
-        single-query and batch paths — the batch feeds every query's
-        split the SAME stats job's rows, and each passes its own
-        ``min_ne`` gate (the paths' overheads differ ~5x, r8 ADVICE).
-        Returns None when no valid split exists (caller falls back to
-        exact)."""
-        if min_ne is None:
-            min_ne = self.MAXSCORE_MIN_NE_POSTINGS
+                        k: int) -> Optional[tuple]:
+        """(E, NE) for one multi-term query (see :meth:`_prune_plan`):
+        the shortest σ-descending prefix E whose τ exceeds Σ_{NE} σ,
+        within the E-decode cap and while NE still skips
+        ``MAXSCORE_MIN_NE_POSTINGS`` postings. None when no split
+        exists."""
         if any(t not in stats for t in terms):
             return None
         mw = {t: stats[t]["mw"] for t in terms}
@@ -936,7 +858,7 @@ class SearchEngine:
             E, NE = by_sigma[:e], by_sigma[e:]
             if sum(meta[t]["df"] for t in E) > cap:
                 break  # df_E only grows with e
-            if sum(meta[t]["df"] for t in NE) < min_ne:
+            if sum(meta[t]["df"] for t in NE) < self.MAXSCORE_MIN_NE_POSTINGS:
                 break  # decode savings shrink with e — no later split pays
             taus = [idf[t] * kth[t] for t in E
                     if nb[t] >= k and kth[t] is not None]
@@ -945,229 +867,6 @@ class SearchEngine:
             if sum(sigma[t] for t in NE) < max(taus):
                 return E, NE
         return None
-
-    def _maxscore_topk(self, meta: Dict[str, dict], idf: Dict[str, float],
-                       k: int) -> Optional[DataFrame]:
-        """Distributed MaxScore: EXACT multi-term top-k that decodes the
-        head terms' postings only where they can matter.
-
-        1. One metadata pass (:meth:`_maxscore_stats`) yields per-term
-           σ_t = idf_t·max block weight and a PROVABLE lower bound on
-           the k-th best full score: a term with ≥k blocks exhibits ≥k
-           distinct docs (one per block — blocks are doc-disjoint)
-           whose full BM25 score is ≥ idf_t · (k-th largest block max).
-        2. Split terms by σ descending into ESSENTIAL (E) and
-           NON-ESSENTIAL (NE): the smallest σ-prefix E such that
-           τ = max over E of the per-term bound satisfies
-           ``Σ_{t∈NE} σ_t < τ`` — then every doc containing NO
-           essential term scores < τ ≤ k-th best and cannot enter the
-           top-k, so the candidate set is exactly the docs holding ≥1
-           essential term. E is typically the rare/selective terms
-           (high idf → high σ), so this pass is cheap by construction.
-        3. Decode E fully → per-doc partial scores (= the candidates).
-        4. A density estimate from the candidates' (count, min, max) —
-           one tiny aggregate over the persisted partials — decides
-           whether the block semi-join can pay: a head block spans
-           ≈ block_size · n_splits doc ids, so with candidates spread
-           uniformly over a span S, the expected surviving fraction of
-           term t's blocks is ≈ min(S / corpus_span,
-           n_cand · block_size · n_splits_t / df_t). Clustered
-           candidates (topical/temporal locality — the realistic shape,
-           since doc ids follow conversation/time order) prune hard;
-           uniformly-scattered candidates overlap every head block, in
-           which case the semi-join is SKIPPED and all NE blocks decode
-           (the candidate restriction below still applies) — never
-           slower than exact by more than the two driver jobs.
-        5. When the estimate pays, NE blocks are pruned by a
-           doc-id-range semi-join against the candidates on metadata
-           columns that already exist (``first_doc_id``/``last_doc_id``,
-           codec.BLOCK_SCHEMA): the distinct candidate ids are
-           broadcast and the range predicate alone decides survival —
-           probe work O(n_blocks_NE × |candidates| / parallelism)
-           long-compares, bounded by the df pre-gate
-           (``MAXSCORE_MAX_CANDIDATES``). Every posting of a candidate
-           lives in a block whose range contains the candidate's id,
-           so kept blocks cover ALL candidate contributions → final
-           scores are exact (pytest asserts equality with the unpruned
-           path; the wand-vs-exact bench pair asserts it never loses).
-
-        Returns None when no valid split exists (falls back to exact).
-        """
-        terms = list(meta)
-        stats = {r["term"]: r for r in
-                 self._maxscore_stats(self._blocks_for(meta), k)}
-        split = self._maxscore_split(
-            terms, meta, idf, stats, k,
-            min_ne=self.MAXSCORE_MIN_NE_POSTINGS_SINGLE)
-        if split is None:
-            return None
-        E, NE = split
-        nb = {t: stats[t]["nb"] for t in terms}
-        ms = {t: stats[t]["ms"] for t in terms}
-        df_e = sum(meta[t]["df"] for t in E)
-        bs = int(self.manifest.get("block_size", 128))
-        corpus_span = max(1, int(self.manifest.get("max_doc_id", self.n_docs)))
-        blocks_e = self._blocks_for({t: meta[t] for t in E})
-
-        def prune_pays(n_cand, lo, hi):
-            # expected surviving block fraction per NE term (uniform-
-            # within-candidate-range model — see docstring step 4)
-            range_frac = (hi - lo + 1) / corpus_span
-            est_kept = sum(
-                nb[t] * min(1.0, range_frac,
-                            n_cand * bs * (ms[t] + 1) / meta[t]["df"])
-                for t in NE)
-            return est_kept <= 0.5 * sum(nb[t] for t in NE)
-
-        if df_e <= self.MAXSCORE_DRIVER_CANDIDATES:
-            return self._maxscore_driver(meta, idf, k, E, NE, prune_pays)
-        # the E-terms' doc-id span rides along in the stats job — no
-        # separate metadata job for the density estimate
-        rng = (min(stats[t]["lo"] for t in E),
-               max(stats[t]["hi"] for t in E))
-        return self._maxscore_distributed(meta, idf, k, E, NE, prune_pays,
-                                          blocks_e, rng)
-
-    def _maxscore_driver(self, meta, idf, k, E, NE, prune_pays
-                         ) -> Optional[DataFrame]:
-        """Small-candidate fast path (the common selective-query case):
-        collect the essential partial scores — bounded by
-        ``MAXSCORE_DRIVER_CANDIDATES`` rows, a few MB — broadcast the
-        SORTED candidate-id array, and prune INSIDE the decode stage
-        (:meth:`_decode`'s ``cand``): blocks holding no candidate are
-        skipped before any varint work, and membership filtering trims
-        decoded rows to candidates. Total cost: the stats job + the (tiny)
-        essential decode + ONE scoring job — no extra shuffles, joins
-        or broadcasts of DataFrames."""
-        pdf = (self._decode(self._blocks_for({t: meta[t] for t in E}), idf,
-                            cols=("doc_id", "score"))
-               .groupBy("doc_id").agg(F.sum("score").alias("score"))
-               .toPandas())
-        if pdf.empty:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        cand_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        if not prune_pays(len(cand_ids), int(cand_ids[0]),
-                          int(cand_ids[-1])):
-            return None  # scattered candidates: exact decode is cheaper
-        b_cand = self.spark.sparkContext.broadcast(cand_ids)
-        ne_scores = self._decode(self._blocks_for({t: meta[t] for t in NE}),
-                                 idf, cols=("doc_id", "score"), cand=b_cand)
-        part_df = self.spark.createDataFrame(
-            pdf, "doc_id long, score double")
-        plan = (
-            ne_scores.unionByName(part_df)
-            .groupBy("doc_id").agg(F.sum("score").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        # materialize the (≤k-row) result NOW so the candidate-id
-        # broadcast can be released — long-lived engines otherwise
-        # accumulate one block-manager broadcast per rare+head query;
-        # finally: release on collect failure too (executor loss would
-        # otherwise leak the broadcast on a long-lived engine)
-        try:
-            rows = plan.collect()
-        finally:
-            b_cand.unpersist()
-        return self.spark.createDataFrame(rows, "doc_id long, score double")
-
-    def _maxscore_distributed(self, meta, idf, k, E, NE, prune_pays,
-                              blocks_e, rng) -> Optional[DataFrame]:
-        """Large-candidate path (Σ df(essential) beyond the driver
-        bound): partial scores stay a persisted DataFrame; NE blocks
-        are pruned by a doc-id-range semi-join on the metadata columns
-        (broadcast of the distinct candidate ids, range predicate
-        alone). The candidate range ``rng`` for the density estimate
-        comes from the stats job's per-term spans — no extra job."""
-        from pyspark import StorageLevel
-        df_e = sum(meta[t]["df"] for t in E)
-        if not prune_pays(df_e, int(rng[0]), int(rng[1])):
-            return None
-        partial = (
-            self._decode(blocks_e, idf, cols=("doc_id", "score"))
-            .groupBy("doc_id").agg(F.sum("score").alias("_p"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cand = partial.select("doc_id")
-        blocks_ne = self._blocks_for({t: meta[t] for t in NE})
-        # broadcast the candidate ids ALONE and keep any block whose
-        # [first, last] range contains one: the old candidate×NE-term
-        # crossJoin made the broadcast |NE|× larger for zero extra
-        # pruning (the term equi-join was vacuous — every candidate was
-        # paired with every NE term, so the range predicate alone
-        # decided survival)
-        kept = blocks_ne.alias("b").join(
-            F.broadcast(cand).alias("c"),
-            (F.col("c.doc_id") >= F.col("b.first_doc_id"))
-            & (F.col("c.doc_id") <= F.col("b.last_doc_id")),
-            "left_semi")
-        # candidate restriction is valid regardless of block pruning:
-        # the τ check proved non-candidates cannot reach the top-k
-        ne_scores = (
-            self._decode(kept, idf, cols=("doc_id", "score"))
-            .join(cand, "doc_id", "left_semi")
-            .groupBy("doc_id").agg(F.sum("score").alias("_pn"))
-        )
-        out = (
-            partial.join(ne_scores, "doc_id", "left")
-            .select("doc_id",
-                    (F.col("_p") + F.coalesce(F.col("_pn"), F.lit(0.0)))
-                    .alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        # materialize the (≤k-row) result NOW and release the persisted
-        # partials — public bm25_topk callers have no handle to
-        # unpersist, so a lazy return leaked one block-manager entry
-        # per large-candidate query on long-lived engines; finally:
-        # release on collect failure too (same leak class, error path)
-        try:
-            rows = out.collect()
-        finally:
-            partial.unpersist()
-        return self.spark.createDataFrame(rows, "doc_id long, score double")
-
-    def _wand_prune(self, blocks: DataFrame, meta: Dict[str, dict],
-                    idf: Dict[str, float], k: int) -> DataFrame:
-        """Lossless block-max pruning — metadata only, ONE extra job.
-
-        One pass over the candidate blocks' METADATA rows (term +
-        block_max_w — never a posting decode) yields both bounds:
-
-        - σ_t = idf_t · max block weight of term t;
-        - τ   = max over terms of idf_t · (k-th largest block weight of
-          t). Valid lower bound on the k-th best full score: every
-          block's max weight is achieved by ≥1 doc, and one term's
-          blocks are doc-disjoint, so a term with ≥k blocks exhibits k
-          distinct docs whose full BM25 score is ≥ its k-th block max.
-
-        Keep block B of term t iff ub(B) + Σ_{t'≠t} σ_{t'} ≥ τ: every
-        doc with true score ≥ τ survives in *all* its blocks (score
-        exact); pruned docs have true score < τ and cannot displace the
-        top-k. The per-term k-th largest comes from the two-stage
-        partial top-k (:meth:`_per_term_block_stats`) — never a
-        single-task per-term window sort.
-        """
-        stats = self._per_term_block_stats(blocks, k).collect()
-        if not stats:
-            return blocks
-        sigma = {r["term"]: idf[r["term"]] * r["mw"] for r in stats}
-        sum_sigma = sum(sigma.values())
-        taus = [idf[r["term"]] * r["kth"] for r in stats if r["nb"] >= k]
-        if not taus:
-            return blocks  # no term has k blocks → nothing provable
-        tau = max(taus)
-        # map term → σ_others = sum_sigma - σ_t  (tiny broadcastable map)
-        others = [(t, sum_sigma - s, idf[t]) for t, s in sigma.items()]
-        others_df = self.spark.createDataFrame(
-            others, "term string, sig_others double, idf double")
-        return (
-            blocks.join(F.broadcast(others_df), "term")
-            .filter(F.col("idf") * F.col("block_max_w") + F.col("sig_others")
-                    >= F.lit(tau))
-            .drop("sig_others", "idf")
-        )
 
     # -- suggestions / frequency (trie surface, SURVEY §2.4 Q6/Q7) -----------
     def search_suggestions(self, prefix: str) -> List[str]:

@@ -1,5 +1,6 @@
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -76,3 +77,34 @@ def postings_rows(spark):
         return (spark.read.parquet(path)
                 .orderBy("term", "salt", "block_seq").collect())
     return read
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """fn → how many Spark jobs ``fn()`` launched, counted through a job
+    group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count
+
+
+@pytest.fixture(scope="session")
+def kept_blocks():
+    """(eng, meta, term, sorted ids) → (how many of ``term``'s blocks
+    hold one of ``ids``, how many blocks ``term`` has)."""
+    def count(eng, meta, term, ids):
+        from konlspark.query import _holds
+        blocks = (eng._blocks_for({term: meta[term]})
+                  .select("first_doc_id", "last_doc_id").toPandas())
+        held = _holds(ids, blocks["first_doc_id"].to_numpy(),
+                      blocks["last_doc_id"].to_numpy())
+        return int(held.sum()), len(blocks)
+    return count

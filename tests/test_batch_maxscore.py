@@ -1,6 +1,6 @@
-"""Shared-candidate MaxScore for the batch path
-(``bm25_topk_batch(use_wand=True)``): per-query parity with the exact
-single-query path, gain-aware fallback, and resource release."""
+"""The pruning planner on batches (``bm25_topk_batch(use_wand=True)``):
+per-query parity with the exact single-query path, shared candidates,
+lone-term floors, gain-aware fallback, and resource release."""
 
 import datetime
 
@@ -44,8 +44,7 @@ def batch_engine(spark, tmp_root):
     build.build_index(spark, corpus.spark_transcripts(spark, pdf), root,
                       block_size=16)
     eng = SearchEngine(spark, root)
-    eng.MAXSCORE_MIN_NE_POSTINGS = 0
-    eng.MAXSCORE_MIN_NE_POSTINGS_SINGLE = 0  # sandbox scale; see zipf_engine
+    eng.MAXSCORE_MIN_NE_POSTINGS = 0  # sandbox scale; see zipf_engine
     return eng
 
 
@@ -85,36 +84,36 @@ def test_batch_maxscore_parity(batch_engine):
             assert got.get(qid, []) == want[qid], (qid, k)
 
 
-def test_batch_maxscore_path_taken_and_prunes(batch_engine, spark):
-    """The shared split must engage for BATCH (head term prunable), the
-    kept head blocks must be a strict subset, and the persisted
-    candidate pairs must be released by the public entry point."""
-    eng = batch_engine
-    meta, rows, nreq = eng._batch_qmap(BATCH, "or")
-    pruned = eng._batch_maxscore_scored(meta, rows, 10)
-    assert pruned is not None  # the batch split engaged
-    scored, release = pruned
-    assert scored.count() > 0
-    release()
+def _plan(eng, batch, k=10):
+    meta = eng._term_meta([t for ts in batch.values() for t in ts])
+    return eng._prune_plan(batch, meta, k), meta
 
-    # decode restriction mirror: head blocks overlapping neither rare
-    # cluster are skipped (400 clustered candidates / 4000 docs,
-    # 16-posting head blocks → ~a tenth of head blocks survive)
-    from konlspark.oracle import bm25_idf
-    idf = {t: bm25_idf(eng.n_docs, m["df"]) for t, m in meta.items()}
-    cand = (eng._decode(eng._blocks_for(
-        {t: meta[t] for t in ("rareterm", "raretwo")}), idf)
-        .select("doc_id").distinct())
-    blocks_head = eng._blocks_for({"headterm": meta["headterm"]})
-    n_all = blocks_head.count()
-    n_kept = blocks_head.alias("b").join(
-        cand.alias("c"),
-        (F.col("c.doc_id") >= F.col("b.first_doc_id"))
-        & (F.col("c.doc_id") <= F.col("b.last_doc_id")),
-        "left_semi").count()
+
+def _assert_parity(eng, batch, k=10):
+    got, want = _got(eng, batch, k), _want(eng, batch, k)
+    for qid in batch:
+        assert got.get(qid, []) == want[qid], (qid, k)
+
+
+def test_batch_maxscore_path_taken_and_prunes(batch_engine, spark,
+                                               kept_blocks):
+    """The shared split must engage for BATCH: the head term — in NE of
+    both rare+head queries — is restricted to the union of both rare
+    terms' docs, a strict subset of head blocks survives, and the
+    public path persists nothing."""
+    eng = batch_engine
+    plan, meta = _plan(eng, BATCH)
+    assert plan is not None
+    keep, cand = plan
+    assert keep is None and list(cand) == ["headterm"]
+    rare_ids = sorted(r["doc_id"] for r in eng.search(
+        ["rareterm", "raretwo"], "or", log=False).collect())
+    assert cand["headterm"].tolist() == rare_ids
+    # 400 clustered candidates / 4000 docs, 16-posting head blocks →
+    # ~a tenth of head blocks survive
+    n_kept, n_all = kept_blocks(eng, meta, "headterm", cand["headterm"])
     assert n_kept < n_all / 4, (n_kept, n_all)
 
-    # the public path must leave no persisted RDDs behind
     base = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert eng.bm25_topk_batch(BATCH, k=10).count() > 0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
@@ -124,8 +123,8 @@ def test_batch_maxscore_global_cap_demotion_parity(batch_engine):
     """r8 ADVICE item 4: the MAXSCORE_MAX_TOTAL_CAND demotion loop was
     unpinned (the 2M default never fires at fixture scale). Shrinking
     the cap must demote pruned terms costliest-first WITHOUT changing
-    any result, and demote-until-empty must fall back to None (the
-    exact path)."""
+    any result, and demote-until-empty must leave no plan (the exact
+    path)."""
     eng = batch_engine
     want = _want(eng, BATCH, 10)
     old = eng.MAXSCORE_MAX_TOTAL_CAND
@@ -135,42 +134,51 @@ def test_batch_maxscore_global_cap_demotion_parity(batch_engine):
             got = _got(eng, BATCH, 10)
             for qid in BATCH:
                 assert got.get(qid, []) == want[qid], (qid, cap)
-        # cap=1 demotes every pruned term -> the engaged path declines
+        # cap=1 demotes every pruned term -> the planner declines
         eng.MAXSCORE_MAX_TOTAL_CAND = 1
-        meta, rows, nreq = eng._batch_qmap(BATCH, "or")
-        assert eng._batch_maxscore_scored(meta, rows, 10) is None
+        assert _plan(eng, BATCH)[0] is None
     finally:
         eng.MAXSCORE_MAX_TOTAL_CAND = old
 
 
 def test_batch_maxscore_fallback_when_head_needed_fully(batch_engine):
-    """A batch containing a single-term head query forces the head term
-    into the full-decode set — pruning then has nothing to prune and
-    the helper must decline (gain-aware), with results still exact."""
+    """A single-term head query on a term other queries also hold: no
+    floor may apply to it, and it forces the head term into the full
+    decode — pruning has nothing left to prune and the planner must
+    decline, with results still exact."""
     eng = batch_engine
     batch = dict(BATCH, q_head=["headterm"])
-    meta, rows, nreq = eng._batch_qmap(batch, "or")
-    assert eng._batch_maxscore_scored(meta, rows, 10) is None
-    got = _got(eng, batch, 10)
-    want = _want(eng, batch, 10)
-    for qid in batch:
-        assert got.get(qid, []) == want[qid], qid
+    assert _plan(eng, batch)[0] is None
+    _assert_parity(eng, batch)
 
 
-def test_batch_maxscore_all_symmetric_skips(batch_engine):
-    """No query passes the df pre-gate → helper returns None without
-    running the stats job (driver-only decision)."""
+def test_batch_lone_head_term_prunes_by_floor(batch_engine):
+    """A lone single-term head query (its term held by no other query)
+    gets the block floor: a strict subset of head blocks is kept, no
+    candidates are collected, and results equal exact."""
+    eng = batch_engine
+    batch = {"q_head": ["headterm"], "q_sym": ["alpha", "beta"]}
+    plan, meta = _plan(eng, batch)
+    assert plan is not None
+    keep, cand = plan
+    assert keep is not None and cand == {}
+    blocks = eng._blocks_for({"headterm": meta["headterm"]})
+    assert blocks.filter(keep).count() < blocks.count()
+    _assert_parity(eng, batch)
+
+
+def test_batch_maxscore_all_symmetric_skips(batch_engine, count_jobs):
+    """No query passes the df pre-gate → the planner declines on the
+    driver: no stats job, no job over the exact plan."""
     eng = batch_engine
     batch = {"a": ["alpha", "beta"], "b": ["gamma", "delta"]}
-    meta, rows, nreq = eng._batch_qmap(batch, "or")
-    calls = []
-    orig = eng._maxscore_stats
-    eng._maxscore_stats = lambda *a, **kw: calls.append(1) or orig(*a, **kw)
-    try:
-        assert eng._batch_maxscore_scored(meta, rows, 10) is None
-    finally:
-        eng._maxscore_stats = orig
-    assert calls == []
+    meta = eng._term_meta(["alpha", "beta", "gamma", "delta"])
+    assert count_jobs(lambda: eng._prune_plan(batch, meta, 10)) == 0
+    assert _plan(eng, batch)[0] is None
+    assert (count_jobs(lambda: eng.bm25_topk_batch(batch, k=10).collect())
+            == count_jobs(lambda: eng.bm25_topk_batch(
+                batch, k=10, use_wand=False).collect()))
+    _assert_parity(eng, batch)
 
 
 def test_batch_maxscore_parity_on_zipf(spark, zipf_index):
@@ -180,7 +188,6 @@ def test_batch_maxscore_parity_on_zipf(spark, zipf_index):
     root, _ = zipf_index
     eng = SearchEngine(spark, root)
     eng.MAXSCORE_MIN_NE_POSTINGS = 0
-    eng.MAXSCORE_MIN_NE_POSTINGS_SINGLE = 0
     rows = (eng.token_dict.select("term", "df")
             .orderBy(F.desc("df"), F.asc("term")).collect())
     terms = [(r["term"], r["df"]) for r in rows]

@@ -26,6 +26,14 @@ def zeng(spark, zipf_index):
     return SearchEngine(spark, root)
 
 
+@pytest.fixture(scope="module")
+def zeng_pruned(spark, zipf_index):
+    """``zeng`` with the pruning gate open: no fixture df reaches it."""
+    eng = SearchEngine(spark, zipf_index[0])
+    eng.MAXSCORE_MIN_NE_POSTINGS = 0
+    return eng
+
+
 # -- reference golden parity (title corpus) ---------------------------------
 
 def test_engine_golden_or(eng):
@@ -144,7 +152,7 @@ def test_zipf_boolean_parity(zeng, zipf_oracle):
         assert got == want, (tokens, mode)
 
 
-def test_zipf_bm25_parity_and_wand_lossless(zeng, zipf_oracle):
+def test_zipf_bm25_parity_and_wand_lossless(zeng, zeng_pruned, zipf_oracle):
     queries = [["마법", "특별"], ["spark", "query", "index"],
                ["검색", "색인"], ["마법", "spark", "token"],
                ["모래", "바다", "하늘"], ["마법소녀"]]
@@ -152,8 +160,7 @@ def test_zipf_bm25_parity_and_wand_lossless(zeng, zipf_oracle):
         exact = [(r["doc_id"], r["score"]) for r in
                  zeng.bm25_topk(q, k=10, use_wand=False).collect()]
         wand = [(r["doc_id"], r["score"]) for r in
-                zeng.bm25_topk(q, k=10, use_wand=True,
-                               wand_min_postings=0).collect()]
+                zeng_pruned.bm25_topk(q, k=10).collect()]
         want = zipf_oracle.bm25_topk(q, k=10)
         assert [d for d, _ in exact] == [d for d, _ in want], q
         for (_, a), (_, b) in zip(exact, want):
@@ -202,24 +209,23 @@ def test_read_only_engine(spark, title_index):
         SearchEngine(spark, root, access="bogus")
 
 
-def test_wand_prune_actually_prunes(zeng):
-    """The metadata-only pruning pass must DROP blocks for a head
-    single-term query (k-th block max bound) and stay lossless —
-    guards against a gate regression making the lossless test vacuous."""
-    from konlspark.oracle import bm25_idf
+def test_wand_prune_actually_prunes(zeng_pruned):
+    """The planner's block floor must DROP blocks for a head single-term
+    query (k-th block max bound) and stay lossless — guards against a
+    gate regression making the lossless test vacuous."""
+    eng = zeng_pruned
     term = "마법"
-    meta = zeng._term_meta([term])
+    meta = eng._term_meta([term])
     assert meta[term]["df"] >= 64 * 10, "fixture head term too small"
-    idf = {term: bm25_idf(zeng.n_docs, meta[term]["df"])}
-    blocks = zeng._blocks_for(meta)
-    pruned = zeng._wand_prune(blocks, meta, idf, 10)
-    n_all, n_kept = blocks.count(), pruned.count()
+    keep, cand = eng._prune_plan({"q": [term]}, meta, 10)
+    assert cand == {}  # a lone term needs no candidates
+    blocks = eng._blocks_for(meta)
+    n_all, n_kept = blocks.count(), blocks.filter(keep).count()
     assert n_kept < n_all  # pruning fired
     exact = [(r["doc_id"], round(r["score"], 9)) for r in
-             zeng.bm25_topk([term], k=10, use_wand=False).collect()]
+             eng.bm25_topk([term], k=10, use_wand=False).collect()]
     wand = [(r["doc_id"], round(r["score"], 9)) for r in
-            zeng.bm25_topk([term], k=10, use_wand=True,
-                           wand_min_postings=0).collect()]
+            eng.bm25_topk([term], k=10).collect()]
     assert wand == exact
 
 

@@ -1,5 +1,6 @@
-"""Distributed MaxScore (multi-term BM25 pruning): exactness vs the
-unpruned path, candidate-restricted decode, and gate behavior."""
+"""BM25 pruning through the one planner (``SearchEngine._prune_plan``):
+exactness vs the unpruned path, candidate-restricted decode, the job
+budget, gate behavior and resource release."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,11 +11,42 @@ def zipf_engine(spark, zipf_index):
     from konlspark.query import SearchEngine
     root, _ = zipf_index
     eng = SearchEngine(spark, root)
-    # production gate: NE decode savings must beat the extra driver
-    # jobs — irrelevant at fixture scale, so disable for these tests
+    # production gate: the skipped decode must beat the extra jobs —
+    # no fixture df reaches it, so open it for these tests
     eng.MAXSCORE_MIN_NE_POSTINGS = 0
-    eng.MAXSCORE_MIN_NE_POSTINGS_SINGLE = 0
     return eng
+
+
+@pytest.fixture
+def broadcast_log(spark, monkeypatch):
+    """Records every broadcast made and every ``Broadcast.unpersist``
+    call; ``fail_collect()`` makes any collect or toPandas raise while a
+    recorded broadcast is still held."""
+    from pyspark import Broadcast, SparkContext
+    log = {"made": [], "released": []}
+    broadcast, unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def track(self, value):
+        log["made"].append(broadcast(self, value))
+        return log["made"][-1]
+
+    def release(self, blocking=False):
+        log["released"].append(self)
+        return unpersist(self, blocking)
+
+    def fail_collect():
+        cls = type(spark.range(1))
+        for name in ("collect", "toPandas"):
+            def raising(self, *a, _orig=getattr(cls, name), **kw):
+                if len(log["made"]) > len(log["released"]):
+                    raise RuntimeError("injected collect failure")
+                return _orig(self, *a, **kw)
+            monkeypatch.setattr(cls, name, raising)
+
+    monkeypatch.setattr(SparkContext, "broadcast", track)
+    monkeypatch.setattr(Broadcast, "unpersist", release)
+    log["fail_collect"] = fail_collect
+    return log
 
 
 def _terms_by_df(eng):
@@ -36,8 +68,7 @@ def _rare_and_head(eng, min_ratio=4):
 
 def _topk(eng, tokens, k, use_wand):
     return [(r["doc_id"], round(r["score"], 9)) for r in
-            eng.bm25_topk(tokens, k=k, use_wand=use_wand,
-                          wand_min_postings=1).collect()]
+            eng.bm25_topk(tokens, k=k, use_wand=use_wand).collect()]
 
 
 def test_maxscore_equals_exact_rare_plus_head(zipf_engine):
@@ -61,7 +92,7 @@ def test_maxscore_equals_exact_three_terms(zipf_engine):
 @pytest.fixture(scope="module")
 def clustered_engine(spark, tmp_root):
     """4000 docs: 'head' in every doc, 'rare' clustered in the first 200
-    — the sparse-candidate regime where MaxScore's range semi-join
+    — the sparse-candidate regime where the candidate broadcast
     actually skips head blocks (at 100 TB, ANY selective term is sparse
     relative to head block spans; the tiny zipf fixture is too dense)."""
     import datetime
@@ -87,79 +118,71 @@ def clustered_engine(spark, tmp_root):
     build.build_index(spark, corpus.spark_transcripts(spark, pdf), root,
                       block_size=16)  # rare df 200 -> 13 blocks >= k=10
     eng = SearchEngine(spark, root)
-    eng.MAXSCORE_MIN_NE_POSTINGS = 0
-    eng.MAXSCORE_MIN_NE_POSTINGS_SINGLE = 0  # see zipf_engine
+    eng.MAXSCORE_MIN_NE_POSTINGS = 0  # see zipf_engine
     return eng
 
 
-def test_maxscore_path_taken_and_prunes(clustered_engine):
-    """The internal split must exist for a rare+head query, the kept NE
-    blocks must be a strict subset, and results must equal exact."""
-    from konlspark.oracle import bm25_idf
+def test_maxscore_path_taken_and_prunes(clustered_engine, kept_blocks):
+    """The planner must split a rare+head query (no floor; the head
+    term restricted to the rare term's docs), keep a strict subset of
+    head blocks, and the public path must equal exact."""
     eng = clustered_engine
-    meta = eng._term_meta(["rareterm", "headterm"])
-    idf = {t: bm25_idf(eng.n_docs, m["df"]) for t, m in meta.items()}
-    out = eng._maxscore_topk(meta, idf, 10)
-    assert out is not None  # the split was found → pruned path used
-    got = [(r["doc_id"], round(r["score"], 9)) for r in out.collect()]
-    assert got == _topk(eng, ["rareterm", "headterm"], 10, False)
-    # decode restriction: head blocks overlapping no candidate skipped
-    cand = (eng._decode(eng._blocks_for({"rareterm": meta["rareterm"]}),
-                        idf).select("doc_id").distinct())
-    blocks_head = eng._blocks_for({"headterm": meta["headterm"]})
-    n_all = blocks_head.count()
-    kept = blocks_head.alias("b").join(
-        cand.alias("c"),
-        (F.col("c.doc_id") >= F.col("b.first_doc_id"))
-        & (F.col("c.doc_id") <= F.col("b.last_doc_id")), "left_semi")
-    n_kept = kept.count()
+    rh = ["rareterm", "headterm"]
+    meta = eng._term_meta(rh)
+    plan = eng._prune_plan({"q": rh}, meta, 10)
+    assert plan is not None
+    keep, cand = plan
+    assert keep is None and list(cand) == ["headterm"]
+    rare_ids = sorted(r["doc_id"] for r in eng.search(
+        ["rareterm"], "or", log=False).collect())
+    assert cand["headterm"].tolist() == rare_ids
     # 200 clustered candidates / 4000 docs, 16-posting head blocks →
     # ~13 of ~250 head blocks survive
+    n_kept, n_all = kept_blocks(eng, meta, "headterm", cand["headterm"])
     assert n_kept < n_all / 4, (n_kept, n_all)
-    persisted = getattr(out, "_konl_persisted", None)
-    if persisted is not None:
-        persisted.unpersist()
+    for k in (1, 10):
+        assert _topk(eng, rh, k, True) == _topk(eng, rh, k, False)
 
 
-def test_maxscore_distributed_path_equals_exact(clustered_engine):
-    """Force the large-candidate DataFrame path (driver bound = 0) —
-    semi-join pruning must give identical results."""
-    from konlspark.oracle import bm25_idf
+def test_pruned_plans_job_budget(clustered_engine, count_jobs):
+    """Each pruned plan adds at most its stats job (3 jobs) and one
+    candidate collect to the exact plan (a lone term needs no collect);
+    a declined gate adds none."""
     eng = clustered_engine
-    old = eng.MAXSCORE_DRIVER_CANDIDATES
-    eng.MAXSCORE_DRIVER_CANDIDATES = 0
+    rh, one = ["rareterm", "headterm"], ["headterm"]
+
+    def jobs(fn, q, **kw):
+        return count_jobs(lambda: fn(q, k=10, **kw).collect())
+
+    plans = [(eng.bm25_topk, rh, 4), (eng.bm25_topk, one, 3),
+             (eng.bm25_topk_batch, {"q": rh}, 4)]
+    exact = [jobs(f, q, use_wand=False) for f, q, _ in plans]
+    for (f, q, extra), n_exact in zip(plans, exact):
+        assert n_exact < jobs(f, q) <= n_exact + extra, (q, n_exact)
+    eng.MAXSCORE_MIN_NE_POSTINGS = type(eng).MAXSCORE_MIN_NE_POSTINGS
     try:
-        meta = eng._term_meta(["rareterm", "headterm"])
-        idf = {t: bm25_idf(eng.n_docs, m["df"]) for t, m in meta.items()}
-        out = eng._maxscore_topk(meta, idf, 10)
-        assert out is not None
-        got = [(r["doc_id"], round(r["score"], 9)) for r in out.collect()]
-        assert got == _topk(eng, ["rareterm", "headterm"], 10, False)
-        persisted = getattr(out, "_konl_persisted", None)
-        if persisted is not None:
-            persisted.unpersist()
+        for (f, q, _), n_exact in zip(plans, exact):
+            assert jobs(f, q) == n_exact, q
     finally:
-        eng.MAXSCORE_DRIVER_CANDIDATES = old
+        eng.MAXSCORE_MIN_NE_POSTINGS = 0
 
 
-def test_symmetric_query_skips_maxscore(zipf_engine):
+def test_symmetric_query_skips_maxscore(zipf_engine, count_jobs):
     """Two head terms (df ratio < MAXSCORE_MIN_DF_RATIO) must take the
-    exact path — the r2 finding that symmetric queries cannot pay."""
+    exact path with no extra job — the r2 finding that symmetric
+    queries cannot pay."""
     eng = zipf_engine
     terms = _terms_by_df(eng)
     t1, df1 = terms[0]
     t2, df2 = terms[1]
     if df1 >= eng.MAXSCORE_MIN_DF_RATIO * df2:
         pytest.skip("top-2 terms unexpectedly asymmetric")
-    calls = []
-    orig = eng._maxscore_topk
-    eng._maxscore_topk = lambda *a, **kw: calls.append(1) or orig(*a, **kw)
-    try:
-        got = _topk(eng, [t1, t2], 10, True)
-    finally:
-        eng._maxscore_topk = orig
-    assert calls == []  # pre-gate skipped the metadata job entirely
-    assert got == _topk(eng, [t1, t2], 10, False)
+    meta = eng._term_meta([t1, t2])
+    assert count_jobs(lambda: eng._prune_plan({"q": [t1, t2]}, meta, 10)
+                      ) == 0
+    assert (count_jobs(lambda: _topk(eng, [t1, t2], 10, True))
+            == count_jobs(lambda: _topk(eng, [t1, t2], 10, False)))
+    assert _topk(eng, [t1, t2], 10, True) == _topk(eng, [t1, t2], 10, False)
 
 
 def test_maxscore_handles_k_exceeding_candidates(zipf_engine):
@@ -172,34 +195,40 @@ def test_maxscore_handles_k_exceeding_candidates(zipf_engine):
         _topk(eng, [rare, head], k, False)
 
 
-def test_maxscore_paths_leak_no_resources(clustered_engine, spark):
-    """Public bm25_topk callers get no unpersist handle, so BOTH
-    MaxScore paths must release their persisted partials / candidate
+def test_maxscore_paths_leak_no_resources(clustered_engine, spark,
+                                          broadcast_log):
+    """Public callers get no release handle, so the pruned single and
+    batch paths must persist nothing and release their candidate
     broadcast before returning (r3 ADVICE: long-lived engines
     accumulated one block-manager entry per rare+head query)."""
-    from konlspark.oracle import bm25_idf
     eng = clustered_engine
-    meta = eng._term_meta(["rareterm", "headterm"])
-    idf = {t: bm25_idf(eng.n_docs, m["df"]) for t, m in meta.items()}
+    base = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert len(eng.bm25_topk(["rareterm", "headterm"], k=10).collect()) > 0
+    assert eng.bm25_topk_batch({"q": ["rareterm", "headterm"]},
+                               k=10).count() > 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
+    made, released = broadcast_log["made"], broadcast_log["released"]
+    assert len(made) == 2
+    assert {id(b) for b in released} == {id(b) for b in made}
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    base = n_persisted()
-    out = eng._maxscore_topk(meta, idf, 10)          # driver path
-    assert out is not None and len(out.collect()) > 0
-    assert n_persisted() == base
-    assert getattr(out, "_konl_persisted", None) is None
-
-    old = eng.MAXSCORE_DRIVER_CANDIDATES
-    eng.MAXSCORE_DRIVER_CANDIDATES = 0               # force distributed
-    try:
-        out = eng._maxscore_topk(meta, idf, 10)
-        assert out is not None and len(out.collect()) > 0
-        assert n_persisted() == base
-        assert getattr(out, "_konl_persisted", None) is None
-    finally:
-        eng.MAXSCORE_DRIVER_CANDIDATES = old
+@pytest.mark.parametrize("batch", [False, True], ids=["single", "batch"])
+def test_pruned_path_releases_broadcast_on_error(clustered_engine,
+                                                 broadcast_log, batch):
+    """ROADMAP: broadcasts are released on every error path. The final
+    collect fails while the candidate broadcast is held; the broadcast
+    must still be unpersisted."""
+    eng = clustered_engine
+    rh = ["rareterm", "headterm"]
+    broadcast_log["fail_collect"]()
+    with pytest.raises(RuntimeError, match="injected collect failure"):
+        if batch:
+            eng.bm25_topk_batch({"q": rh}, k=10)
+        else:
+            eng.bm25_topk(rh, k=10)
+    made, released = broadcast_log["made"], broadcast_log["released"]
+    assert len(made) == 1
+    assert {id(b) for b in released} == {id(b) for b in made}
 
 
 def test_per_term_block_stats_semantics(clustered_engine, spark):
