@@ -4,8 +4,10 @@ Rank-identical to the single-node oracle (and thus to the reference's
 golden outputs) while executing as pruned, mostly map-side DataFrame
 plans:
 
-- query terms → ``token_dict`` lookup (pushed-down filter) gives df +
-  term_bucket per term: a tiny driver-side dict;
+- query terms → df + term_bucket per term from the snapshot's term
+  dictionary, collected to the driver once per :meth:`SearchEngine.refresh`
+  (footprint grows with the vocabulary, not the corpus): planning and
+  prefix suggestions launch no Spark job;
 - ``postings`` scan filters ``term_bucket IN (...) AND term IN (...)``
   → directory-level partition pruning + row-group stats pruning; only
   buckets holding query terms are touched;
@@ -30,8 +32,7 @@ plans:
 
 from __future__ import annotations
 
-
-
+import bisect
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Sequence, Union
 
@@ -152,8 +153,12 @@ class SearchEngine:
                            if tables.get("tombstones") else None)
         if self.tombstones is not None:
             self.docs = self.docs.join(self.tombstones, "doc_id", "left_anti")
-        # token_dict is the per-query metadata lookup (df + bucket per
-        # term) — small relative to the corpus; cache it
+        # token_dict stays cached for the DataFrame surfaces (prefix and
+        # frequency plans, log semi-joins); its replaced predecessor is
+        # released first (same plan → same cache entry, so after a
+        # cache() the unpersist would drop the new one too)
+        if getattr(self, "token_dict", None) is not None:
+            self.token_dict.unpersist()
         token_dict = read_parts("token_dict")
         if tables.get("df_delta"):
             # fold delete-time df corrections in: live df = df − Σdelta,
@@ -171,17 +176,22 @@ class SearchEngine:
                 .drop("_dd")
                 .filter(F.col("df") > 0))
         self.token_dict = token_dict.cache()
+        # the term dictionary on the driver, collected by the one job
+        # that fills the cache: term → (df, bucket) for planning, and
+        # (decomposed, term) sorted for prefix ranges
+        td = self.token_dict.select(
+            "term", "df", "term_bucket", "decomposed").toPandas()
+        self._terms = dict(zip(td["term"], zip(td["df"].tolist(),
+                                               td["term_bucket"].tolist())))
+        by_dec = sorted(zip(td["decomposed"], td["term"]))
+        self._decomposed = [d for d, _ in by_dec]
+        self._dec_terms = [t for _, t in by_dec]
 
-    # -- term metadata lookup (tiny) ----------------------------------------
+    # -- term metadata lookup (driver-side, no job) ---------------------------
     def _term_meta(self, terms: Sequence[str]) -> Dict[str, dict]:
-        uniq = list(dict.fromkeys(terms))
-        if not uniq:
-            return {}
-        rows = (
-            self.token_dict.filter(F.col("term").isin(uniq))
-            .select("term", "df", "term_bucket").collect()
-        )
-        return {r["term"]: {"df": r["df"], "bucket": r["term_bucket"]} for r in rows}
+        """{term: {"df", "bucket"}} for the indexed terms among ``terms``."""
+        return {t: {"df": self._terms[t][0], "bucket": self._terms[t][1]}
+                for t in dict.fromkeys(terms) if t in self._terms}
 
     # -- pruned postings scan + block decode ---------------------------------
     def _blocks_for(self, meta: Dict[str, dict]) -> DataFrame:
@@ -278,13 +288,10 @@ class SearchEngine:
             # reference inverted_index.py:103-109 iterates the raw query
             # token list; the search itself uses the deduped set
             self._log_hits(list(tokens), meta)
-        empty = self.spark.createDataFrame([], "doc_id long")
-        if not uniq:
-            return empty
-        if mode == "and" and len(meta) < len(uniq):
-            return empty  # some term has no postings → intersection empty
-        if not meta:
-            return empty
+        if (not meta
+                or mode == "and" and len(meta) < len(uniq)):
+            # no known term, or an AND term without postings
+            return self.spark.createDataFrame([], "doc_id long")
         decoded = self._decode(self._blocks_for(meta), cols=("doc_id",))
         if mode == "or":
             return decoded.select("doc_id").distinct().orderBy("doc_id")
@@ -363,9 +370,8 @@ class SearchEngine:
         """
         import pandas as pd
         q = tk.tokenize_with_order(" ".join(tokens))
-        empty = self.spark.createDataFrame([], "doc_id long")
         if not q:
-            return empty
+            return self.spark.createDataFrame([], "doc_id long")
         stored = (self.has_positions if use_positions is None
                   else use_positions)
         if stored:
@@ -483,11 +489,9 @@ class SearchEngine:
         unpruned plan's."""
         uniq = list(dict.fromkeys(tokens))
         meta = self._term_meta(uniq)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not meta or k <= 0:
-            return empty
-        if mode == "and" and len(meta) < len(uniq):
-            return empty
+        if (not meta or k <= 0
+                or mode == "and" and len(meta) < len(uniq)):
+            return self.spark.createDataFrame([], "doc_id long, score double")
         idf = {t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
 
         def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
@@ -585,12 +589,11 @@ class SearchEngine:
         """B boolean queries in one plan → DataFrame(query_id, doc_id),
         per-query rows identical to :meth:`search` (mode "or"/"and")."""
         mode = mode.lower()
-        empty = self.spark.createDataFrame(
-            [], "query_id string, doc_id long")
         meta, rows, nreq = self._batch_qmap(queries, mode)
         out = self._batch_joined(meta, rows, nreq, mode, with_scores=False)
         if out is None:
-            return empty
+            return self.spark.createDataFrame(
+                [], "query_id string, doc_id long")
         return out.orderBy("query_id", "doc_id")
 
     def bm25_topk_batch(self, queries: Dict[str, Sequence[str]],
@@ -611,21 +614,19 @@ class SearchEngine:
         broadcast can be released; B×k is small by construction, and
         every other plan stays lazy."""
         mode = mode.lower()
-        empty = self.spark.createDataFrame(
-            [], "query_id string, doc_id long, score double")
+        schema = "query_id string, doc_id long, score double"
         if k <= 0:
-            return empty
+            return self.spark.createDataFrame([], schema)
         meta, rows, nreq = self._batch_qmap(queries, mode)
         if not rows:
-            return empty
+            return self.spark.createDataFrame([], schema)
 
         def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
             return self._batch_topk(self._batch_joined(
                 meta, rows, nreq, mode, True, blocks, cand), k)
 
         return self._run_pruned(top, meta, queries, k,
-                                use_wand and mode == "or",
-                                "query_id string, doc_id long, score double")
+                                use_wand and mode == "or", schema)
 
     def _batch_topk(self, scored: DataFrame, k: int) -> DataFrame:
         """Two-stage partial top-k per query over (query_id, doc_id,
@@ -870,8 +871,17 @@ class SearchEngine:
 
     # -- suggestions / frequency (trie surface, SURVEY §2.4 Q6/Q7) -----------
     def search_suggestions(self, prefix: str) -> List[str]:
-        return [r["term"] for r in
-                self.search_suggestions_df(prefix).collect()]
+        """Q6 on the driver dictionary, no job: the indexed terms whose
+        decomposed form extends ``decompose(prefix)`` (one contiguous
+        range of the sorted keys), in term order — Python's code-point
+        order is Spark's UTF-8 byte order, so this equals
+        :meth:`search_suggestions_df`."""
+        dp = tk.decompose(prefix)
+        lo = hi = bisect.bisect_left(self._decomposed, dp)
+        while (hi < len(self._decomposed)
+               and self._decomposed[hi].startswith(dp)):
+            hi += 1
+        return sorted(self._dec_terms[lo:hi])
 
     def search_by_frequency(self, prefix: str, k: int = 5) -> List[tuple]:
         """Top-k searched tokens under a prefix (trie.py:200-216 +

@@ -21,7 +21,8 @@ def get_spark(app_name: str = "konlspark", cores: int | None = None,
     if shuffle_partitions is None:
         shuffle_partitions = max(8, cores)
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        driver_memory = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                         or _default_driver_memory())
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -66,6 +67,22 @@ def get_spark(app_name: str = "konlspark", cores: int | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """24g, capped at half the host's ``MemTotal`` (whole GiB, at least
+    1g): in local mode the driver JVM shares the host with the Python
+    workers. 24g when ``meminfo`` is unreadable or has no MemTotal."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                key, _, rest = line.partition(":")
+                if key == "MemTotal":
+                    gib = int(rest.split()[0]) >> 20  # the value is in kB
+                    return f"{max(1, min(24, gib // 2))}g"
+    except OSError:
+        pass
+    return "24g"
 
 
 def _repo_root() -> str:

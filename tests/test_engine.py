@@ -333,3 +333,43 @@ def test_lean_decode_matches_full_decode(zeng):
         got = sorted(tuple(r) for r in
                      zeng._decode(blocks, idf, cols=cols).collect())
         assert got == sorted(tuple(r[c] for c in cols) for r in full), cols
+
+
+# -- driver-side term dictionary (no job per lookup) -------------------------
+
+def _token_dict_rows(eng):
+    return {r["term"]: (r["df"], r["term_bucket"]) for r in
+            eng.token_dict.select("term", "df", "term_bucket").collect()}
+
+
+def test_term_lookups_launch_no_jobs(eng, count_jobs):
+    assert count_jobs(lambda: eng._term_meta(["마법", "특별", "없는말"])) == 0
+    assert count_jobs(lambda: "마법" in eng) == 0
+    assert count_jobs(lambda: eng.search_suggestions("특")) == 0
+
+
+def test_term_dict_matches_token_dict(eng):
+    rows = _token_dict_rows(eng)
+    meta = eng._term_meta(list(rows) + ["없는말"])
+    assert {t: (m["df"], m["bucket"]) for t, m in meta.items()} == rows
+
+
+def test_suggestions_match_token_dict_plan(eng):
+    """The driver's bisect equals the Spark prefix plan, order included
+    (code-point order vs Spark's UTF-8 ``orderBy("term")``). The plan
+    runs for the empty prefix, a jamo, ASCII and no match; every
+    leading syllable is checked against the plan's filter over one
+    Spark-ordered collect."""
+    from konlspark import tokenizer as tk
+    rows = (eng.token_dict.select("term", "decomposed").orderBy("term")
+            .collect())
+    ascii_term = next(r["term"] for r in rows if r["term"].isascii())
+    for p in ["", "ㅌ", ascii_term[:2], "qqq없음"]:
+        want = [r["term"] for r in eng.search_suggestions_df(p).collect()]
+        assert eng.search_suggestions(p) == want, p
+    assert eng.search_suggestions("") == [r["term"] for r in rows]
+    assert eng.search_suggestions("qqq없음") == []
+    for p in sorted({r["term"][0] for r in rows}):
+        dp = tk.decompose(p)
+        assert eng.search_suggestions(p) == [
+            r["term"] for r in rows if r["decomposed"].startswith(dp)], p

@@ -134,3 +134,38 @@ def test_append_is_invisible_without_commit(spark, fresh_index, monkeypatch):
     eng = SearchEngine(spark, root)
     assert eng.n_docs == 132
     assert eng.search(["새문서"], "or", log=False).collect() == []
+
+
+def test_term_dict_follows_append_delete_refresh(spark, fresh_index):
+    """The driver dictionary is the mutated snapshot's token_dict: new
+    terms in, the df_delta fold applied, a dead term gone."""
+    root = fresh_index
+    eng = SearchEngine(spark, root)
+    doc38 = set(eng.get_tokens(38))  # holds 다이아몬드's only posting
+    before = eng._term_meta(doc38)
+    ingest.append_batch(spark, root, _batch_df(spark, ["기동전사 건담"]))
+    ingest.delete_docs(spark, root, [38])
+    eng.refresh()
+    rows = {r["term"]: (r["df"], r["term_bucket"]) for r in
+            eng.token_dict.select("term", "df", "term_bucket").collect()}
+    meta = eng._term_meta(list(rows) + sorted(doc38))
+    assert {t: (m["df"], m["bucket"]) for t, m in meta.items()} == rows
+    assert "건담" in meta and "다이아몬드" not in meta
+    for t in doc38:
+        assert meta.get(t, {"df": 0})["df"] == before[t]["df"] - 1, t
+
+
+def test_refresh_releases_replaced_token_dict_cache(spark, fresh_index):
+    root = fresh_index
+    eng = SearchEngine(spark, root)
+    eng.search_suggestions("다")
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    ingest.append_batch(spark, root, _batch_df(spark, ["기동전사 건담"]))
+    eng.refresh()
+    eng.search_suggestions("건")
+    assert jsc.getPersistentRDDs().size() == persisted
+    ingest.delete_docs(spark, root, [38])
+    eng.refresh()
+    eng.search_suggestions("다")
+    assert jsc.getPersistentRDDs().size() == persisted

@@ -29,7 +29,8 @@ def test_seq_gap_never_double_counts(spark, title_index):
     from konlspark.query import SearchEngine
     root, _ = title_index
     eng = SearchEngine(spark, root)
-    term = eng.token_dict.select("term").limit(1).collect()[0]["term"]
+    term = (eng.token_dict.select("term").orderBy("term")
+            .limit(1).collect()[0]["term"])
     base = eng._last_log_seq()
     eng._append_log([term])
     # simulate a crashed append: range reserved, rows never written
@@ -52,7 +53,8 @@ def test_log_query_tokens_driver_free_batch(spark, title_index):
     root, _ = title_index
     eng = SearchEngine(spark, root)
     t1, t2 = sorted(r["term"] for r in
-                    eng.token_dict.select("term").limit(2).collect())
+                    eng.token_dict.select("term").orderBy("term")
+                    .limit(2).collect())
     last_before = eng._last_log_seq()
     toks = spark.createDataFrame(
         [(t1,), (t2,), ("zzz-no-such-term",), (t1,)], "token string")
@@ -76,7 +78,8 @@ def test_log_query_tokens_single_input_execution(spark, title_index):
     root, _ = title_index
     eng = SearchEngine(spark, root)
     t1, t2 = sorted(r["term"] for r in
-                    eng.token_dict.select("term").limit(2).collect())
+                    eng.token_dict.select("term").orderBy("term")
+                    .limit(2).collect())
     acc = spark.sparkContext.accumulator(0)
 
     def counted(batches):
