@@ -146,13 +146,19 @@ def assign_doc_ids(df: DataFrame, order_cols: Tuple[str, ...] = ("conv_id", "tur
         df, order_cols, num_partitions, start_id, dedup_keys=dedup_keys)
     out = ranged.mapInArrow(
         _make_rank_fn(b_off, out_schema, dedup_keys=dedup_keys), out_schema)
-    # hand the persisted intermediate to the caller so it can unpersist
-    # once downstream results are materialized (avoids cache leak)
-    out._konl_persisted = ranged  # type: ignore[attr-defined]
+    out._konl_held = ranged, b_off  # type: ignore[attr-defined]
     out._konl_n_rows = n_rows  # type: ignore[attr-defined]
-    out._konl_max_id = start_id + n_rows - 1  # type: ignore[attr-defined]
     out._konl_n_dropped = n_dropped  # type: ignore[attr-defined]
     return out
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist what :func:`assign_doc_ids` or :func:`build_docs`
+    holds for ``df`` (the range-partitioned input, the offsets
+    broadcast, the dedup winner map); call once ``df`` has been
+    consumed, on success and on error alike."""
+    for held in getattr(df, "_konl_held", ()):
+        held.unpersist()
 
 
 def _dedup_carry_filter(batch, key_names, prev):
@@ -223,46 +229,50 @@ def _prepare_ranked(df: DataFrame, order_cols, num_partitions, start_id,
         .withColumn("_pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_dropped = 0
-    if dedup_keys is None:
-        counts = {r["_pid"]: r["cnt"] for r in
-                  ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    else:
-        # survivor count per partition via the SAME adjacent-run filter
-        # the rank pass applies (r9, VERDICT r8 directive 2): the old
-        # countDistinct-over-struct formulation shuffled one wide
-        # (conv_id, turn_idx, 64-char hash) row per distinct key —
-        # ~n_rows rows, a second near-full exchange of the corpus keys
-        # (~31 core-s at 1M turns). Rows are sorted by exactly the
-        # dedup keys within each partition, so distinct == adjacent
-        # runs, and counting through _dedup_carry_filter itself makes
-        # count-vs-rank equality hold by shared code rather than by
-        # argument (null-safe included). One narrow Arrow map pass,
-        # zero shuffle, one output row per partition.
-        keys = list(dedup_keys)
+    try:
+        n_dropped = 0
+        if dedup_keys is None:
+            counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid")
+                      .agg(F.count("*").alias("cnt")).collect()}
+        else:
+            # survivor count per partition via the SAME adjacent-run filter
+            # the rank pass applies (r9, VERDICT r8 directive 2): the old
+            # countDistinct-over-struct formulation shuffled one wide
+            # (conv_id, turn_idx, 64-char hash) row per distinct key —
+            # ~n_rows rows, a second near-full exchange of the corpus keys
+            # (~31 core-s at 1M turns). Rows are sorted by exactly the
+            # dedup keys within each partition, so distinct == adjacent
+            # runs, and counting through _dedup_carry_filter itself makes
+            # count-vs-rank equality hold by shared code rather than by
+            # argument (null-safe included). One narrow Arrow map pass,
+            # zero shuffle, one output row per partition.
+            keys = list(dedup_keys)
 
-        def count_fn(batches):
-            import pyarrow as pa
-            prev, pid, cnt, tot = None, None, 0, 0
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                if pid is None:
-                    pid = int(batch.column(
-                        batch.schema.get_field_index("_pid"))[0].as_py())
-                tot += batch.num_rows
-                kept, prev, _ = _dedup_carry_filter(batch, keys, prev)
-                cnt += kept.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([-1 if pid is None else pid], pa.int32()),
-                 pa.array([cnt], pa.int64()), pa.array([tot], pa.int64())],
-                names=["_pid", "cnt", "tot"])
+            def count_fn(batches):
+                import pyarrow as pa
+                prev, pid, cnt, tot = None, None, 0, 0
+                for batch in batches:
+                    if batch.num_rows == 0:
+                        continue
+                    if pid is None:
+                        pid = int(batch.column(
+                            batch.schema.get_field_index("_pid"))[0].as_py())
+                    tot += batch.num_rows
+                    kept, prev, _ = _dedup_carry_filter(batch, keys, prev)
+                    cnt += kept.num_rows
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([-1 if pid is None else pid], pa.int32()),
+                     pa.array([cnt], pa.int64()), pa.array([tot], pa.int64())],
+                    names=["_pid", "cnt", "tot"])
 
-        rows = (ranged.select("_pid", *keys)
-                .mapInArrow(count_fn, "_pid int, cnt long, tot long")
-                .collect())
-        counts = {r["_pid"]: r["cnt"] for r in rows if r["_pid"] >= 0}
-        n_dropped = sum(r["tot"] - r["cnt"] for r in rows)
+            rows = (ranged.select("_pid", *keys)
+                    .mapInArrow(count_fn, "_pid int, cnt long, tot long")
+                    .collect())
+            counts = {r["_pid"]: r["cnt"] for r in rows if r["_pid"] >= 0}
+            n_dropped = sum(r["tot"] - r["cnt"] for r in rows)
+    except BaseException:
+        ranged.unpersist()
+        raise
     offsets, acc = {}, start_id - 1
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -377,9 +387,13 @@ def build_docs(transcripts: DataFrame,
 
     # fused id-assignment + tokenization: ONE Python stage (one worker
     # set, one Arrow round-trip) instead of two chained map stages
-    ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
-        survivors, ("conv_id", "turn_idx"), num_partitions, 1,
-        dedup_keys=_DEDUP_KEYS)
+    try:
+        ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
+            survivors, ("conv_id", "turn_idx"), num_partitions, 1,
+            dedup_keys=_DEDUP_KEYS)
+    except BaseException:
+        dup_winners.unpersist()
+        raise
     names = [f.name for f in ids_schema]
     out_schema = _analyzed_schema(ids_schema)
     keys = list(_DEDUP_KEYS)
@@ -411,10 +425,8 @@ def build_docs(transcripts: DataFrame,
                      F.sequence(F.lit(2), F.col("_kc"))))
                  .select("conv_id", "turn_idx", "text_hash"))
         losers = losers.unionByName(extra)
-    docs._konl_persisted = ranged  # type: ignore[attr-defined]
-    docs._konl_persisted2 = dup_winners  # type: ignore[attr-defined]
+    docs._konl_held = ranged, dup_winners, b_off  # type: ignore[attr-defined]
     docs._konl_n_rows = n_rows  # type: ignore[attr-defined]
-    docs._konl_max_id = n_rows  # ids are dense 1..n_rows
     return docs, losers
 
 
@@ -639,102 +651,106 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
 
     docs_lazy, losers = build_docs(transcripts)
     t = mark("dedup_assign_ids", t0)
+    # released and joined on error too: no side job may outlive the call
+    side_threads: List[threading.Thread] = []
+    term_df = None
+    try:
+        # write docs FIRST: tokenization runs exactly once, streamed straight
+        # into the parquet write (no wide-row cache); every downstream pass
+        # (explode, segments) re-reads the columnar file with column
+        # pruning — cheaper than caching tokenized rows in the block manager.
+        # Σ doc_len rides along as an observe() metric (r9, guide §1/VERDICT
+        # r8 directive 2): the corpus-stats aggregation was its own scan job
+        # (the docs_stats phase — 53% serial in the r8 Amdahl attribution);
+        # CollectMetrics folds it into the very write pass that produces the
+        # rows, so the phase collapses to a metric read.
+        from pyspark.sql import Observation
+        obs = Observation("docs_stats")
+        (docs_lazy.observe(obs, F.sum("doc_len").alias("total_doc_len"))
+         .write.mode("overwrite").parquet(cat.table_path("docs")))
+        t = mark("tokenize_write_docs", t)
+        docs = spark.read.parquet(cat.table_path("docs"))
 
-    # write docs FIRST: tokenization runs exactly once, streamed straight
-    # into the parquet write (no wide-row cache); every downstream pass
-    # (explode, segments) re-reads the columnar file with column
-    # pruning — cheaper than caching tokenized rows in the block manager.
-    # Σ doc_len rides along as an observe() metric (r9, guide §1/VERDICT
-    # r8 directive 2): the corpus-stats aggregation was its own scan job
-    # (the docs_stats phase — 53% serial in the r8 Amdahl attribution);
-    # CollectMetrics folds it into the very write pass that produces the
-    # rows, so the phase collapses to a metric read.
-    from pyspark.sql import Observation
-    obs = Observation("docs_stats")
-    (docs_lazy.observe(obs, F.sum("doc_len").alias("total_doc_len"))
-     .write.mode("overwrite").parquet(cat.table_path("docs")))
-    t = mark("tokenize_write_docs", t)
-    docs = spark.read.parquet(cat.table_path("docs"))
+        # CONFLICT report is independent of everything below — run it as a
+        # concurrent job the moment the docs table exists
+        def _write_conflicts() -> None:
+            # null-hash losers exist only via the identical-(key, null-text)
+            # extra path, and there the WINNER shares the key — so resolve
+            # non-null losers by hash alone (unchanged equi-join) and null
+            # ones by key; eqNullSafe keeps this a hash-joinable key
+            dsel = docs.select(F.col("text_hash").alias("_dh"),
+                               F.col("conv_id").alias("_dc"),
+                               F.col("turn_idx").alias("_dt"),
+                               F.col("doc_id").alias("conflict_doc_id"))
+            cond = F.col("text_hash").eqNullSafe(F.col("_dh")) & (
+                F.col("text_hash").isNotNull()
+                | (F.col("conv_id").eqNullSafe(F.col("_dc"))
+                   & F.col("turn_idx").eqNullSafe(F.col("_dt"))))
+            conflicts = (losers.join(dsel, cond)
+                         .select("conv_id", "turn_idx", "conflict_doc_id"))
+            conflicts.write.mode("overwrite").parquet(
+                cat.table_path("conflicts"))
 
-    # CONFLICT report is independent of everything below — run it as a
-    # concurrent job the moment the docs table exists
-    def _write_conflicts() -> None:
-        # null-hash losers exist only via the identical-(key, null-text)
-        # extra path, and there the WINNER shares the key — so resolve
-        # non-null losers by hash alone (unchanged equi-join) and null
-        # ones by key; eqNullSafe keeps this a hash-joinable key
-        dsel = docs.select(F.col("text_hash").alias("_dh"),
-                           F.col("conv_id").alias("_dc"),
-                           F.col("turn_idx").alias("_dt"),
-                           F.col("doc_id").alias("conflict_doc_id"))
-        cond = F.col("text_hash").eqNullSafe(F.col("_dh")) & (
-            F.col("text_hash").isNotNull()
-            | (F.col("conv_id").eqNullSafe(F.col("_dc"))
-               & F.col("turn_idx").eqNullSafe(F.col("_dt"))))
-        conflicts = (losers.join(dsel, cond)
-                     .select("conv_id", "turn_idx", "conflict_doc_id"))
-        conflicts.write.mode("overwrite").parquet(cat.table_path("conflicts"))
+        side_threads.append(_bg(_write_conflicts))
 
-    side_threads = [_bg(_write_conflicts)]
+        # explode once; term_df feeds token_dict AND the salting decision
+        # (cached — whichever concurrent consumer runs first fills it, the
+        # other reads the cache behind the block locks)
+        exploded = explode_postings(docs)
+        term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
+                   .persist(StorageLevel.MEMORY_AND_DISK))
 
-    # explode once; term_df feeds token_dict AND the salting decision
-    # (cached — whichever concurrent consumer runs first fills it, the
-    # other reads the cache behind the block locks)
-    exploded = explode_postings(docs)
-    term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
+        # token_dict write is independent of the postings build AND of the
+        # corpus stats — run it as a CONCURRENT job (Spark schedules jobs
+        # from separate driver threads onto idle task slots) so its driver
+        # barrier overlaps the stats agg + postings stage instead of
+        # serializing before them
+        def _write_token_dict() -> None:
+            token_dict = build_token_dict(term_df=term_df).withColumn(
+                "term_bucket",
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+            (token_dict
+             .repartitionByRange(max(1, n_buckets // 4), "decomposed")
+             .sortWithinPartitions("decomposed")
+             .write.mode("overwrite").parquet(cat.table_path("token_dict")))
 
-    # token_dict write is independent of the postings build AND of the
-    # corpus stats — run it as a CONCURRENT job (Spark schedules jobs
-    # from separate driver threads onto idle task slots) so its driver
-    # barrier overlaps the stats agg + postings stage instead of
-    # serializing before them
-    def _write_token_dict() -> None:
-        token_dict = build_token_dict(term_df=term_df).withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-        (token_dict.repartitionByRange(max(1, n_buckets // 4), "decomposed")
-                   .sortWithinPartitions("decomposed")
-                   .write.mode("overwrite").parquet(cat.table_path("token_dict")))
+        side_threads.append(_bg(_write_token_dict))
 
-    side_threads.append(_bg(_write_token_dict))
+        # n_docs / max_doc_id fall out of the ranked offsets (dense ids —
+        # no count/max agg job); Σ doc_len was observed during the docs
+        # write above, so no stats scan remains (obs.get returns instantly:
+        # the write action already completed)
+        n_docs = int(getattr(docs_lazy, "_konl_n_rows"))
+        max_doc_id = n_docs  # ids are dense 1..n_docs
+        total_doc_len = float(obs.get["total_doc_len"] or 0.0)
+        avgdl = (total_doc_len / n_docs) if n_docs else 1.0
+        t = mark("docs_stats", t)
 
-    # n_docs / max_doc_id fall out of the ranked offsets (dense ids —
-    # no count/max agg job); Σ doc_len was observed during the docs
-    # write above, so no stats scan remains (obs.get returns instantly:
-    # the write action already completed)
-    n_docs = int(getattr(docs_lazy, "_konl_n_rows"))
-    max_doc_id = int(getattr(docs_lazy, "_konl_max_id"))
-    total_doc_len = float(obs.get["total_doc_len"] or 0.0)
-    avgdl = (total_doc_len / n_docs) if n_docs else 1.0
-    t = mark("docs_stats", t)
-
-    build_metrics: List[dict] = []
-    if n_segments <= 1:
-        postings = build_postings(docs, avgdl, block_size,
-                                  target_per_split, n_buckets,
-                                  exploded=exploded, term_df=term_df,
-                                  store_positions=store_positions)
-        (postings.write.mode("overwrite").partitionBy("term_bucket")
-                 .parquet(cat.table_path("postings")))
-    else:
-        seg_dirs = _build_segments(
-            spark, cat, docs, avgdl, n_docs, max_doc_id, n_segments,
-            block_size, target_per_split, n_buckets, resume, build_metrics,
-            term_df=term_df, store_positions=store_positions)
-        merge_segments(spark, seg_dirs, cat.table_path("postings"),
-                       avgdl, block_size, n_buckets,
-                       store_positions=store_positions)
-    for th in side_threads:
-        th.join()
+        build_metrics: List[dict] = []
+        if n_segments <= 1:
+            postings = build_postings(docs, avgdl, block_size,
+                                      target_per_split, n_buckets,
+                                      exploded=exploded, term_df=term_df,
+                                      store_positions=store_positions)
+            (postings.write.mode("overwrite").partitionBy("term_bucket")
+                     .parquet(cat.table_path("postings")))
+        else:
+            seg_dirs = _build_segments(
+                spark, cat, docs, avgdl, n_docs, max_doc_id, n_segments,
+                block_size, target_per_split, n_buckets, resume, build_metrics,
+                term_df=term_df, store_positions=store_positions)
+            merge_segments(spark, seg_dirs, cat.table_path("postings"),
+                           avgdl, block_size, n_buckets,
+                           store_positions=store_positions)
+    finally:
+        for th in side_threads:
+            th.join()
+        if term_df is not None:
+            term_df.unpersist()
+        release(docs_lazy)
     if side_errs:
         raise side_errs[0]
     t = mark("write_postings_and_side_tables", t)
-    term_df.unpersist()
-    for attr in ("_konl_persisted", "_konl_persisted2"):
-        persisted = getattr(docs_lazy, attr, None)
-        if persisted is not None:
-            persisted.unpersist()
     manifest = {
         "format_version": 1,
         "n_docs": n_docs,

@@ -264,7 +264,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # -- build-path operators (B1-B3) ---------------------------------------
     def b1(s, d):
-        from .build import assign_doc_ids
+        from .build import assign_doc_ids, release
         docs = (_read(s, d, "documents")
                 .select(F.col("doc_id").alias("orig_id"), "source"))
         out = assign_doc_ids(docs, order_cols=("source", "orig_id"))
@@ -276,9 +276,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         # leak block-manager entries (eager checkpoint = safe to
         # unpersist: the result no longer depends on the cached lineage)
         res = res.localCheckpoint(eager=True)
-        persisted = getattr(out, "_konl_persisted", None)
-        if persisted is not None:
-            persisted.unpersist()
+        release(out)
         return res
     q["b1_doc_id_assignment"] = b1
 

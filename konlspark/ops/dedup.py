@@ -60,18 +60,6 @@ def _shingle_df(df: DataFrame, text_col: str, id_col: str,
             .select("id", _shingles_of(F.col("_toks"), n).alias("sh")))
 
 
-def _shingles(text_col, n: int = 3):
-    """Single-expression form (kept for the archival profiling tools);
-    the operator paths use :func:`_shingle_df` — see
-    :func:`_shingles_of` for why the inlined form is quadratic."""
-    toks = _tokens(text_col)
-    k = F.size(toks)
-    return F.when(k >= n, F.array_distinct(F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
-    ))).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id row per exact text; adds group size.
@@ -178,20 +166,10 @@ def shingle_pairs_jaccard(df: DataFrame, text_col: str = "text",
     return _jaccard_over_candidates(base, cands, threshold)
 
 
-def _minhash_cols(n_hashes: int) -> List:
-    """k min-hashes per row from an exploded shingle column: value =
-    int64 of the first 15 hex chars of md5(seed || shingle) — the same
-    expression is writable in DuckDB, making this oracle-able."""
-    return [
-        F.min(F.conv(F.substring(F.md5(F.concat(F.lit(f"s{i}:"),
-                                                F.col("shingle"))), 1, 15),
-                     16, 10).cast("long")).alias(f"mh{i}")
-        for i in range(n_hashes)
-    ]
-
-
 def _seeded_hash_cols(n_hashes: int) -> List:
-    """The k seeded digest VALUES (not aggregates) for one shingle."""
+    """The k seeded digest VALUES (not aggregates) for one shingle:
+    int64 of the first 15 hex chars of md5(seed || shingle) — the same
+    expression is writable in DuckDB, making MinHash oracle-able."""
     return [
         F.conv(F.substring(F.md5(F.concat(F.lit(f"s{i}:"),
                                           F.col("shingle"))), 1, 15),

@@ -997,8 +997,7 @@ class SearchEngine:
             out.write.mode("append").parquet(self.cat.table_path("query_log"))
             return n
         finally:
-            if ranked is not None:
-                ranked._konl_persisted.unpersist()
+            build.release(ranked)
             hits.unpersist()
 
     def aggregate_frequency(self) -> None:

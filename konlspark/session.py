@@ -17,7 +17,8 @@ def get_spark(app_name: str = "konlspark", cores: int | None = None,
     ``cores`` maps to executor count for the scaling-efficiency runs.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                    or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(8, cores)
     if driver_memory is None:
@@ -29,27 +30,18 @@ def get_spark(app_name: str = "konlspark", cores: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # scan-parallelism floor (r9, guide §6): the driver tables are
-        # single small parquet files whose default split math
-        # (128 MB maxPartitionBytes, 4 MB openCost) yields 1-2 input
-        # tasks, serializing every per-row expression computed below
-        # the first exchange onto 1-2 cores. A floor of one split per
-        # core is scale-ADAPTIVE: at real scale files already split
-        # into >= parallelism tasks and both settings are no-ops;
-        # locally they let small-file scans use the whole machine.
-        .config("spark.sql.files.minPartitionNum",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(cores)))
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST", str(64 * 1024)))
-        # AQE coalescing floor (r9, measured): the default 1 MB
-        # minPartitionSize coalesces compute-dense-but-byte-light
-        # shuffle stages (string distinct + k seeded digests in the
-        # MinHash path) down to ~12 tasks on 32 cores, serializing
-        # them. 256k trades ~ms of task overhead for parallelism on
-        # exactly those stages (d4 10.2 -> 6.9 s at sf1.0/32c; engine
-        # queries neutral). Scale-safe: the advisory size still
-        # governs large shuffles — this floor only affects stages
-        # whose total bytes are small enough for AQE to over-coalesce.
+        # small-input floors, kept as constants because the build
+        # measures faster with them (perfbench build_bulk, 4-core VM,
+        # alternating pairs): with neither of them nor a minPartitionNum
+        # floor, request p50 went 18.1 -> 21.6 s, slower in 8 of 10
+        # pairs; with only the AQE floor, 17.5 -> 18.3 s, inside noise.
+        # openCost 64k (default 4 MB) splits small parquet scans finer.
+        # AQE minPartitionSize 256k (default 1 MB) keeps byte-light,
+        # compute-dense shuffle stages from coalescing onto a few tasks,
+        # and it fixes the postings file layout: without it
+        # index_bytes_per_text_byte moves. minPartitionNum is left at
+        # its default, which in local[n] is already n.
+        .config("spark.sql.files.openCostInBytes", str(64 * 1024))
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 "256k")
         .config("spark.sql.session.timeZone", "UTC")

@@ -108,3 +108,35 @@ def kept_blocks():
                       blocks["last_doc_id"].to_numpy())
         return int(held.sum()), len(blocks)
     return count
+
+
+@pytest.fixture
+def broadcast_log(spark, monkeypatch):
+    """Records every broadcast made and every ``Broadcast.unpersist``
+    call; ``fail_collect()`` makes any collect or toPandas raise while a
+    recorded broadcast is still held."""
+    from pyspark import Broadcast, SparkContext
+    log = {"made": [], "released": []}
+    broadcast, unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def track(self, value):
+        log["made"].append(broadcast(self, value))
+        return log["made"][-1]
+
+    def release(self, blocking=False):
+        log["released"].append(self)
+        return unpersist(self, blocking)
+
+    def fail_collect():
+        cls = type(spark.range(1))
+        for name in ("collect", "toPandas"):
+            def raising(self, *a, _orig=getattr(cls, name), **kw):
+                if len(log["made"]) > len(log["released"]):
+                    raise RuntimeError("injected collect failure")
+                return _orig(self, *a, **kw)
+            monkeypatch.setattr(cls, name, raising)
+
+    monkeypatch.setattr(SparkContext, "broadcast", track)
+    monkeypatch.setattr(Broadcast, "unpersist", release)
+    log["fail_collect"] = fail_collect
+    return log

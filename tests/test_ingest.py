@@ -169,3 +169,70 @@ def test_refresh_releases_replaced_token_dict_cache(spark, fresh_index):
     eng.refresh()
     eng.search_suggestions("다")
     assert jsc.getPersistentRDDs().size() == persisted
+
+
+def test_delete_of_unassigned_id_spares_later_appends(spark, fresh_index):
+    """Only live victims are tombstoned: an id that no document holds
+    yet must not delete the document a later append assigns it to."""
+    root = fresh_index
+    assert ingest.delete_docs(spark, root, [10, 134]) == {"deleted": 1}
+    res = ingest.append_batch(spark, root, _batch_df(
+        spark, ["기동전사 건담", "기동전사 건담 SEED",
+                "기동전사 건담 SEED DESTINY"]))
+    assert res["first_doc_id"] == 133
+    eng = SearchEngine(spark, root)
+
+    def assert_all_live():
+        got = [r["doc_id"] for r in
+               eng.search(["건담"], "or", log=False).collect()]
+        assert got == [133, 134, 135]
+        assert eng.docs.count() == eng.n_docs == 134
+
+    assert_all_live()
+    ingest.compact(spark, root)
+    eng.refresh()
+    assert_all_live()
+
+
+def _build(spark, root):
+    tdf = corpus.spark_transcripts(spark, corpus.make_title_transcripts())
+    build.build_index(spark, tdf, root + "_rebuilt")
+
+
+def _append(spark, root):
+    ingest.append_batch(spark, root, _batch_df(spark, ["기동전사 건담"]))
+
+
+def _delete(spark, root):
+    ingest.delete_docs(spark, root, [38])
+
+
+@pytest.mark.parametrize("op, target", [
+    (_build, "build_postings"),
+    (_append, "build_postings"),
+    (ingest.compact, "build_postings"),
+    (_append, "commit_manifest"),
+    (_delete, "commit_manifest"),
+], ids=["build-postings", "append-postings", "compact-postings",
+        "append-commit", "delete-commit"])
+def test_failed_write_releases_intermediates(spark, fresh_index,
+                                             broadcast_log, monkeypatch,
+                                             op, target):
+    """A write that raises part-way leaves no persisted DataFrame, no
+    held broadcast and no build side thread behind."""
+    import threading
+    from konlspark.catalog import IndexCatalog
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+    monkeypatch.setattr(build if target == "build_postings"
+                        else IndexCatalog, target, boom)
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        op(spark, fresh_index)
+    assert jsc.getPersistentRDDs().size() == persisted
+    assert [t for t in threading.enumerate() if t not in threads] == []
+    made, released = broadcast_log["made"], broadcast_log["released"]
+    assert {id(b) for b in released} == {id(b) for b in made}
