@@ -203,8 +203,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))))
     ap.add_argument("--turns", type=int, default=0,
                     help="override synthetic corpus size (default sf*1M)")
     ap.add_argument("--min-words", type=int, default=3)

@@ -2,18 +2,20 @@
 
 Rebuilds the reference write pipeline (``index.py:299-327``: hash →
 dedup → id-assign → tokenize → invert) as Spark jobs designed for
-10^12-turn scale:
+10^12-turn scale. The build, ``ingest.append_batch`` and
+``ingest.compact`` share it: one docs stage (:func:`build_docs`) and one
+table writer (:func:`write_tables`).
 
-- **tokenize**: one ``mapInPandas`` pass (Arrow batches, shared
-  tokenizer — no per-row Python UDFs);
-- **dedup (B2)**: window over ``text_hash`` keeping the first
-  occurrence in stable ``(conv_id, turn_idx)`` order; losers become a
-  CONFLICT side-output with the winner's doc id
+- **dedup (B2)**: a narrow ``text_hash`` aggregate picks each duplicated
+  text's first occurrence in stable ``(conv_id, turn_idx)`` order (and,
+  for an append, loses every row whose text a live doc holds); losers
+  become a CONFLICT side-output with the winner's doc id
   (reference ``index.py:301-305``);
-- **doc-id assignment (B1)**: dense 1-based ids in stable
+- **doc-id assignment (B1) + tokenize**: dense ids in stable
   ``(conv_id, turn_idx)`` order, computed scalably as
   range-repartition → per-partition counts → cumulative offsets →
-  per-partition ``row_number`` — no single-task global window;
+  per-partition rank, fused with tokenization in one ``mapInArrow``
+  pass — no single-task global window, no per-row Python UDFs;
 - **posting build (B3)**: explode → *salted* repartition-by-term
   (explicit skew split for head terms; AQE does not fix groupBy skew) →
   per-group sort → delta+varint block encoding (``codec``) with
@@ -26,20 +28,20 @@ dedup → id-assign → tokenize → invert) as Spark jobs designed for
 
 from __future__ import annotations
 
-
 import time
-from typing import Iterator, List, Optional, Tuple
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
 from . import tokenizer as tk
-from .catalog import IndexCatalog
+from .catalog import IndexCatalog, Snapshot
 from .oracle import BM25_B, BM25_K1
 
 DEFAULT_BLOCK_SIZE = 128
@@ -110,27 +112,13 @@ def _analyzed_schema(schema: T.StructType) -> T.StructType:
         + ", " + _ANALYZED_EXTRA.replace("text_hash string, ", ""))
 
 
-def analyze_transcripts(df: DataFrame) -> DataFrame:
-    """Add text_hash/tokens/tfs/doc_len/first_pos to a transcript DF."""
-    if "text_hash" not in df.columns:
-        df = df.withColumn("text_hash", F.sha2(F.col("text"), 256))
-    out_schema = _analyzed_schema(df.schema)
-
-    def fn(batches):
-        for batch in batches:
-            yield _analyze_record_batch(batch)
-
-    return df.mapInArrow(fn, out_schema)
-
-
 # ---------------------------------------------------------------------------
 # Doc-id assignment (B1) — two-pass, no single-task window
 # ---------------------------------------------------------------------------
 
 def assign_doc_ids(df: DataFrame, order_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
                    num_partitions: Optional[int] = None,
-                   start_id: int = 1,
-                   dedup_keys: Optional[Tuple[str, ...]] = None) -> DataFrame:
+                   start_id: int = 1) -> DataFrame:
     """Dense ids ``start_id..`` in global ``order_cols`` order.
 
     Range-repartition by the order key, count rows per partition (tiny
@@ -138,17 +126,24 @@ def assign_doc_ids(df: DataFrame, order_cols: Tuple[str, ...] = ("conv_id", "tur
     partition — every stage is parallel; the only driver-side data is
     one count per partition. The input is persisted so both passes see
     the same partitioning (repartitionByRange samples its boundaries).
-
-    ``dedup_keys``: optional column tuple — among rows EQUAL on all of
-    them, exactly one survives (see :func:`_prepare_ranked`).
     """
-    ranged, b_off, out_schema, n_dropped, n_rows = _prepare_ranked(
-        df, order_cols, num_partitions, start_id, dedup_keys=dedup_keys)
-    out = ranged.mapInArrow(
-        _make_rank_fn(b_off, out_schema, dedup_keys=dedup_keys), out_schema)
+    ranged, b_off, out_schema, _, n_rows = _prepare_ranked(
+        df, order_cols, num_partitions, start_id)
+    names = [f.name for f in out_schema]
+
+    def rank_partition(batches) -> Iterator:
+        # rows arrive in sorted order within the partition; ids are the
+        # partition's cumulative offset + local position (no shuffle, no
+        # window — a pure Arrow map stage over the persisted data)
+        pos = None
+        for batch in batches:
+            if batch.num_rows:
+                out, pos = _rank_batch(batch, pos, b_off, names)
+                yield out
+
+    out = ranged.mapInArrow(rank_partition, out_schema)
     out._konl_held = ranged, b_off  # type: ignore[attr-defined]
     out._konl_n_rows = n_rows  # type: ignore[attr-defined]
-    out._konl_n_dropped = n_dropped  # type: ignore[attr-defined]
     return out
 
 
@@ -165,12 +160,12 @@ def _dedup_carry_filter(batch, key_names, prev):
     """Drop rows equal to their predecessor on ``key_names`` (batch-
     boundary aware: ``prev`` is the last key tuple of the previous
     batch). Rows must arrive sorted by the keys (equal runs adjacent).
-    Returns ``(filtered_batch, new_prev, n_dropped)``."""
+    Returns ``(filtered_batch, new_prev)``."""
     import pyarrow as pa
     import pyarrow.compute as pc
     n = batch.num_rows
     if n == 0:
-        return batch, prev, 0
+        return batch, prev
     cols = [batch.column(batch.schema.get_field_index(k)) for k in key_names]
     keep = np.ones(n, dtype=bool)
     if n > 1:
@@ -193,10 +188,7 @@ def _dedup_carry_filter(batch, key_names, prev):
         if first == prev:
             keep[0] = False
     new_prev = tuple(c[n - 1].as_py() for c in cols)
-    n_drop = int(n - keep.sum())
-    if n_drop == 0:
-        return batch, new_prev, 0
-    return batch.filter(pa.array(keep)), new_prev, n_drop
+    return (batch if keep.all() else batch.filter(pa.array(keep))), new_prev
 
 
 def _prepare_ranked(df: DataFrame, order_cols, num_partitions, start_id,
@@ -258,7 +250,7 @@ def _prepare_ranked(df: DataFrame, order_cols, num_partitions, start_id,
                         pid = int(batch.column(
                             batch.schema.get_field_index("_pid"))[0].as_py())
                     tot += batch.num_rows
-                    kept, prev, _ = _dedup_carry_filter(batch, keys, prev)
+                    kept, prev = _dedup_carry_filter(batch, keys, prev)
                     cnt += kept.num_rows
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([-1 if pid is None else pid], pa.int32()),
@@ -297,70 +289,52 @@ def _rank_batch(batch, pos, b_off, names):
     return pa.RecordBatch.from_arrays(arrays, names=names), pos + n
 
 
-def _make_rank_fn(b_off, out_schema, dedup_keys=None):
-    names = [f.name for f in out_schema]
-    keys = list(dedup_keys) if dedup_keys else None
-
-    def rank_partition(batches) -> Iterator:
-        # rows arrive in sorted order within the partition; ids are the
-        # partition's cumulative offset + local position (no shuffle, no
-        # window — a pure Arrow map stage over the persisted data)
-        pos, prev = None, None
-        for batch in batches:
-            if keys:
-                batch, prev, _ = _dedup_carry_filter(batch, keys, prev)
-            if batch.num_rows == 0:
-                continue
-            out, pos = _rank_batch(batch, pos, b_off, names)
-            yield out
-
-    return rank_partition
-
-
 # ---------------------------------------------------------------------------
 # Dedup (B2) + docs table
 # ---------------------------------------------------------------------------
 
-# above this many distinct duplicated hashes the winner map is joined
-# with a shuffle instead of broadcast (~50B/entry → ~100 MB broadcast)
-DEDUP_BROADCAST_LIMIT = 2_000_000
-
 _DEDUP_KEYS = ("conv_id", "turn_idx", "text_hash")
 
 
-def dup_winner_map(hashed: DataFrame, key, hash_col: str = "text_hash",
-                   only_dups: bool = True) -> DataFrame:
-    """The narrow dedup decision shared by :func:`build_docs`,
-    ``ingest.append_batch`` and ``ops.dedup.exact_dedup``: one map-side-
-    combined aggregate over ``(hash, key)`` giving each hash's group
-    size and first-occurrence winner key. Never shuffles full rows —
-    survivors are selected by re-joining this (tiny, AQE-broadcastable
-    once filtered to ``_n > 1``) map back onto the source scan.
+def dup_winner_map(hashed: DataFrame, key,
+                   hash_col: str = "text_hash") -> DataFrame:
+    """The narrow dedup decision shared by :func:`build_docs` and
+    ``ops.dedup.exact_dedup``: one map-side-combined aggregate over
+    ``(hash, key)`` giving each duplicated hash's group size and
+    first-occurrence winner key. Never shuffles full rows — survivors
+    are selected by re-joining this (tiny, AQE-broadcastable) map back
+    onto the source scan.
     """
-    agg = (hashed.groupBy(hash_col)
-           .agg(F.count("*").alias("_n"), F.min(key).alias("_wk")))
-    return agg.filter(F.col("_n") > 1) if only_dups else agg
+    return (hashed.groupBy(hash_col)
+            .agg(F.count("*").alias("_n"), F.min(key).alias("_wk"))
+            .filter(F.col("_n") > 1))
 
 
 def build_docs(transcripts: DataFrame,
-               num_partitions: Optional[int] = None) -> Tuple[DataFrame, DataFrame]:
+               num_partitions: Optional[int] = None, start_id: int = 1,
+               live: Optional[DataFrame] = None
+               ) -> Tuple[DataFrame, DataFrame]:
     """Dedup + assign ids + analyze (one fused Python stage).
 
-    Returns ``(docs, losers)``: ``docs`` carries dense 1-based ``doc_id``
-    over first-occurrence survivors; ``losers`` are the duplicate turns
-    ``(conv_id, turn_idx, text_hash)`` — join them against the written
-    docs table on ``text_hash`` to produce the reference's CONFLICT
-    report with the winning doc id (``index.py:301-305``).
+    Returns ``(docs, losers)``: ``docs`` carries dense ``doc_id`` from
+    ``start_id`` over first-occurrence survivors; ``losers`` are the
+    duplicate turns ``(conv_id, turn_idx, text_hash)``, one row each —
+    :func:`write_conflicts` resolves them to the doc holding their text,
+    the reference's CONFLICT report (``index.py:301-305``).
+
+    ``live``: the live docs of the snapshot an append extends (the
+    reference's hash-map probe). A row whose text a live doc holds is a
+    loser to that doc — its whole hash group goes, so the winners among
+    the remaining rows are those a build would pick.
 
     Dedup shape: duplicates are SPARSE in real corpora, so the dedup
     decision never shuffles full rows. A narrow aggregate over
     ``(text_hash, conv_id, turn_idx)`` (map-side combined) finds hashes
     with >1 occurrence and their first-occurrence winner key; survivors
     are then a broadcast-filtered scan (or a narrow-key shuffle join
-    past ``DEDUP_BROADCAST_LIMIT``). The only full-row shuffle in the
+    when AQE finds the map large). The only full-row shuffle in the
     whole docs path is the unavoidable range-repartition that gives
-    dense ordered ids. (The previous shape — a row_number window over
-    full rows by text_hash — shuffled and persisted the corpus twice.)
+    dense ordered ids.
 
     ``(conv_id, turn_idx)`` SHOULD be unique in the input; when it is
     not, rows sharing both the key and the text (fully identical
@@ -380,16 +354,23 @@ def build_docs(transcripts: DataFrame,
     dup_winners = (dup_winner_map(hashed, key).select("text_hash", "_wk")
                    .persist(StorageLevel.MEMORY_AND_DISK))
     joined = hashed.join(dup_winners, "text_hash", "left")
-    survivors = (joined.filter(F.col("_wk").isNull() | (key == F.col("_wk")))
-                 .drop("_wk"))
-    losers = (joined.filter(F.col("_wk").isNotNull() & (key != F.col("_wk")))
-              .select("conv_id", "turn_idx", "text_hash"))
+    won = F.col("_wk").isNull() | (key == F.col("_wk"))
+    lost = F.col("_wk").isNotNull() & (key != F.col("_wk"))
+    if live is not None:
+        # live docs are text-unique, so the probe adds no rows
+        joined = joined.join(
+            live.select("text_hash", F.lit(True).alias("_live")),
+            "text_hash", "left")
+        won = won & F.col("_live").isNull()
+        lost = lost | F.col("_live").isNotNull()
+    survivors = joined.filter(won).drop("_wk", "_live")
+    losers = joined.filter(lost).select("conv_id", "turn_idx", "text_hash")
 
     # fused id-assignment + tokenization: ONE Python stage (one worker
     # set, one Arrow round-trip) instead of two chained map stages
     try:
         ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
-            survivors, ("conv_id", "turn_idx"), num_partitions, 1,
+            survivors, ("conv_id", "turn_idx"), num_partitions, start_id,
             dedup_keys=_DEDUP_KEYS)
     except BaseException:
         dup_winners.unpersist()
@@ -401,7 +382,7 @@ def build_docs(transcripts: DataFrame,
     def fused(batches) -> Iterator:
         pos, prev = None, None
         for batch in batches:
-            batch, prev, _ = _dedup_carry_filter(batch, keys, prev)
+            batch, prev = _dedup_carry_filter(batch, keys, prev)
             if batch.num_rows == 0:
                 continue
             with_id, pos = _rank_batch(batch, pos, b_off, names)
@@ -411,16 +392,10 @@ def build_docs(transcripts: DataFrame,
     if n_dropped > 0:
         # fully-identical duplicate rows were dropped in the ranked pass
         # — surface each dropped copy in the CONFLICT report (one narrow
-        # aggregate, run only on degenerate inputs)
-        # survivorship mirror, null-safe (r4 ADVICE class): the main
-        # path left-equi-joins on text_hash (NULL hash never matches →
-        # _wk stays null → row survives), so the extra-loser condition
-        # must be the SAME left join + (_wk IS NULL OR key == _wk) —
-        # an inner join dropped null-text duplicate groups entirely
-        key_cnt = (hashed.groupBy("text_hash", "conv_id", "turn_idx")
-                   .agg(F.count("*").alias("_kc")).filter(F.col("_kc") > 1))
-        extra = (key_cnt.join(dup_winners, "text_hash", "left")
-                 .filter(F.col("_wk").isNull() | (key == F.col("_wk")))
+        # aggregate over the survivors, run only on degenerate inputs;
+        # groupBy keeps null-text groups, which an equi-join would drop)
+        extra = (survivors.groupBy("text_hash", "conv_id", "turn_idx")
+                 .agg(F.count("*").alias("_kc")).filter(F.col("_kc") > 1)
                  .withColumn("_i", F.explode(
                      F.sequence(F.lit(2), F.col("_kc"))))
                  .select("conv_id", "turn_idx", "text_hash"))
@@ -489,14 +464,14 @@ def explode_postings_with_positions(docs: DataFrame) -> DataFrame:
                          "positions array<int>")
 
 
-def build_postings(docs: DataFrame, avgdl: float,
+def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
                    block_size: int = DEFAULT_BLOCK_SIZE,
                    target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
                    n_buckets: int = DEFAULT_N_BUCKETS,
                    exploded: Optional[DataFrame] = None,
-                   term_df: Optional[DataFrame] = None,
                    store_positions: bool = False) -> DataFrame:
-    """Blocked, compressed postings from a docs DF.
+    """Blocked, compressed postings from a docs DF, ``term_df`` giving
+    each term's (term, df) for the skew split.
 
     Skew handling: term df is Zipfian; a plain ``groupBy(term)`` routes a
     head term's entire posting list to one reducer. We pre-compute df,
@@ -513,9 +488,6 @@ def build_postings(docs: DataFrame, avgdl: float,
         exploded = explode_postings_with_positions(docs)
     elif exploded is None:
         exploded = explode_postings(docs)
-    if term_df is None:
-        # df per term: map-side partial agg keeps this cheap even on skew
-        term_df = exploded.groupBy("term").agg(F.count("*").alias("df"))
     head = (
         term_df.filter(F.col("df") > target_per_split)
         .withColumn("n_splits",
@@ -578,9 +550,8 @@ def build_postings(docs: DataFrame, avgdl: float,
     return postings
 
 
-def build_token_dict(docs: Optional[DataFrame] = None,
-                     term_df: Optional[DataFrame] = None) -> DataFrame:
-    """term → (decomposed, df, term_bucket) — replaces the reference trie
+def build_token_dict(term_df: DataFrame) -> DataFrame:
+    """(term, df) → (term, df, decomposed) — replaces the reference trie
     (``trie.py:139-154``): prefix search becomes a range predicate on the
     sorted ``decomposed`` column (SURVEY §2.4 Q6)."""
 
@@ -588,10 +559,165 @@ def build_token_dict(docs: Optional[DataFrame] = None,
     def decompose_udf(s: pd.Series) -> pd.Series:
         return s.map(tk.decompose)
 
-    if term_df is None:
-        term_df = (docs.select(F.explode("tokens").alias("term"))
-                   .groupBy("term").agg(F.count("*").alias("df")))
     return term_df.withColumn("decomposed", decompose_udf("term"))
+
+
+# ---------------------------------------------------------------------------
+# Table writer — shared by the build, append and compaction
+# ---------------------------------------------------------------------------
+
+def write_conflicts(cat: IndexCatalog, losers: DataFrame,
+                    docs: Optional[DataFrame] = None,
+                    base: Optional[Snapshot] = None) -> int:
+    """Write one CONFLICT row per loser, resolved to the doc holding its
+    text: one of ``docs`` (the docs just written) or, for an append, a
+    live doc of ``base``; returns how many rows were written.
+
+    Null-hash losers exist only as dropped identical (key, null-text)
+    copies, and their winner shares the key: non-null losers resolve by
+    hash alone, null ones by key among ``docs`` (eqNullSafe keeps this a
+    hash-joinable key), never to a live doc."""
+    if base is not None:
+        cols = ("text_hash", "conv_id", "turn_idx", "doc_id")
+        live = (base.live_docs().filter(F.col("text_hash").isNotNull())
+                .select(*cols))
+        docs = live if docs is None else docs.select(*cols).unionByName(live)
+    dsel = docs.select(F.col("text_hash").alias("_dh"),
+                       F.col("conv_id").alias("_dc"),
+                       F.col("turn_idx").alias("_dt"),
+                       F.col("doc_id").alias("conflict_doc_id"))
+    cond = F.col("text_hash").eqNullSafe(F.col("_dh")) & (
+        F.col("text_hash").isNotNull()
+        | (F.col("conv_id").eqNullSafe(F.col("_dc"))
+           & F.col("turn_idx").eqNullSafe(F.col("_dt"))))
+    obs = Observation("conflicts")
+    (losers.join(dsel, cond)
+     .select("conv_id", "turn_idx", "conflict_doc_id")
+     .observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite" if base is None else "append")
+     .parquet(cat.table_path("conflicts")))
+    return int(obs.get["n"])
+
+
+def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
+                 docs_lazy: DataFrame, losers: Optional[DataFrame] = None,
+                 base: Optional[Snapshot] = None,
+                 target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
+                 write_postings: Optional[Callable] = None) -> dict:
+    """Write the tables of one docs stage — the table writer of
+    :func:`build_index`, ``ingest.append_batch`` and ``ingest.compact``:
+
+    - ``docs_lazy`` to ``paths["docs"]``, with Σ doc_len (and the doc
+      count, unless ``docs_lazy`` carries it) observed by the write;
+    - the CONFLICT report of ``losers`` (:func:`write_conflicts`) and
+      the token_dict at ``paths["token_dict"]``, as concurrent jobs;
+    - the postings at ``paths["postings"]``, or through
+      ``write_postings(docs, avgdl, term_df)``.
+
+    ``layout`` holds the manifest's ``n_buckets``, ``block_size`` and
+    ``positions``. ``base`` is the snapshot an append extends: its live
+    docs resolve conflicts, its token_dict df is added in, its
+    ``avgdl_built`` weights the blocks and conflict rows are appended;
+    otherwise blocks are weighted at the written docs' avgdl. Side jobs
+    are joined and held state released on every path. Returns
+    ``n_docs``, ``total_doc_len``, ``avgdl``, ``n_conflicts`` and the
+    ``phases`` timings.
+    """
+    spark = docs_lazy.sparkSession
+    n_buckets, block_size = int(layout["n_buckets"]), int(layout["block_size"])
+    store_positions = bool(layout.get("positions", False))
+    out: dict = {"phases": {}, "n_conflicts": 0}
+    t = time.time()
+
+    def mark(name: str) -> None:
+        nonlocal t
+        now = time.time()
+        out["phases"][name] = round(now - t, 2)
+        t = now
+
+    side_jobs = ThreadPoolExecutor(2)
+    side: list = []
+    n_docs = getattr(docs_lazy, "_konl_n_rows", None)
+    term_df = None
+    try:
+        # write docs FIRST: tokenization runs exactly once, streamed straight
+        # into the parquet write (no wide-row cache); every downstream pass
+        # (explode, segments) re-reads the columnar file with column
+        # pruning — cheaper than caching tokenized rows in the block manager.
+        # The corpus stats ride along as observe() metrics: CollectMetrics
+        # folds them into the very write pass that produces the rows, so no
+        # stats scan job remains.
+        obs = Observation("docs_stats")
+        stats = [F.sum("doc_len").alias("total_doc_len")]
+        if n_docs is None:
+            stats.append(F.count(F.lit(1)).alias("n_docs"))
+        (docs_lazy.observe(obs, *stats)
+         .write.mode("overwrite").parquet(cat.table_path(paths["docs"])))
+        mark("tokenize_write_docs")
+        docs = spark.read.parquet(cat.table_path(paths["docs"]))
+
+        # CONFLICT report is independent of everything below — run it as a
+        # concurrent job the moment the docs table exists
+        if losers is not None:
+            side.append(side_jobs.submit(write_conflicts, cat, losers, docs,
+                                         base))
+
+        # explode once; term_df feeds token_dict AND the salting decision
+        # (cached — whichever concurrent consumer runs first fills it, the
+        # other reads the cache behind the block locks)
+        exploded = explode_postings(docs)
+        term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
+                   .persist(StorageLevel.MEMORY_AND_DISK))
+
+        # token_dict write is independent of the postings build — run it as
+        # a CONCURRENT job (Spark schedules jobs from separate driver threads
+        # onto idle task slots) so its driver barrier overlaps the postings
+        # stage instead of serializing before it
+        def _write_token_dict() -> None:
+            dict_df = term_df
+            if base is not None:
+                dict_df = (base.read("token_dict").select("term", "df")
+                           .unionByName(term_df)
+                           .groupBy("term").agg(F.sum("df").alias("df")))
+            (build_token_dict(dict_df)
+             .withColumn("term_bucket", F.pmod(
+                 F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+             .repartitionByRange(max(1, n_buckets // 4), "decomposed")
+             .sortWithinPartitions("decomposed")
+             .write.mode("overwrite")
+             .parquet(cat.table_path(paths["token_dict"])))
+
+        side.append(side_jobs.submit(_write_token_dict))
+
+        # obs.get returns at once: the docs write action has completed
+        if n_docs is None:
+            n_docs = int(obs.get["n_docs"])
+        total_doc_len = float(obs.get["total_doc_len"] or 0.0)
+        avgdl = (total_doc_len / n_docs) if n_docs else 1.0
+        out.update(n_docs=n_docs, total_doc_len=total_doc_len, avgdl=avgdl)
+        mark("docs_stats")
+
+        # an append's blocks share the avgdl of the snapshot's others
+        block_avgdl = (avgdl if base is None
+                       else float(base.manifest["avgdl_built"]))
+        if write_postings is None:
+            (build_postings(docs, block_avgdl, term_df, block_size,
+                            target_per_split, n_buckets, exploded=exploded,
+                            store_positions=store_positions)
+             .write.mode("overwrite").partitionBy("term_bucket")
+             .parquet(cat.table_path(paths["postings"])))
+        else:
+            write_postings(docs, block_avgdl, term_df)
+    finally:
+        side_jobs.shutdown()  # waits: no side job outlives the call
+        if term_df is not None:
+            term_df.unpersist()
+        release(docs_lazy)
+    done = [job.result() for job in side]  # re-raises a side job's error
+    if losers is not None:
+        out["n_conflicts"] = done[0]
+    mark("write_postings_and_side_tables")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -629,135 +755,36 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
                         spark.sparkContext.defaultParallelism)
     cat = IndexCatalog(root)
     t0 = time.time()
-    phases: dict = {}
-
-    def mark(name: str, since: float) -> float:
-        now = time.time()
-        phases[name] = round(now - since, 2)
-        return now
-
-    import threading
-    side_errs: List[BaseException] = []
-
-    def _bg(fn) -> threading.Thread:
-        def run():
-            try:
-                fn()
-            except BaseException as e:  # re-raised on join below
-                side_errs.append(e)
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-        return th
-
     docs_lazy, losers = build_docs(transcripts)
-    t = mark("dedup_assign_ids", t0)
-    # released and joined on error too: no side job may outlive the call
-    side_threads: List[threading.Thread] = []
-    term_df = None
-    try:
-        # write docs FIRST: tokenization runs exactly once, streamed straight
-        # into the parquet write (no wide-row cache); every downstream pass
-        # (explode, segments) re-reads the columnar file with column
-        # pruning — cheaper than caching tokenized rows in the block manager.
-        # Σ doc_len rides along as an observe() metric (r9, guide §1/VERDICT
-        # r8 directive 2): the corpus-stats aggregation was its own scan job
-        # (the docs_stats phase — 53% serial in the r8 Amdahl attribution);
-        # CollectMetrics folds it into the very write pass that produces the
-        # rows, so the phase collapses to a metric read.
-        from pyspark.sql import Observation
-        obs = Observation("docs_stats")
-        (docs_lazy.observe(obs, F.sum("doc_len").alias("total_doc_len"))
-         .write.mode("overwrite").parquet(cat.table_path("docs")))
-        t = mark("tokenize_write_docs", t)
-        docs = spark.read.parquet(cat.table_path("docs"))
+    phases = {"dedup_assign_ids": round(time.time() - t0, 2)}
+    # n_docs / max_doc_id fall out of the ranked offsets (dense ids 1..n)
+    n_docs = int(getattr(docs_lazy, "_konl_n_rows"))
+    build_metrics: List[dict] = []
 
-        # CONFLICT report is independent of everything below — run it as a
-        # concurrent job the moment the docs table exists
-        def _write_conflicts() -> None:
-            # null-hash losers exist only via the identical-(key, null-text)
-            # extra path, and there the WINNER shares the key — so resolve
-            # non-null losers by hash alone (unchanged equi-join) and null
-            # ones by key; eqNullSafe keeps this a hash-joinable key
-            dsel = docs.select(F.col("text_hash").alias("_dh"),
-                               F.col("conv_id").alias("_dc"),
-                               F.col("turn_idx").alias("_dt"),
-                               F.col("doc_id").alias("conflict_doc_id"))
-            cond = F.col("text_hash").eqNullSafe(F.col("_dh")) & (
-                F.col("text_hash").isNotNull()
-                | (F.col("conv_id").eqNullSafe(F.col("_dc"))
-                   & F.col("turn_idx").eqNullSafe(F.col("_dt"))))
-            conflicts = (losers.join(dsel, cond)
-                         .select("conv_id", "turn_idx", "conflict_doc_id"))
-            conflicts.write.mode("overwrite").parquet(
-                cat.table_path("conflicts"))
+    def write_segments(docs: DataFrame, avgdl: float,
+                       term_df: DataFrame) -> None:
+        seg_dirs = _build_segments(
+            spark, cat, docs, avgdl, n_docs, n_docs, n_segments,
+            block_size, target_per_split, n_buckets, resume, build_metrics,
+            term_df=term_df, store_positions=store_positions)
+        merge_segments(spark, seg_dirs, cat.table_path("postings"),
+                       avgdl, block_size, n_buckets,
+                       store_positions=store_positions)
 
-        side_threads.append(_bg(_write_conflicts))
-
-        # explode once; term_df feeds token_dict AND the salting decision
-        # (cached — whichever concurrent consumer runs first fills it, the
-        # other reads the cache behind the block locks)
-        exploded = explode_postings(docs)
-        term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-
-        # token_dict write is independent of the postings build AND of the
-        # corpus stats — run it as a CONCURRENT job (Spark schedules jobs
-        # from separate driver threads onto idle task slots) so its driver
-        # barrier overlaps the stats agg + postings stage instead of
-        # serializing before them
-        def _write_token_dict() -> None:
-            token_dict = build_token_dict(term_df=term_df).withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-            (token_dict
-             .repartitionByRange(max(1, n_buckets // 4), "decomposed")
-             .sortWithinPartitions("decomposed")
-             .write.mode("overwrite").parquet(cat.table_path("token_dict")))
-
-        side_threads.append(_bg(_write_token_dict))
-
-        # n_docs / max_doc_id fall out of the ranked offsets (dense ids —
-        # no count/max agg job); Σ doc_len was observed during the docs
-        # write above, so no stats scan remains (obs.get returns instantly:
-        # the write action already completed)
-        n_docs = int(getattr(docs_lazy, "_konl_n_rows"))
-        max_doc_id = n_docs  # ids are dense 1..n_docs
-        total_doc_len = float(obs.get["total_doc_len"] or 0.0)
-        avgdl = (total_doc_len / n_docs) if n_docs else 1.0
-        t = mark("docs_stats", t)
-
-        build_metrics: List[dict] = []
-        if n_segments <= 1:
-            postings = build_postings(docs, avgdl, block_size,
-                                      target_per_split, n_buckets,
-                                      exploded=exploded, term_df=term_df,
-                                      store_positions=store_positions)
-            (postings.write.mode("overwrite").partitionBy("term_bucket")
-                     .parquet(cat.table_path("postings")))
-        else:
-            seg_dirs = _build_segments(
-                spark, cat, docs, avgdl, n_docs, max_doc_id, n_segments,
-                block_size, target_per_split, n_buckets, resume, build_metrics,
-                term_df=term_df, store_positions=store_positions)
-            merge_segments(spark, seg_dirs, cat.table_path("postings"),
-                           avgdl, block_size, n_buckets,
-                           store_positions=store_positions)
-    finally:
-        for th in side_threads:
-            th.join()
-        if term_df is not None:
-            term_df.unpersist()
-        release(docs_lazy)
-    if side_errs:
-        raise side_errs[0]
-    t = mark("write_postings_and_side_tables", t)
+    out = write_tables(
+        cat, {"n_buckets": n_buckets, "block_size": block_size,
+              "positions": store_positions},
+        {"docs": "docs", "postings": "postings", "token_dict": "token_dict"},
+        docs_lazy, losers, target_per_split=target_per_split,
+        write_postings=write_segments if n_segments > 1 else None)
+    phases.update(out["phases"])
     manifest = {
         "format_version": 1,
         "n_docs": n_docs,
-        "avgdl": avgdl,
-        "avgdl_built": avgdl,
-        "total_doc_len": total_doc_len,
-        "max_doc_id": max_doc_id,
+        "avgdl": out["avgdl"],
+        "avgdl_built": out["avgdl"],
+        "total_doc_len": out["total_doc_len"],
+        "max_doc_id": n_docs,
         "next_part": 1,
         "tables": {"docs": ["docs"], "postings": ["postings"],
                    "token_dict": ["token_dict"], "tombstones": []},
@@ -785,7 +812,7 @@ def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
                     n_docs: int, max_doc_id: int, n_segments: int,
                     block_size: int, target_per_split: int, n_buckets: int,
                     resume: bool, metrics_out: List[dict],
-                    term_df: Optional[DataFrame] = None,
+                    term_df: DataFrame,
                     store_positions: bool = False) -> List[str]:
     """Per-segment posting build with checkpoint + lineage + metrics."""
     seg_dirs = []
@@ -804,9 +831,8 @@ def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
         seg_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
         # global term_df over-estimates per-segment df → at worst a few
         # extra salt splits for head terms; saves a per-segment agg pass
-        postings = build_postings(seg_docs, avgdl, block_size,
+        postings = build_postings(seg_docs, avgdl, term_df, block_size,
                                   target_per_split, n_buckets,
-                                  term_df=term_df,
                                   store_positions=store_positions)
         postings.write.mode("overwrite").parquet(seg_dir)
         agg = spark.read.parquet(seg_dir).groupBy(

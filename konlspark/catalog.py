@@ -29,6 +29,10 @@ import tempfile
 import time
 from typing import Any, Dict, Optional
 
+# the table parts of a manifest that predates per-table part lists
+_UNVERSIONED_TABLES = {"docs": ["docs"], "postings": ["postings"],
+                       "token_dict": ["token_dict"], "tombstones": []}
+
 
 class IndexCatalog:
     """Metadata layer for one index root.
@@ -126,6 +130,48 @@ class IndexCatalog:
         d = self._marker_dir(table)
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, f"{new_last:020d}"), "w").close()
+
+
+class Snapshot:
+    """The committed manifest of one index root, read as DataFrames —
+    the one reader of the engine and of every mutation.
+
+    ``tables`` is the manifest's table → part-dir lists; a mutation
+    edits them in place and commits ``manifest``. ``refresh`` re-lists
+    each part dir's files in Spark's cache first (a reader that outlives
+    an in-place rebuild of the same root)."""
+
+    def __init__(self, spark, cat: IndexCatalog, refresh: bool = False):
+        manifest = cat.read_manifest()
+        if manifest is None:
+            raise FileNotFoundError(f"no committed index at {cat.root}")
+        self.spark, self.cat, self.manifest = spark, cat, manifest
+        self.tables = manifest.setdefault(
+            "tables", {k: list(v) for k, v in _UNVERSIONED_TABLES.items()})
+        self.tables.setdefault("df_delta", [])
+        self._refresh = refresh
+        self._read: Dict[str, Any] = {}
+
+    def read(self, name: str):
+        """One DataFrame over every part of table ``name`` (None when it
+        has none). One read per part + union: a multi-root read breaks
+        partition discovery when parts carry ``term_bucket=`` dirs;
+        filters still push into each part's scan."""
+        if name not in self._read:
+            out = None
+            for part in self.tables.get(name) or []:
+                path = self.cat.table_path(part)
+                if self._refresh:
+                    self.spark.catalog.refreshByPath(path)
+                df = self.spark.read.parquet(path)
+                out = df if out is None else out.unionByName(df)
+            self._read[name] = out
+        return self._read[name]
+
+    def live_docs(self):
+        """The docs no tombstone names."""
+        docs, tomb = self.read("docs"), self.read("tombstones")
+        return docs if tomb is None else docs.join(tomb, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------

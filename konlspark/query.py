@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from . import codec
 from . import tokenizer as tk
-from .catalog import IndexCatalog
+from .catalog import IndexCatalog, Snapshot
 from .oracle import bm25_idf
 
 
@@ -113,9 +113,8 @@ class SearchEngine:
         rebuild of the same root — DataFrames created before a rebuild
         reference replaced files (Spark caches the file listing) and
         will fail with a stale-file-index error."""
-        self.manifest = self.cat.read_manifest()
-        if self.manifest is None:
-            raise FileNotFoundError(f"no committed index at {self.cat.root}")
+        snap = Snapshot(self.spark, self.cat, refresh=True)
+        self.manifest = snap.manifest
         self.n_docs = self.manifest["n_docs"]
         self.avgdl = self.manifest["avgdl"]
         self.has_positions = bool(self.manifest.get("positions", False))
@@ -128,45 +127,24 @@ class SearchEngine:
         self.wand_safe = (
             abs(self.avgdl
                 - self.manifest.get("avgdl_built", self.avgdl)) < 1e-12
-            and not (self.manifest.get("tables") or {}).get("tombstones"))
-        tables = self.manifest.get("tables") or {
-            "docs": ["docs"], "postings": ["postings"],
-            "token_dict": ["token_dict"], "tombstones": [],
-        }
-
-        def read_parts(name):
-            # per-part read + union (multi-root partition discovery
-            # conflicts); pruning filters push into each child scan
-            paths = [self.cat.table_path(p) for p in tables[name]]
-            dfs = []
-            for p in paths:
-                self.spark.catalog.refreshByPath(p)
-                dfs.append(self.spark.read.parquet(p))
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out
-
-        self.postings = read_parts("postings")
-        self.docs = read_parts("docs")
-        self.tombstones = (read_parts("tombstones").select("doc_id")
-                           if tables.get("tombstones") else None)
-        if self.tombstones is not None:
-            self.docs = self.docs.join(self.tombstones, "doc_id", "left_anti")
+            and not snap.tables["tombstones"])
+        self.postings = snap.read("postings")
+        self.docs = snap.live_docs()
+        self.tombstones = snap.read("tombstones")
         # token_dict stays cached for the DataFrame surfaces (prefix and
         # frequency plans, log semi-joins); its replaced predecessor is
         # released first (same plan → same cache entry, so after a
         # cache() the unpersist would drop the new one too)
         if getattr(self, "token_dict", None) is not None:
             self.token_dict.unpersist()
-        token_dict = read_parts("token_dict")
-        if tables.get("df_delta"):
+        token_dict = snap.read("token_dict")
+        if snap.tables["df_delta"]:
             # fold delete-time df corrections in: live df = df − Σdelta,
             # and a term whose last live posting died DISAPPEARS from
             # every token_dict read surface (suggestions, __contains__,
             # frequency, idf) immediately — reference semantics
             # (inverted_index.py:89-95). Exact until compact resets it.
-            delta = (read_parts("df_delta")
+            delta = (snap.read("df_delta")
                      .groupBy("term").agg(F.sum("dd").alias("_dd")))
             token_dict = (
                 token_dict.join(delta, "term", "left")

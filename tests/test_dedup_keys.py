@@ -181,3 +181,41 @@ def test_append_batch_null_text_duplicate_conflict_parity(spark, tmp_root):
     assert len(null_doc) == 1
     assert (conflicts[0]["conv_id"], conflicts[0]["turn_idx"]) == ("c1", 0)
     assert conflicts[0]["conflict_doc_id"] == null_doc[0]["doc_id"]
+
+
+def _conflict_rows(spark, root):
+    return sorted((r["conv_id"], r["turn_idx"], r["conflict_doc_id"])
+                  for r in spark.read.parquet(f"{root}/conflicts").collect())
+
+
+def test_append_keeps_every_conflict_row_of_a_shared_key(spark, tmp_root):
+    """Two losers sharing one (conv_id, turn_idx) are two conflict rows,
+    in an append as in a build of the same rows."""
+    from konlspark import build, ingest
+    base = [("c0", 0, "base text")]
+    batch = [("c1", 0, "xx yy"), ("c1", 1, "zz ww"),
+             ("c1", 3, "xx yy"), ("c1", 3, "zz ww")]
+    root = f"{tmp_root}/shared_key_append"
+    build.build_index(spark, _tdf(spark, base), root)
+    res = ingest.append_batch(spark, root, _tdf(spark, batch))
+    assert res == {"indexed": 2, "conflicts": 2, "first_doc_id": 2}
+    built = f"{tmp_root}/shared_key_build"
+    build.build_index(spark, _tdf(spark, base + batch), built)
+    assert _conflict_rows(spark, built) == [("c1", 3, 2), ("c1", 3, 3)]
+    assert _conflict_rows(spark, root) == _conflict_rows(spark, built)
+
+
+def test_all_duplicate_append_writes_its_conflicts(spark, tmp_root):
+    """A batch whose every text a live doc holds indexes nothing and
+    commits no manifest, but still reports each row as a conflict."""
+    from konlspark import build, ingest
+    from konlspark.catalog import IndexCatalog
+    root = f"{tmp_root}/all_dup_append"
+    build.build_index(spark, _tdf(spark, [("c0", 0, "base text"),
+                                          ("c0", 1, "other text")]), root)
+    before = IndexCatalog(root).read_manifest()
+    res = ingest.append_batch(spark, root, _tdf(
+        spark, [("c1", 0, "base text"), ("c1", 1, "other text")]))
+    assert res == {"indexed": 0, "conflicts": 2, "first_doc_id": None}
+    assert _conflict_rows(spark, root) == [("c1", 0, 1), ("c1", 1, 2)]
+    assert IndexCatalog(root).read_manifest() == before

@@ -2,6 +2,9 @@
 compaction — pinned to the reference's WriteBatch/delete semantics
 (test_konlsearch.py:273-305, 345-368)."""
 
+import collections
+import shutil
+
 import pandas as pd
 import pytest
 
@@ -11,11 +14,21 @@ from konlspark.oracle import OracleIndex
 from konlspark.query import SearchEngine
 
 
-@pytest.fixture()
-def fresh_index(spark, tmp_path):
-    root = str(tmp_path / "idx")
+@pytest.fixture(scope="session")
+def _title_build(spark, tmp_root):
+    """The 132 titles built once; tests only ever see copies of it."""
+    root = f"{tmp_root}/ingest_title_build"
     tdf = corpus.spark_transcripts(spark, corpus.make_title_transcripts())
     build.build_index(spark, tdf, root)
+    return root
+
+
+@pytest.fixture()
+def fresh_index(_title_build, tmp_path):
+    """A private copy of the title index at a path no earlier Spark read
+    has listed."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(_title_build, root)
     return root
 
 
@@ -236,3 +249,78 @@ def test_failed_write_releases_intermediates(spark, fresh_index,
     assert [t for t in threading.enumerate() if t not in threads] == []
     made, released = broadcast_log["made"], broadcast_log["released"]
     assert {id(b) for b in released} == {id(b) for b in made}
+
+
+def _rows_df(spark, rows):
+    import datetime
+    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    return spark.createDataFrame(
+        [(c, t, "user", x, "", ts) for c, t, x in rows],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+
+
+def test_build_of_union_equals_build_then_append(spark, tmp_path):
+    """build(A ∪ B) and build(A) + append(B) give the same index when B's
+    keys sort after A's: same docs, conflicts, term df, postings and
+    query results."""
+    a = [("a0", i, t) for i, t in enumerate(TITLES[:40])]
+    a += [("a1", 0, None), ("a1", 1, TITLES[2])]
+    b = [
+        ("b0", 0, TITLES[3]),               # a text A holds
+        ("b0", 1, "새로운 문서 하나"),
+        ("b1", 0, "새로운 문서 하나"),       # in-batch duplicate
+        ("b0", 2, "같은 열쇠 첫째 문서"),
+        ("b0", 2, "같은 열쇠 둘째 문서"),    # same key, different text
+        ("b0", 3, "완전히 같은 행"),
+        ("b0", 3, "완전히 같은 행"),         # fully identical rows
+        ("b0", 4, None), ("b0", 4, None),   # identical null-text rows
+        ("b0", 5, None),
+        ("b1", 1, "같은 열쇠 첫째 문서"),
+        ("b1", 1, "새로운 문서 하나"),       # two losers, one key
+        ("b1", 2, TITLES[7]), ("b1", 2, "마법 소녀 특별 문서"),
+    ]
+    union_root, append_root = str(tmp_path / "union"), str(tmp_path / "ab")
+    build.build_index(spark, _rows_df(spark, a + b), union_root)
+    build.build_index(spark, _rows_df(spark, a), append_root)
+    n_a = spark.read.parquet(f"{append_root}/conflicts").count()
+    res = ingest.append_batch(spark, append_root, _rows_df(spark, b))
+    assert res["indexed"] + res["conflicts"] == len(b)
+
+    def snapshot(root):
+        eng = SearchEngine(spark, root)
+        conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+        return eng, {
+            "docs": sorted((r["doc_id"], r["text"] or "") for r in
+                           eng.docs.select("doc_id", "text").collect()),
+            "conflicts": collections.Counter(
+                (r["conv_id"], r["turn_idx"], r["conflict_doc_id"])
+                for r in conflicts),
+            "token_dict": sorted((r["term"], r["df"]) for r in
+                                 eng.token_dict.select("term", "df")
+                                 .collect()),
+            "postings": sorted(tuple(r) for r in eng._decode(
+                eng.postings, cols=("term", "doc_id", "tf")).collect()),
+        }
+
+    eng_u, want = snapshot(union_root)
+    eng_a, got = snapshot(append_root)
+    assert sum(got["conflicts"].values()) == n_a + res["conflicts"]
+    for table in want:
+        assert got[table] == want[table], table
+    assert eng_a.n_docs == eng_u.n_docs
+    assert abs(eng_a.avgdl - eng_u.avgdl) < 1e-12
+    top = [t for t, _ in sorted(want["token_dict"], key=lambda r: -r[1])]
+    for q in ([top[0]], top[:2], [top[1], top[3]], ["문서", "특별"]):
+        for mode in ("or", "and"):
+            assert ([r["doc_id"] for r in
+                     eng_a.search(q, mode, log=False).collect()]
+                    == [r["doc_id"] for r in
+                        eng_u.search(q, mode, log=False).collect()]), q
+        got_k = [(r["doc_id"], r["score"])
+                 for r in eng_a.bm25_topk(q, k=10).collect()]
+        want_k = [(r["doc_id"], r["score"])
+                  for r in eng_u.bm25_topk(q, k=10).collect()]
+        assert [d for d, _ in got_k] == [d for d, _ in want_k], q
+        for (_, x), (_, y) in zip(got_k, want_k):
+            assert abs(x - y) < 1e-9, q

@@ -88,8 +88,8 @@ def main() -> None:
     ap.add_argument("--turns", type=int, default=1_000_000)
     ap.add_argument("--append-turns", type=int, default=100_000)
     ap.add_argument("--delete", type=int, default=10_000)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))))
     ap.add_argument("--out", default=os.path.join(
         REPO, "BENCH", "mutation_leg_r6.json"))
     args = ap.parse_args()

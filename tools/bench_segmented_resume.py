@@ -101,8 +101,8 @@ def main() -> None:
     ap.add_argument("--turns", type=int, default=1_000_000)
     ap.add_argument("--segments", type=int, default=8)
     ap.add_argument("--kill-after", type=int, default=4)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))))
     ap.add_argument("--out", default=os.path.join(
         REPO, "BENCH", "segmented_resume_r4.json"))
     args = ap.parse_args()
