@@ -23,6 +23,7 @@ Layout of an index root:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
@@ -109,8 +110,9 @@ class IndexCatalog:
     #
     # The marker is a zero-byte file named by the last reserved seq id
     # inside ``<table>/_seq/`` (the leading underscore hides the dir
-    # from Spark's file index). Reading = one listdir; reserving = one
-    # touch — no manifest read-modify-write on the query hot path.
+    # from Spark's file index). Reading = one listdir of one file;
+    # reserving = one touch, then the lower markers are removed — no
+    # manifest read-modify-write on the query hot path.
 
     def _marker_dir(self, table: str) -> str:
         return os.path.join(self.table_path(table), "_seq")
@@ -126,10 +128,16 @@ class IndexCatalog:
     def marker_reserve(self, table: str, new_last: int) -> None:
         """Advance the high-water mark to ``new_last``. Callers reserve
         BEFORE writing the rows: a crash between the reserve and the
-        data write leaves a harmless seq gap, never a reusable range."""
+        data write leaves a harmless seq gap, never a reusable range.
+        The new marker exists before any lower one is removed, so a
+        crash in between only leaves extra markers below the max."""
         d = self._marker_dir(table)
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, f"{new_last:020d}"), "w").close()
+        for n in os.listdir(d):
+            if n.isdigit() and int(n) < new_last:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(d, n))
 
 
 class Snapshot:

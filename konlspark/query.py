@@ -16,10 +16,16 @@ plans:
   pass per binary column per batch, its scan projected to the columns
   the caller asks for, with optional per-term candidate-id block
   skipping;
-- AND/OR fold = groupBy(doc_id) count vs distinct (reference
-  ``inverted_index.py:98-116``), PHRASE = AND + first-occurrence
-  monotonicity over ``docs.first_pos`` (reference ``index.py:432-448``),
-  complex = recursive set algebra (``index.py:413-429``);
+- one request core (:meth:`SearchEngine._request`) serves boolean
+  and BM25, single and batched: AND/OR fold = per-doc count vs
+  distinct (reference ``inverted_index.py:98-116``), BM25 = per-doc
+  score sum, then order/top-k. The plan follows the query count: one
+  query folds on doc_id and sorts (BM25: ``orderBy().limit(k)``);
+  more join a broadcast (query_id, term) map, fold on (query_id,
+  doc_id) and take a two-stage per-partition top-k;
+- PHRASE = AND + first-occurrence monotonicity over ``docs.first_pos``
+  (reference ``index.py:432-448``), complex = recursive set algebra
+  (``index.py:413-429``);
 - BM25 top-k, single or batched, with one lossless pruning core
   (:meth:`SearchEngine._prune_plan`, MaxScore-style bound-then-verify):
   a driver-side df gate, one metadata-only stats job (σ and a provable
@@ -60,6 +66,14 @@ class ComplexRequest:
     condition1: Union["ComplexRequest", SearchRequest]
     condition2: Union["ComplexRequest", SearchRequest]
     mode: str  # "and" | "or"
+
+
+def _mode(mode: str, allowed: Sequence[str] = ("or", "and")) -> str:
+    """``mode`` lower-cased; ValueError unless it is one of ``allowed``."""
+    if mode.lower() not in allowed:
+        raise ValueError(f"mode must be one of {', '.join(allowed)} "
+                         f"(any case), got {mode!r}")
+    return mode.lower()
 
 
 def _holds(ids_sorted: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -256,35 +270,12 @@ class SearchEngine:
     def search(self, tokens: Sequence[str], mode: str,
                log: bool = True) -> DataFrame:
         """Returns DataFrame(doc_id) ascending — inverted_index.py:98-116."""
-        mode = mode.lower()
-        if mode == "phrase":
+        if _mode(mode, ("or", "and", "phrase")) == "phrase":
             return self._search_phrase(tokens, log=log)
-        uniq = list(dict.fromkeys(tokens))
-        meta = self._term_meta(uniq)
+        out = self._request({None: tokens}, mode)
         if log:
-            # log one entry per token OCCURRENCE (duplicates included) —
-            # reference inverted_index.py:103-109 iterates the raw query
-            # token list; the search itself uses the deduped set
-            self._log_hits(list(tokens), meta)
-        if (not meta
-                or mode == "and" and len(meta) < len(uniq)):
-            # no known term, or an AND term without postings
-            return self.spark.createDataFrame([], "doc_id long")
-        decoded = self._decode(self._blocks_for(meta), cols=("doc_id",))
-        if mode == "or":
-            return decoded.select("doc_id").distinct().orderBy("doc_id")
-        # count(*), not countDistinct(term): decoded rows are unique
-        # per (term, doc_id) by construction (each doc appears in
-        # exactly one block per term — build_postings invariant), and
-        # countDistinct plans a second aggregate level (partial
-        # distinct shuffled per (doc_id, term)) where count needs one
-        # map-side-combined pass (r9, guide §2.3)
-        return (
-            decoded.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") == len(meta))
-            .select("doc_id").orderBy("doc_id")
-        )
+            self._log_hits(tokens)
+        return out
 
     def _search_phrase(self, tokens: Sequence[str], log: bool = True) -> DataFrame:
         """AND + ordered-first-occurrence check (index.py:432-448).
@@ -430,9 +421,10 @@ class SearchEngine:
         """Recursive AND/OR set algebra over sub-searches (index.py:413-429)."""
         if isinstance(req, SearchRequest):
             return self.search(req.tokens, req.mode, log=log)
+        mode = _mode(req.mode)
         r1 = self.search_complex(req.condition1, log=log)
         r2 = self.search_complex(req.condition2, log=log)
-        if req.mode == "and":
+        if mode == "and":
             return r1.intersect(r2).orderBy("doc_id")
         return r1.union(r2).distinct().orderBy("doc_id")
 
@@ -465,34 +457,7 @@ class SearchEngine:
         With ``use_wand`` an OR query decodes only the blocks the
         pruning planner (:meth:`_prune_plan`) keeps; results equal the
         unpruned plan's."""
-        uniq = list(dict.fromkeys(tokens))
-        meta = self._term_meta(uniq)
-        if (not meta or k <= 0
-                or mode == "and" and len(meta) < len(uniq)):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        idf = {t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
-
-        def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
-            # term count only when AND needs it, and count(1) rather
-            # than countDistinct: decoded rows are unique per (term,
-            # doc_id) (one block per doc per term — build invariant),
-            # and countDistinct plans a second aggregate level over
-            # every decoded posting (r9, guide §2.3)
-            agg = [F.sum("score").alias("score")]
-            if mode == "and":
-                agg.append(F.count(F.lit(1)).alias("_nt"))
-            scored = (self._decode(blocks, idf, cols=("doc_id", "score"),
-                                   cand=cand)
-                      .groupBy("doc_id").agg(*agg))
-            if mode == "and":
-                scored = scored.filter(F.col("_nt") == len(meta))
-            return (scored.select("doc_id", "score")
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k))
-
-        return self._run_pruned(top, meta, {"q": list(meta)}, k,
-                                use_wand and mode == "or",
-                                "doc_id long, score double")
+        return self._request({None: tokens}, mode, k, use_wand)
 
     # -- batched multi-query execution ---------------------------------------
     # A production engine over this index serves a query LOG, not one
@@ -508,71 +473,11 @@ class SearchEngine:
     # set onto one task). The reference fires its suite back-to-back
     # (test_konlsearch.py:191-254); this is the cluster analogue.
 
-    def _batch_qmap(self, queries: Dict[str, Sequence[str]], mode: str):
-        """Driver-side prep shared by the batch paths: term metadata for
-        the union of query terms, plus the (query_id, term) fan-out rows
-        and per-query required-term counts. AND queries with a term
-        absent from the index are dropped here (their result is empty by
-        definition — reference inverted_index.py:110-113)."""
-        meta_all = self._term_meta(
-            [t for ts in queries.values() for t in ts])
-        rows, nreq = [], {}
-        for qid, tokens in queries.items():
-            uniq = list(dict.fromkeys(tokens))
-            known = [t for t in uniq if t in meta_all]
-            if not known or (mode == "and" and len(known) < len(uniq)):
-                continue
-            nreq[qid] = len(known)
-            rows.extend((qid, t) for t in known)
-        meta = {t: meta_all[t] for _, t in rows}
-        return meta, rows, nreq
-
-    def _batch_joined(self, meta, rows, nreq, mode: str, with_scores: bool,
-                      blocks: Optional[DataFrame] = None,
-                      cand: Optional[Broadcast] = None
-                      ) -> Optional[DataFrame]:
-        """(query_id, doc_id[, score]) rows — decode once per distinct
-        term (``blocks``, default every block of ``meta``'s terms, with
-        :meth:`_decode`'s ``cand``), broadcast the tiny query map, keep
-        AND-complete docs."""
-        if not rows:
-            return None
-        idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
-               if with_scores else None)
-        decoded = self._decode(
-            self._blocks_for(meta) if blocks is None else blocks, idf,
-            cols=("term", "doc_id") + (("score",) if with_scores else ()),
-            cand=cand)
-        qmap = self.spark.createDataFrame(rows, "query_id string, term string")
-        joined = decoded.join(F.broadcast(qmap), "term")
-        # count(1) == distinct terms here: decoded is unique per
-        # (term, doc_id) and qmap per (query_id, term), so the join
-        # yields one row per (query_id, doc_id, term); _nt is needed
-        # only for the AND filter (r9 — same reasoning as bm25_topk)
-        agg = ([F.count(F.lit(1)).alias("_nt")] if mode == "and" else [])
-        if with_scores:
-            agg.append(F.sum("score").alias("score"))
-        scored = (joined.groupBy("query_id", "doc_id").agg(*agg) if agg
-                  else joined.select("query_id", "doc_id").distinct())
-        if mode == "and":
-            nreq_df = self.spark.createDataFrame(
-                list(nreq.items()), "query_id string, _nreq int")
-            scored = (scored.join(F.broadcast(nreq_df), "query_id")
-                      .filter(F.col("_nt") == F.col("_nreq")))
-        cols = ["query_id", "doc_id"] + (["score"] if with_scores else [])
-        return scored.select(*cols)
-
     def search_batch(self, queries: Dict[str, Sequence[str]],
                      mode: str = "or") -> DataFrame:
         """B boolean queries in one plan → DataFrame(query_id, doc_id),
         per-query rows identical to :meth:`search` (mode "or"/"and")."""
-        mode = mode.lower()
-        meta, rows, nreq = self._batch_qmap(queries, mode)
-        out = self._batch_joined(meta, rows, nreq, mode, with_scores=False)
-        if out is None:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long")
-        return out.orderBy("query_id", "doc_id")
+        return self._request(queries, mode)
 
     def bm25_topk_batch(self, queries: Dict[str, Sequence[str]],
                         k: int = 10, mode: str = "or",
@@ -587,24 +492,9 @@ class SearchEngine:
         pruning planner as :meth:`bm25_topk` (:meth:`_prune_plan`): at
         the 100 TB target a batch holding one rare+head query would
         otherwise decode the head term's 10^9+ postings fully for the
-        whole batch. When candidate pruning engages, the B×k result rows
-        are collected and rebuilt as a local DataFrame so the candidate
-        broadcast can be released; B×k is small by construction, and
-        every other plan stays lazy."""
-        mode = mode.lower()
-        schema = "query_id string, doc_id long, score double"
-        if k <= 0:
-            return self.spark.createDataFrame([], schema)
-        meta, rows, nreq = self._batch_qmap(queries, mode)
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-
-        def top(blocks: DataFrame, cand: Optional[Broadcast]) -> DataFrame:
-            return self._batch_topk(self._batch_joined(
-                meta, rows, nreq, mode, True, blocks, cand), k)
-
-        return self._run_pruned(top, meta, queries, k,
-                                use_wand and mode == "or", schema)
+        whole batch. Candidate pruning collects the B×k result rows
+        (:meth:`_request`)."""
+        return self._request(queries, mode, k, use_wand)
 
     def _batch_topk(self, scored: DataFrame, k: int) -> DataFrame:
         """Two-stage partial top-k per query over (query_id, doc_id,
@@ -627,29 +517,90 @@ class SearchEngine:
                         F.col("_s.score").alias("score"))
                 .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
 
-    def _run_pruned(self, top, meta: Dict[str, dict],
-                    queries: Dict[str, Sequence[str]], k: int, prune: bool,
-                    schema: str) -> DataFrame:
-        """``top(blocks, cand)`` over the blocks of ``meta``'s terms,
-        pruned by :meth:`_prune_plan` when ``prune`` and a plan exists.
-        A candidate broadcast makes the result eager: it is collected
-        (Arrow, so the rebuilt local DataFrame costs no job) and the
-        broadcast released on every path, success or error."""
+    def _request(self, queries: Dict[Optional[str], Sequence[str]],
+                 mode: str, k: Optional[int] = None,
+                 use_wand: bool = False) -> DataFrame:
+        """The one request core of :meth:`search`, :meth:`bm25_topk` and
+        their batch forms (query id None: a single call, no query_id
+        column): (query_id, doc_id) by (query_id, doc_id), or with ``k``
+        each query's BM25 top-k, desc score, ties by ascending doc_id.
+        An AND query with an unindexed term matches nothing
+        (inverted_index.py:110-113) and is dropped on the driver. One
+        query left folds on doc_id and sorts; more join a broadcast
+        (query_id, term) map and take :meth:`_batch_topk`. A candidate
+        broadcast from :meth:`_prune_plan` makes the result eager:
+        collected (Arrow, no job to rebuild) and released on any path."""
+        mode = _mode(mode)
+        score = ["score"] if k is not None else []
+        schema = ("" if None in queries else "query_id string, ") + (
+            "doc_id long" + (", score double" if score else ""))
+        meta = self._term_meta([t for ts in queries.values() for t in ts])
+        qterms = {}
+        for qid, tokens in queries.items():
+            uniq = list(dict.fromkeys(tokens))
+            known = [t for t in uniq if t in meta]
+            if known and (mode == "or" or len(known) == len(uniq)):
+                qterms[qid] = known
+        if not qterms or score and k <= 0:
+            return self.spark.createDataFrame([], schema)
+        meta = {t: meta[t] for ts in qterms.values() for t in ts}
+        idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
+               if score else None)
+        plan = (self._prune_plan(qterms, meta, k)
+                if use_wand and mode == "or" and self.wand_safe else None)
+        keep, cand = plan or (None, None)
         blocks = self._blocks_for(meta)
-        plan = (self._prune_plan(queries, meta, k)
-                if prune and self.wand_safe else None)
-        if plan is None:
-            return top(blocks, None)
-        keep, cand = plan
         if keep is not None:
             blocks = blocks.filter(keep)
-        if not cand:
-            return top(blocks, None)
-        b_cand = self.spark.sparkContext.broadcast(cand)
+        b_cand = self.spark.sparkContext.broadcast(cand) if cand else None
         try:
-            pdf = top(blocks, b_cand).toPandas()
+            if len(qterms) == 1:
+                keys = ["doc_id"]
+                rows = self._decode(blocks, idf, cols=("doc_id", *score),
+                                    cand=b_cand)
+            else:
+                keys = ["query_id", "doc_id"]
+                qmap = self.spark.createDataFrame(
+                    [(q, t) for q, ts in qterms.items() for t in ts],
+                    "query_id string, term string")
+                rows = (self._decode(blocks, idf, cand=b_cand,
+                                     cols=("term", "doc_id", *score))
+                        .join(F.broadcast(qmap), "term"))
+            # count(1), not countDistinct(term): decoded rows are unique
+            # per (term, doc_id) (one block per doc per term — build
+            # invariant) and qmap per (query_id, term); countDistinct
+            # plans a second aggregate level over every decoded posting
+            # (r9, guide §2.3)
+            agg = [F.sum("score").alias("score")] if score else []
+            if mode == "and":
+                agg.append(F.count(F.lit(1)).alias("_nt"))
+            rows = (rows.groupBy(*keys).agg(*agg) if agg
+                    else rows.select(*keys).distinct())
+            if mode == "and" and len(qterms) == 1:
+                rows = rows.filter(F.col("_nt") == len(meta))
+            elif mode == "and":
+                nreq = self.spark.createDataFrame(
+                    [(q, len(ts)) for q, ts in qterms.items()],
+                    "query_id string, _nreq int")
+                rows = (rows.join(F.broadcast(nreq), "query_id")
+                        .filter(F.col("_nt") == F.col("_nreq")))
+            rows = rows.select(*keys, *score)
+            if len(qterms) > 1:
+                out = (self._batch_topk(rows, k) if score
+                       else rows.orderBy(*keys))
+            else:
+                out = (rows.orderBy(F.desc("score"), F.asc("doc_id"))
+                       .limit(k) if score else rows.orderBy("doc_id"))
+                if None not in queries:
+                    out = out.select(
+                        F.lit(next(iter(qterms))).alias("query_id"),
+                        *out.columns)
+            if b_cand is None:
+                return out
+            pdf = out.toPandas()
         finally:
-            b_cand.unpersist()
+            if b_cand is not None:
+                b_cand.unpersist()
         return self.spark.createDataFrame(pdf, schema)
 
     def _prune_plan(self, queries: Dict[str, Sequence[str]],
@@ -922,10 +873,11 @@ class SearchEngine:
         df.coalesce(1).write.mode("append").parquet(
             self.cat.table_path("query_log"))
 
-    def _log_hits(self, tokens: Sequence[str], meta: Dict[str, dict]) -> None:
+    def _log_hits(self, tokens: Sequence[str]) -> None:
         """Append (token, 1) per query-token occurrence with ≥1 hit
-        (inverted_index.py:107-109; duplicates in one query each log)."""
-        hits = [t for t in tokens if t in meta]
+        (inverted_index.py:107-109; duplicates in one query each log),
+        whether or not the query matched."""
+        hits = [t for t in tokens if t in self._terms]
         if hits:
             self._append_log(hits)
 

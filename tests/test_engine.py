@@ -316,6 +316,58 @@ def test_batch_bm25_empty_and_k0(zeng):
     assert zeng.search_batch({"q": ["없는단어쿼리"]}, "and").count() == 0
 
 
+@pytest.mark.parametrize("tokens", [["마법", "특별"], ["같은", "비스크", "마법"],
+                                    ["마법", "없는말"]])
+def test_batch_of_one_runs_the_single_plan(eng, count_jobs, tokens):
+    """A one-query batch returns the single call's rows with query_id
+    added, and launches the single call's jobs (no qmap join, no
+    two-stage top-k)."""
+    def run(make):
+        rows = []
+        n = count_jobs(lambda: rows.extend(map(tuple, make().collect())))
+        return n, rows
+
+    cases = [(lambda m=m: eng.search(tokens, m, log=False),
+              lambda m=m: eng.search_batch({"q": tokens}, m))
+             for m in ("or", "and")]
+    cases += [(lambda m=m, k=k: eng.bm25_topk(tokens, k=k, mode=m),
+               lambda m=m, k=k: eng.bm25_topk_batch({"q": tokens}, k=k,
+                                                    mode=m))
+              for m in ("or", "and") for k in (0, 3, 10)]
+    for single, batch in cases:
+        (n1, rows1), (nb, rowsb) = run(single), run(batch)
+        assert rowsb == [("q",) + r for r in rows1]
+        assert nb == n1
+
+
+_MODE_Q = ["는", "은"]
+
+
+@pytest.mark.parametrize("surface", ["search", "search_batch", "bm25_topk",
+                                     "bm25_topk_batch", "search_complex"])
+def test_mode_any_case_and_unknown_rejected(eng, surface):
+    """Every surface reads or/and in any case, and raises on any other
+    mode instead of silently running a different one."""
+    q = _MODE_Q
+    run = {
+        "search": lambda m: ids(eng.search(q, m, log=False)),
+        "search_batch": lambda m: ids(eng.search_batch({"q": q}, m)),
+        "bm25_topk": lambda m: ids(eng.bm25_topk(q, k=50, mode=m)),
+        "bm25_topk_batch": lambda m: ids(eng.bm25_topk_batch(
+            {"q": q}, k=50, mode=m)),
+        "search_complex": lambda m: ids(eng.search_complex(ComplexRequest(
+            SearchRequest(q[:1], "or"), SearchRequest(q[1:], "or"), m),
+            log=False)),
+    }[surface]
+    assert run("AND") == run("and") != run("Or") == run("or")
+    bad = ["xor"] + (["phrase"] if surface != "search" else [])
+    for mode in bad:
+        with pytest.raises(ValueError, match="mode"):
+            run(mode)
+    if surface == "search":
+        assert run("PHRASE") == run("phrase")
+
+
 def test_lean_decode_matches_full_decode(zeng):
     """Every projection of the one `_decode` equals the same columns of
     its full (term, doc_id, tf, score) output. Boolean search reads the

@@ -14,12 +14,23 @@ def test_non_local_root_fails_loudly():
 
 
 def test_marker_reserve_and_last(tmp_root):
+    """Each reserve replaces the marker before it: the directory holds
+    one file however many searches were logged, and a marker left
+    below the max (a crash before the cleanup) is read past and then
+    removed by the next reserve."""
     from konlspark.catalog import IndexCatalog
     cat = IndexCatalog(f"{tmp_root}/marker_cat")
+    d = cat._marker_dir("query_log")
     assert cat.marker_last("query_log") == 0
-    cat.marker_reserve("query_log", 7)
-    cat.marker_reserve("query_log", 12)
-    assert cat.marker_last("query_log") == 12
+    for last in (7, 12, 13, 25):
+        cat.marker_reserve("query_log", last)
+    assert cat.marker_last("query_log") == 25
+    assert os.listdir(d) == [f"{25:020d}"]
+    open(os.path.join(d, f"{20:020d}"), "w").close()
+    assert cat.marker_last("query_log") == 25
+    cat.marker_reserve("query_log", 30)
+    assert os.listdir(d) == [f"{30:020d}"]
+    assert cat.marker_last("query_log") == 30
 
 
 def test_seq_gap_never_double_counts(spark, title_index):

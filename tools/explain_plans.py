@@ -6,7 +6,9 @@ the plan properties we design for (SURVEY §4.2):
 - docs point/range get: PushedFilters on doc_id;
 - token_dict prefix scan: pushed StartsWith;
 - OR/AND fold and BM25 agg: hash aggregate with partial (map-side)
-  aggregation, whole-stage codegen spans around the decode UDF.
+  aggregation, whole-stage codegen spans around the decode UDF;
+- a one-query BM25 batch: the single-query plan (TakeOrderedAndProject,
+  no two-stage per-query top-k).
 
 Usage: python tools/explain_plans.py [index_root]
 """
@@ -55,6 +57,11 @@ def main() -> None:
     show("BM25 top-k (exact)", eng.bm25_topk(["마법", "특별"], k=10,
                                              use_wand=False),
          ["TakeOrderedAndProject", "HashAggregate"])
+    # a batch of one runs the single-query plan: no two-stage
+    # collect_list top-k (ObjectHashAggregate) for one query
+    show("BM25 top-k, batch of one (single-query plan)",
+         eng.bm25_topk_batch({"q": ["마법", "특별"]}, k=10, use_wand=False),
+         ["TakeOrderedAndProject", "!ObjectHashAggregate"])
     # the WAND/MaxScore metadata pass must be a two-stage PARTIAL
     # top-k (per-(term, input-partition) aggregate, then a merge of ≤k
     # survivors) — a Window over `term` is a single-task sort on a head
