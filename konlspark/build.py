@@ -11,31 +11,34 @@ table writer (:func:`write_tables`).
   for an append, loses every row whose text a live doc holds); losers
   become a CONFLICT side-output with the winner's doc id
   (reference ``index.py:301-305``);
-- **doc-id assignment (B1) + tokenize**: dense ids in stable
-  ``(conv_id, turn_idx)`` order, computed scalably as
-  range-repartition → per-partition counts → cumulative offsets →
-  per-partition rank, fused with tokenization in one ``mapInArrow``
-  pass — no single-task global window, no per-row Python UDFs;
+- **doc-id assignment (B1) + tokenize**: :func:`rank` gives dense ids
+  in stable ``(conv_id, turn_idx)`` order as range-repartition → one
+  Arrow count pass per partition → cumulative offsets → per-partition
+  rank, fused with tokenization in one ``mapInArrow`` pass — no
+  single-task global window, no per-row Python UDFs. The query log's
+  seq ids come from the same :func:`rank`;
 - **posting build (B3)**: explode → *salted* repartition-by-term
   (explicit skew split for head terms; AQE does not fix groupBy skew) →
   per-group sort → delta+varint block encoding (``codec``) with
   per-block max-score metadata for block-max WAND;
 - **resumable segmented build (B8/B7)**: postings built per doc-id-range
-  segment with a fingerprinted checkpoint + metrics (terms/sec,
-  postings/partition, skew ratio) per segment, then merged with
-  ``sortWithinPartitions`` segment merges.
+  segment with a checkpoint + metrics (terms/sec, postings/partition,
+  skew ratio) per segment, fingerprinted by the docs' content digest
+  and the block layout, then merged with ``sortWithinPartitions``
+  segment merges.
 """
 
 from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,12 +55,6 @@ DEFAULT_BLOCK_SIZE = 128
 # superlinear encode time growth at 4M+ turns (straggler groups)
 DEFAULT_TARGET_POSTINGS_PER_SPLIT = 50_000
 DEFAULT_N_BUCKETS = 32
-
-_ANALYZED_EXTRA = (
-    "text_hash string, tokens array<string>, tfs array<int>, "
-    "doc_len int, first_pos array<int>"
-)
-
 
 # ---------------------------------------------------------------------------
 # Tokenize (P1-P4) — one Arrow pass
@@ -109,184 +106,141 @@ def _analyze_record_batch(batch) -> "object":
 def _analyzed_schema(schema: T.StructType) -> T.StructType:
     return T.StructType.fromDDL(
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
-        + ", " + _ANALYZED_EXTRA.replace("text_hash string, ", ""))
+        + ", tokens array<string>, tfs array<int>, doc_len int, "
+        "first_pos array<int>")
 
 
 # ---------------------------------------------------------------------------
 # Doc-id assignment (B1) — two-pass, no single-task window
 # ---------------------------------------------------------------------------
 
-def assign_doc_ids(df: DataFrame, order_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-                   num_partitions: Optional[int] = None,
-                   start_id: int = 1) -> DataFrame:
-    """Dense ids ``start_id..`` in global ``order_cols`` order.
+@dataclass
+class Ranked:
+    """What :func:`rank` returns: ``df`` (lazy, the input's columns plus
+    ``doc_id``), its row count ``n_rows`` (``None`` when unknown, as for
+    compaction's live docs), ``n_dropped`` duplicate-key rows, and the
+    cached state ``df`` reads (``held``). Call :meth:`release` once
+    ``df`` has been consumed, on success and on error alike."""
+    df: DataFrame
+    n_rows: Optional[int] = None
+    n_dropped: int = 0
+    held: tuple = ()
 
-    Range-repartition by the order key, count rows per partition (tiny
-    collect), broadcast cumulative offsets back, then rank *within* each
-    partition — every stage is parallel; the only driver-side data is
-    one count per partition. The input is persisted so both passes see
-    the same partitioning (repartitionByRange samples its boundaries).
-    """
-    ranged, b_off, out_schema, _, n_rows = _prepare_ranked(
-        df, order_cols, num_partitions, start_id)
-    names = [f.name for f in out_schema]
-
-    def rank_partition(batches) -> Iterator:
-        # rows arrive in sorted order within the partition; ids are the
-        # partition's cumulative offset + local position (no shuffle, no
-        # window — a pure Arrow map stage over the persisted data)
-        pos = None
-        for batch in batches:
-            if batch.num_rows:
-                out, pos = _rank_batch(batch, pos, b_off, names)
-                yield out
-
-    out = ranged.mapInArrow(rank_partition, out_schema)
-    out._konl_held = ranged, b_off  # type: ignore[attr-defined]
-    out._konl_n_rows = n_rows  # type: ignore[attr-defined]
-    return out
+    def release(self) -> None:
+        for h in self.held:
+            h.unpersist()
 
 
-def release(df: DataFrame) -> None:
-    """Unpersist what :func:`assign_doc_ids` or :func:`build_docs`
-    holds for ``df`` (the range-partitioned input, the offsets
-    broadcast, the dedup winner map); call once ``df`` has been
-    consumed, on success and on error alike."""
-    for held in getattr(df, "_konl_held", ()):
-        held.unpersist()
-
-
-def _dedup_carry_filter(batch, key_names, prev):
-    """Drop rows equal to their predecessor on ``key_names`` (batch-
-    boundary aware: ``prev`` is the last key tuple of the previous
-    batch). Rows must arrive sorted by the keys (equal runs adjacent).
-    Returns ``(filtered_batch, new_prev)``."""
+def _survivors(batches, keys) -> Iterator:
+    """``(batch, kept)`` per non-empty batch of one sorted partition:
+    ``kept`` is ``batch`` less each row equal to its predecessor (across
+    batches too) on all of ``keys`` — no row when ``keys`` is empty.
+    Both passes of :func:`rank` filter through this, so the count pass
+    counts exactly the rows the rank pass numbers."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    n = batch.num_rows
-    if n == 0:
-        return batch, prev
-    cols = [batch.column(batch.schema.get_field_index(k)) for k in key_names]
-    keep = np.ones(n, dtype=bool)
-    if n > 1:
-        eq = None
+    prev = None
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0 or not keys:
+            if n:
+                yield batch, batch
+            continue
+        cols = [batch.column(k) for k in keys]
+        dup = np.ones(n, dtype=bool)
         for c in cols:
             a, b = c.slice(1), c.slice(0, n - 1)
-            # null-safe equality (null == null → equal), matching the
-            # countDistinct-over-struct semantics of the paired count
-            # pass: pc.equal yields null when either side is null (a
-            # null text → null sha2 text_hash), and `~None` raised
-            # TypeError below, failing the whole build on one null key
-            e = pc.fill_null(
+            # null-safe equality (null == null → equal): pc.equal alone
+            # yields null when either side is null (a null text → null
+            # sha2 text_hash)
+            dup[1:] &= pc.fill_null(
                 pc.or_kleene(pc.equal(a, b),
                              pc.and_(pc.is_null(a), pc.is_null(b))),
-                False)
-            eq = e if eq is None else pc.and_(eq, e)
-        keep[1:] = ~eq.to_numpy(zero_copy_only=False)
-    if prev is not None:
-        first = tuple(c[0].as_py() for c in cols)
-        if first == prev:
-            keep[0] = False
-    new_prev = tuple(c[n - 1].as_py() for c in cols)
-    return (batch if keep.all() else batch.filter(pa.array(keep))), new_prev
+                False).to_numpy(zero_copy_only=False)
+        dup[0] = prev == tuple(c[0].as_py() for c in cols)
+        prev = tuple(c[n - 1].as_py() for c in cols)
+        yield batch, batch.filter(pa.array(~dup)) if dup.any() else batch
 
 
-def _prepare_ranked(df: DataFrame, order_cols, num_partitions, start_id,
-                    dedup_keys: Optional[Tuple[str, ...]] = None):
-    """Range-partition + sort + per-partition offsets (the two-pass
-    half of doc-id assignment, shared by the plain and fused paths).
+def rank(df: DataFrame, order_cols: Tuple[str, ...], start_id: int = 1,
+         dedup_keys: Tuple[str, ...] = (), analyze: bool = False) -> Ranked:
+    """Dense ids ``start_id..`` (column ``doc_id``) in global
+    ``order_cols`` order.
 
-    ``dedup_keys``: when set, rows equal on ALL of them keep exactly one
-    survivor — closing the duplicate-``(conv_id, turn_idx)`` hole where
-    two input rows with identical key AND identical text both pass the
-    winner-key dedup filter (no pure row expression can break that tie).
-    The keys are appended to the within-partition sort so equal rows are
-    adjacent and the rank pass drops run-repeats deterministically; the
-    count pass counts the SAME survivors as ``countDistinct`` over the
-    keys per partition — pure JVM (hash-distinct, no Python round-trip),
-    and provably equal to what the rank pass emits (distinct key tuples
-    per partition), so ids stay dense.
+    Range-repartition by the order key, sort within partitions and
+    persist (so both passes see the boundaries repartitionByRange
+    samples). One Arrow pass counts each partition's rows (a tiny
+    collect); with the cumulative offsets broadcast, one ``mapInArrow``
+    numbers each partition from its offset. No stage is single-task.
 
-    Returns ``(ranged, b_off, out_schema, n_dup_dropped, n_rows)`` —
-    ``n_rows`` is the post-dedup row count (ids are dense ``start_id ..
-    start_id + n_rows - 1``, so callers need no count/max agg job).
+    ``dedup_keys``: rows equal on ALL of them keep one survivor (two
+    rows sharing ``(conv_id, turn_idx)`` AND text both pass the
+    winner-key dedup, and no row expression can break that tie). The
+    keys extend the within-partition sort so such rows are adjacent;
+    ``n_dropped`` counts the repeats :func:`_survivors` drops.
+    ``analyze`` tokenizes in the rank pass, which makes the docs stage
+    one Python stage.
     """
+    import pyarrow as pa
     spark = df.sparkSession
-    parts = num_partitions or spark.conf.get("spark.sql.shuffle.partitions")
-    sort_cols = list(order_cols) + [k for k in (dedup_keys or ())
-                                    if k not in order_cols]
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = list(dedup_keys)
     ranged = (
-        df.repartitionByRange(int(parts), *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*sort_cols)
+        df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols,
+                              *[k for k in keys if k not in order_cols])
         .withColumn("_pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+
+    def count_fn(batches):
+        pid, cnt, tot = -1, 0, 0
+        for batch, kept in _survivors(batches, keys):
+            if pid < 0:
+                pid = int(batch.column("_pid")[0].as_py())
+            tot += batch.num_rows
+            cnt += kept.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pid], pa.int32()), pa.array([cnt], pa.int64()),
+             pa.array([tot], pa.int64())], names=["_pid", "cnt", "tot"])
+
     try:
-        n_dropped = 0
-        if dedup_keys is None:
-            counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid")
-                      .agg(F.count("*").alias("cnt")).collect()}
-        else:
-            # survivor count per partition via the SAME adjacent-run filter
-            # the rank pass applies (r9, VERDICT r8 directive 2): the old
-            # countDistinct-over-struct formulation shuffled one wide
-            # (conv_id, turn_idx, 64-char hash) row per distinct key —
-            # ~n_rows rows, a second near-full exchange of the corpus keys
-            # (~31 core-s at 1M turns). Rows are sorted by exactly the
-            # dedup keys within each partition, so distinct == adjacent
-            # runs, and counting through _dedup_carry_filter itself makes
-            # count-vs-rank equality hold by shared code rather than by
-            # argument (null-safe included). One narrow Arrow map pass,
-            # zero shuffle, one output row per partition.
-            keys = list(dedup_keys)
-
-            def count_fn(batches):
-                import pyarrow as pa
-                prev, pid, cnt, tot = None, None, 0, 0
-                for batch in batches:
-                    if batch.num_rows == 0:
-                        continue
-                    if pid is None:
-                        pid = int(batch.column(
-                            batch.schema.get_field_index("_pid"))[0].as_py())
-                    tot += batch.num_rows
-                    kept, prev = _dedup_carry_filter(batch, keys, prev)
-                    cnt += kept.num_rows
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([-1 if pid is None else pid], pa.int32()),
-                     pa.array([cnt], pa.int64()), pa.array([tot], pa.int64())],
-                    names=["_pid", "cnt", "tot"])
-
-            rows = (ranged.select("_pid", *keys)
-                    .mapInArrow(count_fn, "_pid int, cnt long, tot long")
-                    .collect())
-            counts = {r["_pid"]: r["cnt"] for r in rows if r["_pid"] >= 0}
-            n_dropped = sum(r["tot"] - r["cnt"] for r in rows)
+        rows = (ranged.select("_pid", *keys)
+                .mapInArrow(count_fn, "_pid int, cnt long, tot long")
+                .collect())
     except BaseException:
         ranged.unpersist()
         raise
     offsets, acc = {}, start_id - 1
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    for r in sorted(r for r in rows if r["_pid"] >= 0):
+        offsets[r["_pid"]] = acc
+        acc += r["cnt"]
     b_off = spark.sparkContext.broadcast(offsets)
-    out_schema = T.StructType(
+    ids_schema = T.StructType(
         [f for f in ranged.schema if f.name != "_pid"]
         + [T.StructField("doc_id", T.LongType(), False)])
-    return ranged, b_off, out_schema, n_dropped, acc - (start_id - 1)
+    names = [f.name for f in ids_schema]
 
+    def rank_fn(batches) -> Iterator:
+        # rows arrive in sorted order within the partition; ids are the
+        # partition's cumulative offset + local position (no shuffle, no
+        # window — a pure Arrow map stage over the persisted data)
+        pos = None
+        for kept in (k for _, k in _survivors(batches, keys) if k.num_rows):
+            if pos is None:
+                pos = b_off.value[int(kept.column("_pid")[0].as_py())]
+            n = kept.num_rows
+            out = pa.RecordBatch.from_arrays(
+                [kept.column(c) for c in names[:-1]]
+                + [pa.array(np.arange(pos + 1, pos + 1 + n, dtype=np.int64))],
+                names=names)
+            pos += n
+            yield _analyze_record_batch(out) if analyze else out
 
-def _rank_batch(batch, pos, b_off, names):
-    """Append dense doc ids to one sorted Arrow batch; returns
-    (ranked_batch, next_pos)."""
-    import pyarrow as pa
-    n = batch.num_rows
-    if pos is None:
-        pid_idx = batch.schema.get_field_index("_pid")
-        pos = b_off.value[int(batch.column(pid_idx)[0].as_py())]
-    arrays = [batch.column(c) for c in names[:-1]]
-    arrays.append(pa.array(np.arange(pos + 1, pos + 1 + n, dtype=np.int64)))
-    return pa.RecordBatch.from_arrays(arrays, names=names), pos + n
+    out_schema = _analyzed_schema(ids_schema) if analyze else ids_schema
+    return Ranked(ranged.mapInArrow(rank_fn, out_schema),
+                  acc - (start_id - 1), sum(r["tot"] - r["cnt"] for r in rows),
+                  (ranged, b_off))
 
 
 # ---------------------------------------------------------------------------
@@ -310,14 +264,13 @@ def dup_winner_map(hashed: DataFrame, key,
             .filter(F.col("_n") > 1))
 
 
-def build_docs(transcripts: DataFrame,
-               num_partitions: Optional[int] = None, start_id: int = 1,
-               live: Optional[DataFrame] = None
-               ) -> Tuple[DataFrame, DataFrame]:
+def build_docs(transcripts: DataFrame, start_id: int = 1,
+               live: Optional[DataFrame] = None) -> Tuple[Ranked, DataFrame]:
     """Dedup + assign ids + analyze (one fused Python stage).
 
-    Returns ``(docs, losers)``: ``docs`` carries dense ``doc_id`` from
-    ``start_id`` over first-occurrence survivors; ``losers`` are the
+    Returns ``(docs, losers)``: ``docs`` is the :class:`Ranked` handle
+    of the first-occurrence survivors, ids from ``start_id`` (its
+    ``held`` includes the dedup winner map); ``losers`` are the
     duplicate turns ``(conv_id, turn_idx, text_hash)``, one row each —
     :func:`write_conflicts` resolves them to the doc holding their text,
     the reference's CONFLICT report (``index.py:301-305``).
@@ -327,20 +280,16 @@ def build_docs(transcripts: DataFrame,
     loser to that doc — its whole hash group goes, so the winners among
     the remaining rows are those a build would pick.
 
-    Dedup shape: duplicates are SPARSE in real corpora, so the dedup
-    decision never shuffles full rows. A narrow aggregate over
-    ``(text_hash, conv_id, turn_idx)`` (map-side combined) finds hashes
-    with >1 occurrence and their first-occurrence winner key; survivors
-    are then a broadcast-filtered scan (or a narrow-key shuffle join
-    when AQE finds the map large). The only full-row shuffle in the
-    whole docs path is the unavoidable range-repartition that gives
-    dense ordered ids.
+    Dedup shape: duplicates are SPARSE in real corpora, so the decision
+    is the narrow :func:`dup_winner_map` and survivors a broadcast-
+    filtered scan (a narrow-key shuffle join when AQE finds the map
+    large). The only full-row shuffle of the docs path is :func:`rank`'s
+    range-repartition.
 
     ``(conv_id, turn_idx)`` SHOULD be unique in the input; when it is
     not, rows sharing both the key and the text (fully identical
     duplicates, which no pure row expression can tie-break) keep exactly
-    ONE survivor via the deterministic adjacent-drop inside the ranked
-    count/rank passes (``_prepare_ranked(dedup_keys=...)``), and the
+    ONE survivor via :func:`rank`'s ``dedup_keys`` adjacent-drop, and the
     dropped copies are reported as CONFLICT losers; rows sharing the key
     with DIFFERENT texts both survive (they are distinct documents).
     The text-unique docs invariant holds unconditionally.
@@ -369,27 +318,13 @@ def build_docs(transcripts: DataFrame,
     # fused id-assignment + tokenization: ONE Python stage (one worker
     # set, one Arrow round-trip) instead of two chained map stages
     try:
-        ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
-            survivors, ("conv_id", "turn_idx"), num_partitions, start_id,
-            dedup_keys=_DEDUP_KEYS)
+        docs = rank(survivors, ("conv_id", "turn_idx"), start_id,
+                    dedup_keys=_DEDUP_KEYS, analyze=True)
     except BaseException:
         dup_winners.unpersist()
         raise
-    names = [f.name for f in ids_schema]
-    out_schema = _analyzed_schema(ids_schema)
-    keys = list(_DEDUP_KEYS)
-
-    def fused(batches) -> Iterator:
-        pos, prev = None, None
-        for batch in batches:
-            batch, prev = _dedup_carry_filter(batch, keys, prev)
-            if batch.num_rows == 0:
-                continue
-            with_id, pos = _rank_batch(batch, pos, b_off, names)
-            yield _analyze_record_batch(with_id)
-
-    docs = ranged.mapInArrow(fused, out_schema)
-    if n_dropped > 0:
+    docs.held += (dup_winners,)
+    if docs.n_dropped > 0:
         # fully-identical duplicate rows were dropped in the ranked pass
         # — surface each dropped copy in the CONFLICT report (one narrow
         # aggregate over the survivors, run only on degenerate inputs;
@@ -400,8 +335,6 @@ def build_docs(transcripts: DataFrame,
                      F.sequence(F.lit(2), F.col("_kc"))))
                  .select("conv_id", "turn_idx", "text_hash"))
         losers = losers.unionByName(extra)
-    docs._konl_held = ranged, dup_winners, b_off  # type: ignore[attr-defined]
-    docs._konl_n_rows = n_rows  # type: ignore[attr-defined]
     return docs, losers
 
 
@@ -462,6 +395,13 @@ def explode_postings_with_positions(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "doc_len", "text", "tokens", "tfs") \
         .mapInPandas(fn, "term string, doc_id long, tf int, doc_len int, "
                          "positions array<int>")
+
+
+def term_bucket(n_buckets: int) -> Column:
+    """The ``term_bucket`` partition of a ``term`` column — the one
+    formula behind the postings layout and token_dict's stored bucket,
+    which the query side filters the postings scan on."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
 
 
 def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
@@ -538,8 +478,7 @@ def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
         .applyInPandas(encode_group,
                        codec.BLOCK_POS_SCHEMA if store_positions
                        else codec.BLOCK_SCHEMA)
-        .withColumn("term_bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+        .withColumn("term_bucket", term_bucket(n_buckets))
         # co-locate on (bucket, salt) before the partitionBy write:
         # blocks are compressed (cheap to move), file count stays
         # ~min(groups, shuffle.partitions) per bucket instead of
@@ -600,30 +539,32 @@ def write_conflicts(cat: IndexCatalog, losers: DataFrame,
 
 
 def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
-                 docs_lazy: DataFrame, losers: Optional[DataFrame] = None,
+                 ranked: Ranked, losers: Optional[DataFrame] = None,
                  base: Optional[Snapshot] = None,
                  target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
                  write_postings: Optional[Callable] = None) -> dict:
     """Write the tables of one docs stage — the table writer of
     :func:`build_index`, ``ingest.append_batch`` and ``ingest.compact``:
 
-    - ``docs_lazy`` to ``paths["docs"]``, with Σ doc_len (and the doc
-      count, unless ``docs_lazy`` carries it) observed by the write;
+    - ``ranked.df`` to ``paths["docs"]``, with Σ doc_len, the doc count
+      (unless ``ranked.n_rows`` holds it) and a content digest observed
+      by the write: ``bit_xor(xxhash64(doc_id, text_hash, doc_len))``,
+      order-free (a sum could overflow under ANSI mode);
     - the CONFLICT report of ``losers`` (:func:`write_conflicts`) and
       the token_dict at ``paths["token_dict"]``, as concurrent jobs;
     - the postings at ``paths["postings"]``, or through
-      ``write_postings(docs, avgdl, term_df)``.
+      ``write_postings(docs, avgdl, term_df, digest)``.
 
     ``layout`` holds the manifest's ``n_buckets``, ``block_size`` and
     ``positions``. ``base`` is the snapshot an append extends: its live
     docs resolve conflicts, its token_dict df is added in, its
     ``avgdl_built`` weights the blocks and conflict rows are appended;
     otherwise blocks are weighted at the written docs' avgdl. Side jobs
-    are joined and held state released on every path. Returns
+    are joined and ``ranked`` released on every path. Returns
     ``n_docs``, ``total_doc_len``, ``avgdl``, ``n_conflicts`` and the
     ``phases`` timings.
     """
-    spark = docs_lazy.sparkSession
+    spark = ranked.df.sparkSession
     n_buckets, block_size = int(layout["n_buckets"]), int(layout["block_size"])
     store_positions = bool(layout.get("positions", False))
     out: dict = {"phases": {}, "n_conflicts": 0}
@@ -637,7 +578,7 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
 
     side_jobs = ThreadPoolExecutor(2)
     side: list = []
-    n_docs = getattr(docs_lazy, "_konl_n_rows", None)
+    n_docs = ranked.n_rows
     term_df = None
     try:
         # write docs FIRST: tokenization runs exactly once, streamed straight
@@ -648,10 +589,12 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
         # folds them into the very write pass that produces the rows, so no
         # stats scan job remains.
         obs = Observation("docs_stats")
-        stats = [F.sum("doc_len").alias("total_doc_len")]
+        stats = [F.sum("doc_len").alias("total_doc_len"),
+                 F.bit_xor(F.xxhash64("doc_id", "text_hash", "doc_len"))
+                 .alias("digest")]
         if n_docs is None:
             stats.append(F.count(F.lit(1)).alias("n_docs"))
-        (docs_lazy.observe(obs, *stats)
+        (ranked.df.observe(obs, *stats)
          .write.mode("overwrite").parquet(cat.table_path(paths["docs"])))
         mark("tokenize_write_docs")
         docs = spark.read.parquet(cat.table_path(paths["docs"]))
@@ -680,8 +623,7 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
                            .unionByName(term_df)
                            .groupBy("term").agg(F.sum("df").alias("df")))
             (build_token_dict(dict_df)
-             .withColumn("term_bucket", F.pmod(
-                 F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+             .withColumn("term_bucket", term_bucket(n_buckets))
              .repartitionByRange(max(1, n_buckets // 4), "decomposed")
              .sortWithinPartitions("decomposed")
              .write.mode("overwrite")
@@ -707,12 +649,12 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
              .write.mode("overwrite").partitionBy("term_bucket")
              .parquet(cat.table_path(paths["postings"])))
         else:
-            write_postings(docs, block_avgdl, term_df)
+            write_postings(docs, block_avgdl, term_df, obs.get["digest"])
     finally:
         side_jobs.shutdown()  # waits: no side job outlives the call
         if term_df is not None:
             term_df.unpersist()
-        release(docs_lazy)
+        ranked.release()
     done = [job.result() for job in side]  # re-raises a side job's error
     if losers is not None:
         out["n_conflicts"] = done[0]
@@ -755,18 +697,18 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
                         spark.sparkContext.defaultParallelism)
     cat = IndexCatalog(root)
     t0 = time.time()
-    docs_lazy, losers = build_docs(transcripts)
+    ranked, losers = build_docs(transcripts)
     phases = {"dedup_assign_ids": round(time.time() - t0, 2)}
     # n_docs / max_doc_id fall out of the ranked offsets (dense ids 1..n)
-    n_docs = int(getattr(docs_lazy, "_konl_n_rows"))
+    n_docs = ranked.n_rows
     build_metrics: List[dict] = []
 
-    def write_segments(docs: DataFrame, avgdl: float,
-                       term_df: DataFrame) -> None:
+    def write_segments(docs: DataFrame, avgdl: float, term_df: DataFrame,
+                       digest: int) -> None:
         seg_dirs = _build_segments(
-            spark, cat, docs, avgdl, n_docs, n_docs, n_segments,
-            block_size, target_per_split, n_buckets, resume, build_metrics,
-            term_df=term_df, store_positions=store_positions)
+            spark, cat, docs, avgdl, n_docs, n_segments, block_size,
+            target_per_split, n_buckets, resume, build_metrics,
+            term_df=term_df, digest=digest, store_positions=store_positions)
         merge_segments(spark, seg_dirs, cat.table_path("postings"),
                        avgdl, block_size, n_buckets,
                        store_positions=store_positions)
@@ -775,7 +717,7 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
         cat, {"n_buckets": n_buckets, "block_size": block_size,
               "positions": store_positions},
         {"docs": "docs", "postings": "postings", "token_dict": "token_dict"},
-        docs_lazy, losers, target_per_split=target_per_split,
+        ranked, losers, target_per_split=target_per_split,
         write_postings=write_segments if n_segments > 1 else None)
     phases.update(out["phases"])
     manifest = {
@@ -801,28 +743,34 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
     return manifest
 
 
-def _segment_fingerprint(n_docs: int, max_doc_id: int, seg: int,
+def _segment_fingerprint(n_docs: int, digest: Optional[int], seg: int,
                          n_segments: int, block_size: int,
+                         target_per_split: int,
                          store_positions: bool = False) -> str:
+    """A segment's checkpoint key: the docs' size and content digest
+    (:func:`write_tables`) and every setting its blocks depend on, so a
+    resume never keeps a segment of another corpus or layout."""
     pos = ":pos" if store_positions else ""
-    return f"v1:{n_docs}:{max_doc_id}:{seg}/{n_segments}:bs{block_size}{pos}"
+    return (f"v2:{n_docs}:{digest}:{seg}/{n_segments}:bs{block_size}"
+            f":t{target_per_split}{pos}")
 
 
 def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
-                    n_docs: int, max_doc_id: int, n_segments: int,
-                    block_size: int, target_per_split: int, n_buckets: int,
-                    resume: bool, metrics_out: List[dict],
-                    term_df: DataFrame,
+                    n_docs: int, n_segments: int, block_size: int,
+                    target_per_split: int, n_buckets: int, resume: bool,
+                    metrics_out: List[dict], term_df: DataFrame,
+                    digest: Optional[int],
                     store_positions: bool = False) -> List[str]:
     """Per-segment posting build with checkpoint + lineage + metrics."""
     seg_dirs = []
-    bound = max_doc_id + 1
+    bound = n_docs + 1
     for seg in range(n_segments):
         seg_id = f"segment={seg:05d}"
         seg_dir = cat.table_path(f"_segments/{seg_id}")
         seg_dirs.append(seg_dir)
-        fp = _segment_fingerprint(n_docs, max_doc_id, seg, n_segments,
-                                  block_size, store_positions)
+        fp = _segment_fingerprint(n_docs, digest, seg, n_segments,
+                                  block_size, target_per_split,
+                                  store_positions)
         if resume and cat.segment_committed(seg_id, fp):
             continue
         t0 = time.time()
@@ -893,7 +841,6 @@ def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
         .applyInPandas(merge_group,
                        codec.BLOCK_POS_SCHEMA if store_positions
                        else codec.BLOCK_SCHEMA)
-        .withColumn("term_bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+        .withColumn("term_bucket", term_bucket(n_buckets))
     )
     merged.write.mode("overwrite").partitionBy("term_bucket").parquet(out_path)

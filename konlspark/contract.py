@@ -264,19 +264,19 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # -- build-path operators (B1-B3) ---------------------------------------
     def b1(s, d):
-        from .build import assign_doc_ids, release
+        from .build import rank
         docs = (_read(s, d, "documents")
                 .select(F.col("doc_id").alias("orig_id"), "source"))
-        out = assign_doc_ids(docs, order_cols=("source", "orig_id"))
-        res = (out.select(F.col("orig_id").alias("doc_id"),
-                          F.col("doc_id").alias("assigned_id"))
+        ranked = rank(docs, ("source", "orig_id"))
+        res = (ranked.df.select(F.col("orig_id").alias("doc_id"),
+                                F.col("doc_id").alias("assigned_id"))
                .orderBy("doc_id"))
         # pin the (small) result, then release the range-partitioned
         # intermediate so repeated contract runs in one process don't
         # leak block-manager entries (eager checkpoint = safe to
         # unpersist: the result no longer depends on the cached lineage)
         res = res.localCheckpoint(eager=True)
-        release(out)
+        ranked.release()
         return res
     q["b1_doc_id_assignment"] = b1
 

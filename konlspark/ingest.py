@@ -66,13 +66,13 @@ def append_batch(spark: SparkSession, root: str,
     first_id = int(manifest["max_doc_id"]) + 1
     docs, losers = B.build_docs(transcripts, start_id=first_id,
                                 live=snap.live_docs())
-    n_new = int(docs._konl_n_rows)
+    n_new = docs.n_rows
     if n_new == 0:
         # every row duplicates a live doc: report them, commit nothing
         try:
             n_conflicts = B.write_conflicts(cat, losers, base=snap)
         finally:
-            B.release(docs)
+            docs.release()
         return {"indexed": 0, "conflicts": n_conflicts, "first_doc_id": None}
     paths = {"docs": f"docs_parts/{part}", "postings": f"postings_parts/{part}",
              "token_dict": f"token_dict_v{next_part + 1}"}
@@ -145,7 +145,7 @@ def compact(spark: SparkSession, root: str) -> dict:
     t0 = time.time()
     paths = {"docs": f"docs_v{v}", "postings": f"postings_v{v}",
              "token_dict": f"token_dict_v{v}"}
-    out = B.write_tables(cat, manifest, paths, snap.live_docs())
+    out = B.write_tables(cat, manifest, paths, B.Ranked(snap.live_docs()))
 
     manifest["tables"] = {"docs": [paths["docs"]],
                           "postings": [paths["postings"]],

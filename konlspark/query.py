@@ -434,7 +434,6 @@ class SearchEngine:
     # the term metadata already on the driver: zero jobs.
     MAXSCORE_MIN_DF_RATIO = 4.0          # head df / rare df asymmetry
     MAXSCORE_MAX_CANDIDATES = 500_000    # bound on Σ df(essential)
-    MAXSCORE_MAX_DF_FRAC = 0.5           # essential decode ≤ half total
     # The one cost gate: the postings pruning can skip — Σ df of all
     # but a query's rarest term, or the df of a lone term — must
     # outweigh the pruned plan's extra jobs (the stats job, 3 jobs, and
@@ -781,12 +780,9 @@ class SearchEngine:
         kth = {t: stats[t]["kth"] for t in terms}
         sigma = {t: idf[t] * mw[t] for t in terms}
         by_sigma = sorted(terms, key=lambda t: (-sigma[t], t))
-        total_df = sum(meta[t]["df"] for t in terms)
-        cap = min(self.MAXSCORE_MAX_CANDIDATES,
-                  int(self.MAXSCORE_MAX_DF_FRAC * total_df))
         for e in range(1, len(by_sigma)):
             E, NE = by_sigma[:e], by_sigma[e:]
-            if sum(meta[t]["df"] for t in E) > cap:
+            if sum(meta[t]["df"] for t in E) > self.MAXSCORE_MAX_CANDIDATES:
                 break  # df_E only grows with e
             if sum(meta[t]["df"] for t in NE) < self.MAXSCORE_MIN_NE_POSTINGS:
                 break  # decode savings shrink with e — no later split pays
@@ -885,12 +881,12 @@ class SearchEngine:
         """Batch-log a DataFrame of query tokens (column ``token``)
         WITHOUT collecting them to the driver: semi-join ``token_dict``
         keeps tokens with ≥1 hit (the reference's per-query hit check),
-        then assign the reserved seq range with the SAME two-pass
-        partition-offset machinery as build doc-id assignment
-        (:func:`konlspark.build.assign_doc_ids`, order key = token):
-        range-partition + sort, one cached pass yields per-partition
-        counts, broadcast cumulative offsets stamp ``seq_id`` inside
-        every partition in parallel. No single-task window, no
+        then number the reserved seq range with build doc-id
+        assignment itself (:func:`konlspark.build.rank`, order key =
+        token): range-partition + sort, one Arrow pass over the cached
+        partitions counts their rows, broadcast cumulative offsets stamp
+        ``seq_id`` inside every partition in parallel. No single-task
+        window, no
         ``coalesce(1)`` — a 10^8-token bulk log write shards across
         partitions (the per-query ``_append_log`` hot path stays one
         file; continuous cluster-scale logging is the streaming sink's
@@ -905,21 +901,20 @@ class SearchEngine:
                       "token", "left_semi")
                 .persist())
         # everything after the persist sits inside the try (r7 ADVICE):
-        # an exception in _last_log_seq or assign_doc_ids (whose count
-        # job caches a second DataFrame) must not leak either persist
-        # on a long-lived engine
+        # an exception in _last_log_seq or rank (whose count job caches
+        # a second DataFrame) must not leak either persist on a
+        # long-lived engine
         ranked = None
         try:
             last = self._last_log_seq()
-            ranked = build.assign_doc_ids(hits, order_cols=("token",),
-                                          start_id=last + 1)
-            n = int(ranked._konl_n_rows)
+            ranked = build.rank(hits, ("token",), start_id=last + 1)
+            n = ranked.n_rows
             if n == 0:
                 return 0
             # reserve BEFORE the parquet write (crash in between leaves
             # a harmless seq gap, never a reusable range)
             self.cat.marker_reserve("query_log", last + n)
-            out = (ranked
+            out = (ranked.df
                    .withColumnRenamed("doc_id", "seq_id")
                    .withColumn("ts", F.current_timestamp())
                    .withColumn("size", F.lit(1).cast("int"))
@@ -927,7 +922,8 @@ class SearchEngine:
             out.write.mode("append").parquet(self.cat.table_path("query_log"))
             return n
         finally:
-            build.release(ranked)
+            if ranked is not None:
+                ranked.release()
             hits.unpersist()
 
     def aggregate_frequency(self) -> None:

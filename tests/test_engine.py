@@ -107,6 +107,37 @@ def test_doc_ids_dense_and_order_stable(spark, title_index):
     assert [r["doc_id"] for r in rows] == list(range(1, 133))
 
 
+@pytest.mark.parametrize("n_rows,start_id", [(5, 1), (0, 1), (300, 10)],
+                         ids=["fewer-rows-than-partitions", "empty",
+                              "start-id-10"])
+def test_rank_without_dedup_keys_equals_row_number(spark, n_rows, start_id):
+    """``build.rank`` with no dedup keys — the path of the contract's b1
+    and the query log — numbers rows exactly as a ``row_number()`` over
+    the order key, offset to ``start_id``, and releases what it held."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from konlspark import build
+    # 7919 is prime to 1000: distinct keys in shuffled order
+    df = spark.createDataFrame(
+        [(f"k{i * 7919 % 1000:04d}", i) for i in range(n_rows)],
+        "key string, v int")
+    want = sorted(
+        (r["v"], r["id"]) for r in df.select(
+            "v", (F.row_number().over(Window.orderBy("key"))
+                  + start_id - 1).alias("id")).collect())
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    ranked = build.rank(df, ("key",), start_id=start_id)
+    try:
+        got = sorted((r["v"], r["doc_id"]) for r in ranked.df.collect())
+    finally:
+        ranked.release()
+    assert (ranked.n_rows, ranked.n_dropped) == (n_rows, 0)
+    assert got == want
+    assert jsc.getPersistentRDDs().size() == persisted
+
+
 # -- zipf corpus: dedup, skew, full parity ------------------------------------
 
 def test_zipf_dedup_matches_oracle(spark, zipf_index, zipf_oracle, zipf_corpus):

@@ -78,6 +78,32 @@ def test_append_dedup_in_batch_and_vs_existing(spark, fresh_index):
     assert by_turn[("conv-zzz", 2)] == 133    # in-batch winner
 
 
+def test_postings_for_matches_oracle_and_drops_tombstoned(spark,
+                                                         fresh_index):
+    """Q1: one term's postings as ascending (doc_id, tf) equal to the
+    oracle's, before and after a delete tombstones one of them."""
+    root = fresh_index
+    ix = OracleIndex()
+    ix.index_all(TITLES)
+
+    def want(term):
+        return [(d, ix.docs[d].tfs[ix.docs[d].tokens.index(term)])
+                for d in sorted(ix.postings[term])]
+
+    def got(eng, term):
+        return [(r["doc_id"], r["tf"]) for r in
+                eng.postings_for(term).collect()]
+
+    eng = SearchEngine(spark, root)
+    assert got(eng, "에서") == want("에서")
+    assert (113, 2) in want("에서")
+    assert ingest.delete_docs(spark, root, [113]) == {"deleted": 1}
+    ix.delete(113)
+    eng.refresh()
+    assert 113 not in [d for d, _ in got(eng, "에서")]
+    assert got(eng, "에서") == want("에서")
+
+
 def test_delete_then_reindex_advances_id(spark, fresh_index):
     # reference test_index_hash: delete 100 → re-index gets id 133
     root = fresh_index

@@ -80,3 +80,24 @@ def test_merge_and_build_write_identical_blocks(spark, tmp_root, seg_setup,
     merged, built = postings_rows(root), postings_rows(one)
     assert len(merged) > 0
     assert merged == built
+
+
+def test_resume_rebuilds_segments_of_a_different_corpus(spark, tmp_root):
+    """Resume is keyed on the docs' content: rebuilding a root with
+    another corpus of the same size rebuilds every segment, and the
+    index answers for the new corpus."""
+    from konlspark.fixtures.titles import TITLES
+    from konlspark.oracle import OracleIndex
+    root = f"{tmp_root}/seg_titles"
+    titles = corpus.make_title_transcripts()
+    build.build_index(spark, corpus.spark_transcripts(spark, titles), root,
+                      n_segments=3)
+    titles["text"] = list(reversed(TITLES))
+    m = build.build_index(spark, corpus.spark_transcripts(spark, titles),
+                          root, n_segments=3)
+    assert len(m["segment_metrics"]) == 3
+    ix = OracleIndex()
+    ix.index_all(list(reversed(TITLES)))
+    got = SearchEngine(spark, root).search(["마법", "특별"], "or", log=False)
+    assert ([r["doc_id"] for r in got.collect()]
+            == ix.search(["마법", "특별"], "or", log=False))
