@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from . import codec
 from . import tokenizer as tk
-from .catalog import IndexCatalog, Snapshot
+from .catalog import FORMAT_VERSION, IndexCatalog, Snapshot
 from .oracle import BM25_B, BM25_K1
 
 DEFAULT_BLOCK_SIZE = 128
@@ -505,12 +505,13 @@ def build_token_dict(term_df: DataFrame) -> DataFrame:
 # Table writer — shared by the build, append and compaction
 # ---------------------------------------------------------------------------
 
-def write_conflicts(cat: IndexCatalog, losers: DataFrame,
+def write_conflicts(cat: IndexCatalog, path: str, losers: DataFrame,
                     docs: Optional[DataFrame] = None,
                     base: Optional[Snapshot] = None) -> int:
-    """Write one CONFLICT row per loser, resolved to the doc holding its
-    text: one of ``docs`` (the docs just written) or, for an append, a
-    live doc of ``base``; returns how many rows were written.
+    """Write one CONFLICT row per loser to the part ``path``, resolved
+    to the doc holding its text: one of ``docs`` (the docs just written)
+    or, for an append, a live doc of ``base``; returns how many rows
+    were written.
 
     Null-hash losers exist only as dropped identical (key, null-text)
     copies, and their winner shares the key: non-null losers resolve by
@@ -533,9 +534,27 @@ def write_conflicts(cat: IndexCatalog, losers: DataFrame,
     (losers.join(dsel, cond)
      .select("conv_id", "turn_idx", "conflict_doc_id")
      .observe(obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite" if base is None else "append")
-     .parquet(cat.table_path("conflicts")))
+     .write.mode("overwrite").parquet(cat.table_path(path)))
     return int(obs.get["n"])
+
+
+def write_token_dict(cat: IndexCatalog, path: str, term_df: DataFrame,
+                     n_buckets: int, base: Optional[Snapshot] = None) -> None:
+    """Write the token_dict of ``term_df`` (term, df) to ``path``. With
+    ``base``, ``term_df`` holds df changes (negative for a delete) to
+    add to ``base``'s token_dict, and a term whose df reaches 0 is
+    dropped — the reference drops a term with its last posting
+    (``inverted_index.py:89-95``)."""
+    if base is not None:
+        term_df = (base.read("token_dict").select("term", "df")
+                   .unionByName(term_df)
+                   .groupBy("term").agg(F.sum("df").alias("df"))
+                   .filter(F.col("df") > 0))
+    (build_token_dict(term_df)
+     .withColumn("term_bucket", term_bucket(n_buckets))
+     .repartitionByRange(max(1, n_buckets // 4), "decomposed")
+     .sortWithinPartitions("decomposed")
+     .write.mode("overwrite").parquet(cat.table_path(path)))
 
 
 def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
@@ -550,23 +569,25 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
       (unless ``ranked.n_rows`` holds it) and a content digest observed
       by the write: ``bit_xor(xxhash64(doc_id, text_hash, doc_len))``,
       order-free (a sum could overflow under ANSI mode);
-    - the CONFLICT report of ``losers`` (:func:`write_conflicts`) and
-      the token_dict at ``paths["token_dict"]``, as concurrent jobs;
+    - the CONFLICT report of ``losers`` at ``paths["conflicts"]``
+      (:func:`write_conflicts`) and the token_dict at
+      ``paths["token_dict"]`` (:func:`write_token_dict`), as concurrent
+      jobs;
     - the postings at ``paths["postings"]``, or through
       ``write_postings(docs, avgdl, term_df, digest)``.
 
     ``layout`` holds the manifest's ``n_buckets``, ``block_size`` and
     ``positions``. ``base`` is the snapshot an append extends: its live
-    docs resolve conflicts, its token_dict df is added in, its
-    ``avgdl_built`` weights the blocks and conflict rows are appended;
-    otherwise blocks are weighted at the written docs' avgdl. Side jobs
-    are joined and ``ranked`` released on every path. Returns
+    docs resolve conflicts, its token_dict df is added in and its
+    ``avgdl_built`` weights the blocks; otherwise blocks are weighted
+    at the written docs' avgdl. Side jobs are joined and ``ranked``
+    released on every path. Returns
     ``n_docs``, ``total_doc_len``, ``avgdl``, ``n_conflicts`` and the
     ``phases`` timings.
     """
     spark = ranked.df.sparkSession
     n_buckets, block_size = int(layout["n_buckets"]), int(layout["block_size"])
-    store_positions = bool(layout.get("positions", False))
+    store_positions = bool(layout["positions"])
     out: dict = {"phases": {}, "n_conflicts": 0}
     t = time.time()
 
@@ -602,7 +623,8 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
         # CONFLICT report is independent of everything below — run it as a
         # concurrent job the moment the docs table exists
         if losers is not None:
-            side.append(side_jobs.submit(write_conflicts, cat, losers, docs,
+            side.append(side_jobs.submit(write_conflicts, cat,
+                                         paths["conflicts"], losers, docs,
                                          base))
 
         # explode once; term_df feeds token_dict AND the salting decision
@@ -616,20 +638,9 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
         # a CONCURRENT job (Spark schedules jobs from separate driver threads
         # onto idle task slots) so its driver barrier overlaps the postings
         # stage instead of serializing before it
-        def _write_token_dict() -> None:
-            dict_df = term_df
-            if base is not None:
-                dict_df = (base.read("token_dict").select("term", "df")
-                           .unionByName(term_df)
-                           .groupBy("term").agg(F.sum("df").alias("df")))
-            (build_token_dict(dict_df)
-             .withColumn("term_bucket", term_bucket(n_buckets))
-             .repartitionByRange(max(1, n_buckets // 4), "decomposed")
-             .sortWithinPartitions("decomposed")
-             .write.mode("overwrite")
-             .parquet(cat.table_path(paths["token_dict"])))
-
-        side.append(side_jobs.submit(_write_token_dict))
+        side.append(side_jobs.submit(write_token_dict, cat,
+                                     paths["token_dict"], term_df,
+                                     n_buckets, base))
 
         # obs.get returns at once: the docs write action has completed
         if n_docs is None:
@@ -716,12 +727,12 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
     out = write_tables(
         cat, {"n_buckets": n_buckets, "block_size": block_size,
               "positions": store_positions},
-        {"docs": "docs", "postings": "postings", "token_dict": "token_dict"},
+        {t: t for t in ("docs", "postings", "token_dict", "conflicts")},
         ranked, losers, target_per_split=target_per_split,
         write_postings=write_segments if n_segments > 1 else None)
     phases.update(out["phases"])
     manifest = {
-        "format_version": 1,
+        "format_version": FORMAT_VERSION,
         "n_docs": n_docs,
         "avgdl": out["avgdl"],
         "avgdl_built": out["avgdl"],
@@ -729,7 +740,9 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
         "max_doc_id": n_docs,
         "next_part": 1,
         "tables": {"docs": ["docs"], "postings": ["postings"],
-                   "token_dict": ["token_dict"], "tombstones": []},
+                   "token_dict": ["token_dict"], "tombstones": [],
+                   "conflicts": ["conflicts"], "token_freq": []},
+        "freq_offset": 0,
         "n_buckets": n_buckets,
         "block_size": block_size,
         "bm25": {"k1": BM25_K1, "b": BM25_B},

@@ -9,16 +9,20 @@ staging data but no manifest entry → the resume path re-runs it
 (idempotent). Swapping this for a real Iceberg catalog is a config
 change (the sandbox has no Iceberg runtime jars — SURVEY §7.1).
 
-Layout of an index root:
+Layout of an index root (``<table>*`` = the table's part dirs):
 
     root/
-      _meta/manifest.json       # snapshot pointer + corpus stats
-      _meta/segments.json       # per-segment build checkpoints + metrics
-      docs/                     # parquet, range-partitioned by doc_id
-      postings/                 # parquet, dir-partitioned by term_bucket
-      token_dict/               # parquet, sorted by decomposed
-      query_log/                # append-only parquet
-      token_freq/               # parquet (search-frequency aggregate)
+      _meta/manifest.json   # the snapshot: stats + table → part dirs
+      _meta/segments.json   # per-segment build checkpoints + metrics
+      docs*/                # parquet, range-partitioned by doc_id
+      postings*/            # parquet, dir-partitioned by term_bucket
+      token_dict*/          # parquet, sorted by decomposed
+      tombstones/, conflicts*/, token_freq_v*/
+      query_log/            # append-only parquet, seq-id marker
+
+Every table except ``query_log`` is a manifest part list, read as
+written through :class:`Snapshot`; ``freq_offset`` is the last
+query-log seq id folded into ``token_freq``.
 """
 
 from __future__ import annotations
@@ -30,9 +34,8 @@ import tempfile
 import time
 from typing import Any, Dict, Optional
 
-# the table parts of a manifest that predates per-table part lists
-_UNVERSIONED_TABLES = {"docs": ["docs"], "postings": ["postings"],
-                       "token_dict": ["token_dict"], "tombstones": []}
+# the manifest layout this code writes and reads (see Snapshot)
+FORMAT_VERSION = 2
 
 
 class IndexCatalog:
@@ -147,16 +150,21 @@ class Snapshot:
     ``tables`` is the manifest's table → part-dir lists; a mutation
     edits them in place and commits ``manifest``. ``refresh`` re-lists
     each part dir's files in Spark's cache first (a reader that outlives
-    an in-place rebuild of the same root)."""
+    an in-place rebuild of the same root). A manifest of another
+    ``format_version`` raises ValueError: its tables may not mean what
+    this code reads them as."""
 
     def __init__(self, spark, cat: IndexCatalog, refresh: bool = False):
         manifest = cat.read_manifest()
         if manifest is None:
             raise FileNotFoundError(f"no committed index at {cat.root}")
+        if manifest.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"index at {cat.root} has format_version "
+                f"{manifest.get('format_version')!r}; this code reads "
+                f"format_version {FORMAT_VERSION} (rebuild the index)")
         self.spark, self.cat, self.manifest = spark, cat, manifest
-        self.tables = manifest.setdefault(
-            "tables", {k: list(v) for k, v in _UNVERSIONED_TABLES.items()})
-        self.tables.setdefault("df_delta", [])
+        self.tables = manifest["tables"]
         self._refresh = refresh
         self._read: Dict[str, Any] = {}
 

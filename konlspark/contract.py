@@ -21,7 +21,9 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TOK_RE = r"\s+"
+from .ops.textstats import (with_fingerprint, with_lang_id,
+                             with_quality_score, with_token_counts,
+                             ws_tokens)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -40,15 +42,9 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _tokens_col(text=None):
-    if text is None:
-        text = F.col("text")
-    return F.filter(F.split(F.lower(text), TOK_RE), lambda t: t != "")
-
-
 def _exploded_terms(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
-    return docs.select("doc_id", F.explode(_tokens_col()).alias("term"))
+    return docs.select("doc_id", F.explode(ws_tokens(F.col("text"))).alias("term"))
 
 
 _DUCK_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
@@ -187,7 +183,8 @@ def _engine_frequency(spark: SparkSession, sf_dir: str, prefix: str,
     if eng._last_log_seq() == 0:
         toks = (_read(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 200)
-                .select(F.element_at(_tokens_col(), 1).alias("token")))
+                .select(F.element_at(ws_tokens(F.col("text")), 1)
+                        .alias("token")))
         eng.log_query_tokens(toks)
         eng.aggregate_frequency()
     return eng.search_by_frequency_df(prefix, k)
@@ -454,31 +451,25 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # -- text analysis ---------------------------------------------------------
     q["t1_token_counts"] = lambda s, d: (
-        _read(s, d, "documents").filter(F.col("doc_id") < 100)
-        .select("doc_id",
-                F.size(_tokens_col()).alias("n_tokens_ws").cast("int"),
-                F.length("text").alias("n_chars_").cast("int"))
-        .orderBy("doc_id"))
+        with_token_counts(_read(s, d, "documents")
+                          .filter(F.col("doc_id") < 100))
+        .select("doc_id", "n_tokens_ws", "n_chars_").orderBy("doc_id"))
 
     def lang_id(s, d):
-        from .ops.textstats import with_lang_id
         return (with_lang_id(_read(s, d, "documents"))
                 .groupBy("lang_pred").agg(F.count("*").alias("n")))
     q["t2_lang_id_counts"] = lang_id  # rows-only (heuristic)
 
     def quality(s, d):
-        from .ops.textstats import with_quality_score
         return (with_quality_score(_read(s, d, "documents"))
                 .filter(F.col("doc_id") < 50)
                 .select("doc_id", "quality_score").orderBy("doc_id"))
     q["t3_quality_scores"] = quality  # rows-only (composite heuristic)
 
     q["t4_fingerprint"] = lambda s, d: (
-        _read(s, d, "documents").filter(F.col("doc_id") < 100)
-        .select("doc_id",
-                F.md5(F.regexp_replace(F.trim(F.lower(F.col("text"))),
-                                       r"\s+", " ")).alias("fp_norm"))
-        .orderBy("doc_id"))
+        with_fingerprint(_read(s, d, "documents")
+                         .filter(F.col("doc_id") < 100))
+        .select("doc_id", "fp_norm").orderBy("doc_id"))
 
     # -- multimodal plumbing (m1): binary payload column → Arrow-batched
     # feature extraction via the real mapInPandas decode stage (the

@@ -27,9 +27,7 @@ from typing import List
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col):
-    return F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")
+from .textstats import ws_tokens
 
 
 def _shingles_of(toks, n: int = 3):
@@ -56,7 +54,7 @@ def _shingle_df(df: DataFrame, text_col: str, id_col: str,
     by a non-cheap expression — verified in the physical plan."""
     return (df
             .select(F.col(id_col).alias("id"),
-                    _tokens(F.col(text_col)).alias("_toks"))
+                    ws_tokens(F.col(text_col)).alias("_toks"))
             .select("id", _shingles_of(F.col("_toks"), n).alias("sh")))
 
 

@@ -21,8 +21,9 @@ _ES_STOP = ["el", "la", "de", "que", "y", "en", "un", "es", "los", "del"]
 _DE_STOP = ["der", "die", "das", "und", "ist", "von", "mit", "ein", "zu", "den"]
 
 
-def _tokens(text: Column) -> Column:
-    """Whitespace tokenization of lowercased text (empty-safe)."""
+def ws_tokens(text: Column) -> Column:
+    """Whitespace tokenization of lowercased text (empty-safe) — the one
+    token expression of the text operators, dedup and the contract."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 
@@ -37,7 +38,7 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     c = F.col(text_col)
     bpe_ish = F.regexp_count(c, F.lit(r"[A-Za-z가-힣]+|[0-9]{1,3}|[^\sA-Za-z0-9가-힣]"))
     return (
-        df.withColumn("n_tokens_ws", F.size(_tokens(c)))
+        df.withColumn("n_tokens_ws", F.size(ws_tokens(c)))
         .withColumn("n_tokens_bpe", bpe_ish.cast("int"))
         .withColumn("n_chars_", F.length(c).cast("int"))
     )
@@ -53,7 +54,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     c = F.col(text_col)
     length = F.greatest(F.length(c), F.lit(1))
     hangul = F.regexp_count(c, F.lit(r"[가-힣]")) / length
-    toks = _tokens(c)
+    toks = ws_tokens(c)
     n_toks = F.greatest(F.size(toks), F.lit(1))
 
     def stop_ratio(words):
@@ -75,7 +76,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality scoring: length / punctuation / stopword / repetition
     signals combined into a [0,1] score (C4/Gopher-style filters)."""
     c = F.col(text_col)
-    toks = _tokens(c)
+    toks = ws_tokens(c)
     n_toks = F.greatest(F.size(toks), F.lit(1))
     length = F.greatest(F.length(c), F.lit(1))
     punct_ratio = F.regexp_count(c, F.lit(r"[^\w\s]")) / length
@@ -112,7 +113,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     # the transform lambda would otherwise re-run split(lower(text))
     # per shingle (codegen subexpression elimination does not reach
     # into lambda bodies — same fix as ops.dedup._shingle_df, r9)
-    with_toks = df.withColumn("_fp_toks", _tokens(c))
+    with_toks = df.withColumn("_fp_toks", ws_tokens(c))
     toks = F.col("_fp_toks")
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))

@@ -39,7 +39,6 @@ plans:
 from __future__ import annotations
 
 import bisect
-from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Sequence, Union
 
 import numpy as np
@@ -52,20 +51,7 @@ from pyspark.sql import functions as F
 from . import codec
 from . import tokenizer as tk
 from .catalog import IndexCatalog, Snapshot
-from .oracle import bm25_idf
-
-
-@dataclass
-class SearchRequest:
-    tokens: List[str]
-    mode: str  # "and" | "or" | "phrase"
-
-
-@dataclass
-class ComplexRequest:
-    condition1: Union["ComplexRequest", SearchRequest]
-    condition2: Union["ComplexRequest", SearchRequest]
-    mode: str  # "and" | "or"
+from .oracle import ComplexRequest, SearchRequest, bm25_idf
 
 
 def _mode(mode: str, allowed: Sequence[str] = ("or", "and")) -> str:
@@ -105,8 +91,8 @@ class SearchEngine:
     ``access`` mirrors the reference's ``KonlSearch(path, access_type)``
     (search.py:16-26 over RocksDB read_only/read_write handles): a
     ``"ro"`` engine rejects every mutating surface (query logging,
-    frequency aggregation, manifest kv writes) with
-    :class:`ReadOnlyIndexError`; reads are identical.
+    frequency aggregation) with :class:`ReadOnlyIndexError`; reads are
+    identical.
     """
 
     def __init__(self, spark: SparkSession, root: str, access: str = "rw"):
@@ -131,7 +117,7 @@ class SearchEngine:
         self.manifest = snap.manifest
         self.n_docs = self.manifest["n_docs"]
         self.avgdl = self.manifest["avgdl"]
-        self.has_positions = bool(self.manifest.get("positions", False))
+        self.has_positions = self.manifest["positions"]
         # after append/delete the per-block max-score metadata was built
         # with a different avgdl → pruning bounds are no longer sound;
         # fall back to the exact path until compaction. Tombstones alone
@@ -139,38 +125,16 @@ class SearchEngine:
         # also disable pruning: block maxima may be achieved by deleted
         # docs, which would invalidate the k-distinct-docs τ argument.
         self.wand_safe = (
-            abs(self.avgdl
-                - self.manifest.get("avgdl_built", self.avgdl)) < 1e-12
+            abs(self.avgdl - self.manifest["avgdl_built"]) < 1e-12
             and not snap.tables["tombstones"])
         self.postings = snap.read("postings")
         self.docs = snap.live_docs()
         self.tombstones = snap.read("tombstones")
-        # token_dict stays cached for the DataFrame surfaces (prefix and
-        # frequency plans, log semi-joins); its replaced predecessor is
-        # released first (same plan → same cache entry, so after a
-        # cache() the unpersist would drop the new one too)
-        if getattr(self, "token_dict", None) is not None:
-            self.token_dict.unpersist()
-        token_dict = snap.read("token_dict")
-        if snap.tables["df_delta"]:
-            # fold delete-time df corrections in: live df = df − Σdelta,
-            # and a term whose last live posting died DISAPPEARS from
-            # every token_dict read surface (suggestions, __contains__,
-            # frequency, idf) immediately — reference semantics
-            # (inverted_index.py:89-95). Exact until compact resets it.
-            delta = (snap.read("df_delta")
-                     .groupBy("term").agg(F.sum("dd").alias("_dd")))
-            token_dict = (
-                token_dict.join(delta, "term", "left")
-                .withColumn("df", (F.col("df")
-                                   - F.coalesce(F.col("_dd"), F.lit(0)))
-                            .cast("long"))
-                .drop("_dd")
-                .filter(F.col("df") > 0))
-        self.token_dict = token_dict.cache()
-        # the term dictionary on the driver, collected by the one job
-        # that fills the cache: term → (df, bucket) for planning, and
-        # (decomposed, term) sorted for prefix ranges
+        # the token_dict as written (every mutation commits the live
+        # one) and the term dictionary on the driver, collected by one
+        # job: term → (df, bucket) for planning, and (decomposed, term)
+        # sorted for prefix ranges
+        self.token_dict = snap.read("token_dict")
         td = self.token_dict.select(
             "term", "df", "term_bucket", "decomposed").toPandas()
         self._terms = dict(zip(td["term"], zip(td["df"].tolist(),
@@ -681,9 +645,8 @@ class SearchEngine:
         for E, NE in splits.values():
             for t in pruned.intersection(NE):
                 e_for[t].update(E)
-        bs = int(self.manifest.get("block_size", 128))
-        corpus_span = max(1, int(self.manifest.get("max_doc_id",
-                                                    self.n_docs)))
+        bs = self.manifest["block_size"]
+        corpus_span = max(1, self.manifest["max_doc_id"])
         for t in sorted(pruned):
             es = e_for[t]
             span = (max(stats[e]["hi"] for e in es)
@@ -826,7 +789,7 @@ class SearchEngine:
     def search_by_frequency_df(self, prefix: str, k: int = 5) -> DataFrame:
         """Q7 as a DataFrame plan: (term, freq) top-k under a prefix."""
         dp = tk.decompose(prefix)
-        freq = self._read_token_freq()
+        freq = Snapshot(self.spark, self.cat).read("token_freq")
         if freq is None:
             return self.spark.createDataFrame([], "term string, freq long")
         return (
@@ -927,14 +890,14 @@ class SearchEngine:
             hits.unpersist()
 
     def aggregate_frequency(self) -> None:
-        """Incremental: log rows past the stored offset are summed into
-        a NEW versioned token_freq table; the table pointer and the
-        offset advance in ONE manifest commit (inverted_index.py:121-128
-        made idempotent — a crash before the commit leaves an orphan
-        directory, never a double count)."""
+        """Incremental: log rows past the manifest's ``freq_offset`` are
+        summed into a NEW token_freq part named by the last seq id it
+        folds; the part and the offset advance in ONE manifest commit
+        (inverted_index.py:121-128 made idempotent — a crash before the
+        commit leaves an orphan directory, never a double count)."""
         self._require_writable("frequency aggregation")
-        kv = self._meta_kv()
-        offset = kv.get("freq_offset", 0)
+        snap = Snapshot(self.spark, self.cat)
+        offset = snap.manifest["freq_offset"]
         last = self._last_log_seq()
         if last <= offset:
             return
@@ -947,36 +910,16 @@ class SearchEngine:
             .groupBy("token").agg(F.sum("size").alias("freq"))
             .select(F.col("token").alias("term"), "freq")
         )
-        old = self._read_token_freq()
+        old = snap.read("token_freq")
         merged = new if old is None else (
             old.unionByName(new).groupBy("term").agg(F.sum("freq").alias("freq")))
-        version = int(kv.get("freq_version", 0)) + 1
-        out = f"token_freq_v{version:06d}"
+        out = f"token_freq_v{last:06d}"
         merged.write.mode("overwrite").parquet(self.cat.table_path(out))
-        self._set_meta_kvs({"freq_offset": last,
-                            "freq_version": version,
-                            "token_freq_table": out})
-
-    def _read_token_freq(self) -> Optional[DataFrame]:
-        import os
-        table = self._meta_kv().get("token_freq_table")
-        if table is None:
-            return None
-        path = self.cat.table_path(table)
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
-
-    def _meta_kv(self) -> dict:
-        m = self.cat.read_manifest() or {}
-        return m.get("kv", {})
-
-    def _set_meta_kvs(self, updates: dict) -> None:
-        """Atomic multi-key kv commit (one manifest swap)."""
-        self._require_writable("manifest kv write")
-        m = self.cat.read_manifest() or {}
-        m.setdefault("kv", {}).update(updates)
-        self.cat.commit_manifest(m)
+        # re-read: a commit made while the fold ran is kept, not overwritten
+        manifest = self.cat.read_manifest()
+        manifest["tables"]["token_freq"] = [out]
+        manifest["freq_offset"] = last
+        self.cat.commit_manifest(manifest)
 
     # -- point / range / multi gets (S5-S8) ----------------------------------
     def get(self, doc_id: int) -> DataFrame:

@@ -12,6 +12,13 @@ import datetime
 
 import pandas as pd
 
+from konlspark.catalog import IndexCatalog, Snapshot
+
+
+def _conflicts(spark, root):
+    """The committed CONFLICT rows of the index at ``root``."""
+    return Snapshot(spark, IndexCatalog(root)).read("conflicts").collect()
+
 
 def _tdf(spark, rows):
     from konlspark import corpus
@@ -42,7 +49,7 @@ def test_build_docs_duplicate_key_same_text_one_survivor(spark, tmp_root):
     texts = [r["text"] for r in docs]
     assert texts == ["alpha beta", "gamma delta", "epsilon zeta"]
     assert [r["doc_id"] for r in docs] == [1, 2, 3]  # dense, no gaps
-    conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+    conflicts = _conflicts(spark, root)
     # 2 dropped identical copies + 1 cross-key duplicate, all resolving
     # to the winning doc id
     assert len(conflicts) == 3
@@ -88,7 +95,7 @@ def test_append_batch_duplicate_key_and_derived_counts(spark, tmp_root):
     # the conflicts TABLE must carry the same rows as the reported
     # count — incl. the identical-key dropped copy (r3 ADVICE): the
     # ("c1", 2) copy resolves to the NEW "fresh two" doc id
-    conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+    conflicts = _conflicts(spark, root)
     assert len(conflicts) == res["conflicts"]
     by_key = {(r["conv_id"], r["turn_idx"]): r["conflict_doc_id"]
               for r in conflicts}
@@ -139,7 +146,7 @@ def test_build_docs_null_text_does_not_crash(spark, tmp_root):
     # the dropped identical (key, null-text) copy must STILL appear in
     # the conflicts table, resolving to the surviving null-text doc of
     # the same key (r4 ADVICE class: null-unsafe hash joins dropped it)
-    conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+    conflicts = _conflicts(spark, root)
     assert len(conflicts) == 1
     null_doc_id = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
                    for r in eng.docs.select(
@@ -174,7 +181,7 @@ def test_append_batch_null_text_duplicate_conflict_parity(spark, tmp_root):
     res = ingest.append_batch(spark, root, tdf(batch))
     assert res["indexed"] == 2
     assert res["conflicts"] == 1  # rows_in (3) - indexed (2)
-    conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+    conflicts = _conflicts(spark, root)
     assert len(conflicts) == res["conflicts"]
     eng = SearchEngine(spark, root)
     null_doc = eng.docs.filter("text IS NULL").collect()
@@ -185,7 +192,7 @@ def test_append_batch_null_text_duplicate_conflict_parity(spark, tmp_root):
 
 def _conflict_rows(spark, root):
     return sorted((r["conv_id"], r["turn_idx"], r["conflict_doc_id"])
-                  for r in spark.read.parquet(f"{root}/conflicts").collect())
+                  for r in _conflicts(spark, root))
 
 
 def test_append_keeps_every_conflict_row_of_a_shared_key(spark, tmp_root):
@@ -207,9 +214,8 @@ def test_append_keeps_every_conflict_row_of_a_shared_key(spark, tmp_root):
 
 def test_all_duplicate_append_writes_its_conflicts(spark, tmp_root):
     """A batch whose every text a live doc holds indexes nothing and
-    commits no manifest, but still reports each row as a conflict."""
+    commits only its conflict part, reporting each row as a conflict."""
     from konlspark import build, ingest
-    from konlspark.catalog import IndexCatalog
     root = f"{tmp_root}/all_dup_append"
     build.build_index(spark, _tdf(spark, [("c0", 0, "base text"),
                                           ("c0", 1, "other text")]), root)
@@ -218,4 +224,8 @@ def test_all_duplicate_append_writes_its_conflicts(spark, tmp_root):
         spark, [("c1", 0, "base text"), ("c1", 1, "other text")]))
     assert res == {"indexed": 0, "conflicts": 2, "first_doc_id": None}
     assert _conflict_rows(spark, root) == [("c1", 0, 1), ("c1", 1, 2)]
-    assert IndexCatalog(root).read_manifest() == before
+    after = IndexCatalog(root).read_manifest()
+    assert len(after["tables"]["conflicts"]) == 2
+    for m in (before, after):
+        del m["tables"]["conflicts"], m["next_part"], m["committed_at"]
+    assert after == before  # no doc, stat or other table changed

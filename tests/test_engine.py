@@ -7,6 +7,7 @@ test outputs."""
 
 import pytest
 
+from konlspark.catalog import IndexCatalog, Snapshot
 from konlspark.query import ComplexRequest, SearchEngine, SearchRequest
 
 
@@ -143,7 +144,7 @@ def test_rank_without_dedup_keys_equals_row_number(spark, n_rows, start_id):
 def test_zipf_dedup_matches_oracle(spark, zipf_index, zipf_oracle, zipf_corpus):
     root, _ = zipf_index
     docs = spark.read.parquet(f"{root}/docs")
-    conflicts = spark.read.parquet(f"{root}/conflicts")
+    conflicts = Snapshot(spark, IndexCatalog(root)).read("conflicts")
     assert docs.count() == len(zipf_oracle.docs)
     n_conflicts = len(zipf_corpus) - len(zipf_oracle.docs)
     assert conflicts.count() == n_conflicts

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from konlspark import build, corpus, ingest
+from konlspark.catalog import IndexCatalog, Snapshot
 from konlspark.fixtures.titles import TITLES
 from konlspark.oracle import OracleIndex
 from konlspark.query import SearchEngine
@@ -30,6 +31,10 @@ def fresh_index(_title_build, tmp_path):
     root = str(tmp_path / "idx")
     shutil.copytree(_title_build, root)
     return root
+
+
+def _snap(spark, root):
+    return Snapshot(spark, IndexCatalog(root))
 
 
 def _batch_df(spark, texts, conv="conv-zzz"):
@@ -71,7 +76,7 @@ def test_append_dedup_in_batch_and_vs_existing(spark, fresh_index):
     assert res["indexed"] == 1 and res["conflicts"] == 2
     eng = SearchEngine(spark, root)
     assert eng.n_docs == 133
-    conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+    conflicts = _snap(spark, root).read("conflicts").collect()
     by_turn = {(r["conv_id"], r["turn_idx"]): r["conflict_doc_id"]
                for r in conflicts}
     assert by_turn[("conv-zzz", 0)] == 10     # winner is the live doc
@@ -133,9 +138,10 @@ def test_delete_removes_from_search_and_compact_restores_parity(
     ora.delete(38)
     ora.delete(10)
     # dead term gone from EVERY token_dict surface immediately after the
-    # delete (df_delta fold — reference drops a trie token the moment
-    # its last posting dies, inverted_index.py:89-95): suggestions,
-    # membership, and df-driven idf are exact BEFORE compaction
+    # delete (it commits the live token_dict — reference drops a trie
+    # token the moment its last posting dies, inverted_index.py:89-95):
+    # suggestions, membership, and df-driven idf are exact BEFORE
+    # compaction
     assert "다이아몬드" not in eng.search_suggestions("다")
     assert "다이아몬드" not in eng
 
@@ -175,9 +181,85 @@ def test_append_is_invisible_without_commit(spark, fresh_index, monkeypatch):
     assert eng.search(["새문서"], "or", log=False).collect() == []
 
 
+def _exploding_commit(self, manifest):
+    raise RuntimeError("crash before commit")
+
+
+@pytest.mark.parametrize("texts", [[TITLES[9], "완전히 새로운 문서"],
+                                   [TITLES[9]]],
+                         ids=["append", "all-duplicate-append"])
+def test_crashed_append_leaves_no_conflict_row(spark, fresh_index,
+                                               monkeypatch, texts):
+    """Conflict rows are a manifest part: a crash before the commit
+    leaves none visible, and the retried append reports each once."""
+    root = fresh_index
+    before = _snap(spark, root).read("conflicts").count()
+    monkeypatch.setattr(IndexCatalog, "commit_manifest", _exploding_commit)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        ingest.append_batch(spark, root, _batch_df(spark, texts))
+    monkeypatch.undo()
+    assert _snap(spark, root).read("conflicts").count() == before
+    assert ingest.append_batch(
+        spark, root, _batch_df(spark, texts))["conflicts"] == 1
+    rows = _snap(spark, root).read("conflicts").collect()
+    assert len(rows) == before + 1
+    assert [r["conflict_doc_id"] for r in rows
+            if r["conv_id"] == "conv-zzz"] == [10]
+
+
+def test_delete_commits_the_live_token_dict(spark, fresh_index):
+    """The token_dict a delete commits, read through the snapshot (not
+    the engine), holds every live term at its live df and no dead term;
+    an append after the delete adds to that exact df."""
+    root = fresh_index
+    ora = OracleIndex()
+    ora.index_all(TITLES)
+
+    def committed():
+        return {r["term"]: r["df"] for r in
+                _snap(spark, root).read("token_dict").collect()}
+
+    ingest.delete_docs(spark, root, [38, 10])
+    ora.delete(38)
+    ora.delete(10)
+    got = committed()
+    assert "다이아몬드" not in got
+    assert got == {t: len(ids) for t, ids in ora.postings.items()}
+    texts = ["다이아몬드 기동전사 건담", TITLES[20]]  # a dead term back
+    ingest.append_batch(spark, root, _batch_df(spark, texts))
+    ora.index_all(texts)
+    assert committed() == {t: len(ids) for t, ids in ora.postings.items()}
+
+
+def test_frequency_survives_append_and_compact(spark, fresh_index):
+    """log → aggregate_frequency → append_batch → compact keeps
+    search_by_frequency unchanged (each commit keeps token_freq and
+    freq_offset), and a read-only engine still cannot aggregate."""
+    from konlspark.query import ReadOnlyIndexError
+    root = fresh_index
+    eng = SearchEngine(spark, root)
+    for q in (["마법", "특별"], ["마법"], ["마왕"]):
+        eng.search(q, "or")
+    eng.aggregate_frequency()
+    want = eng.search_by_frequency("마", k=5)
+    assert want and want[0] == ("마법", 2)
+    ingest.append_batch(spark, root, _batch_df(spark, ["마법 기동전사"]))
+    eng.refresh()
+    assert eng.search_by_frequency("마", k=5) == want
+    ingest.compact(spark, root)
+    eng.refresh()
+    eng.aggregate_frequency()  # nothing new past freq_offset
+    assert eng.search_by_frequency("마", k=5) == want
+    eng.search(["마법"], "or")
+    manifest = eng.cat.read_manifest()
+    with pytest.raises(ReadOnlyIndexError):
+        SearchEngine(spark, root, access="ro").aggregate_frequency()
+    assert eng.cat.read_manifest() == manifest
+
+
 def test_term_dict_follows_append_delete_refresh(spark, fresh_index):
     """The driver dictionary is the mutated snapshot's token_dict: new
-    terms in, the df_delta fold applied, a dead term gone."""
+    terms in, the delete's df changes applied, a dead term gone."""
     root = fresh_index
     eng = SearchEngine(spark, root)
     doc38 = set(eng.get_tokens(38))  # holds 다이아몬드's only posting
@@ -309,13 +391,13 @@ def test_build_of_union_equals_build_then_append(spark, tmp_path):
     union_root, append_root = str(tmp_path / "union"), str(tmp_path / "ab")
     build.build_index(spark, _rows_df(spark, a + b), union_root)
     build.build_index(spark, _rows_df(spark, a), append_root)
-    n_a = spark.read.parquet(f"{append_root}/conflicts").count()
+    n_a = _snap(spark, append_root).read("conflicts").count()
     res = ingest.append_batch(spark, append_root, _rows_df(spark, b))
     assert res["indexed"] + res["conflicts"] == len(b)
 
     def snapshot(root):
         eng = SearchEngine(spark, root)
-        conflicts = spark.read.parquet(f"{root}/conflicts").collect()
+        conflicts = _snap(spark, root).read("conflicts").collect()
         return eng, {
             "docs": sorted((r["doc_id"], r["text"] or "") for r in
                            eng.docs.select("doc_id", "text").collect()),

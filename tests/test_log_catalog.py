@@ -13,6 +13,19 @@ def test_non_local_root_fails_loudly():
         IndexCatalog("hdfs://nn:8020/warehouse/idx")
 
 
+def test_snapshot_rejects_another_format_version(tmp_root):
+    """A manifest of another layout fails loudly, naming the root and
+    both versions, instead of being read as this one."""
+    from konlspark.catalog import FORMAT_VERSION, IndexCatalog, Snapshot
+    cat = IndexCatalog(f"{tmp_root}/format_v1")
+    cat.commit_manifest({"format_version": 1, "tables": {"docs": ["docs"]}})
+    with pytest.raises(ValueError) as err:
+        Snapshot(None, cat)
+    for part in (cat.root, "format_version 1",
+                 f"format_version {FORMAT_VERSION}"):
+        assert part in str(err.value)
+
+
 def test_marker_reserve_and_last(tmp_root):
     """Each reserve replaces the marker before it: the directory holds
     one file however many searches were logged, and a marker left
@@ -37,6 +50,7 @@ def test_seq_gap_never_double_counts(spark, title_index):
     """A reserved-but-unwritten range (crash between marker reserve and
     parquet write) must leave a gap, not a reused range: subsequent
     appends and aggregation stay exact."""
+    from konlspark.catalog import Snapshot
     from konlspark.query import SearchEngine
     root, _ = title_index
     eng = SearchEngine(spark, root)
@@ -49,7 +63,7 @@ def test_seq_gap_never_double_counts(spark, title_index):
     eng._append_log([term])
     eng.aggregate_frequency()
     freq = {r["term"]: r["freq"]
-            for r in eng._read_token_freq().collect()}
+            for r in Snapshot(spark, eng.cat).read("token_freq").collect()}
     # exactly the two written occurrences counted, orphan range ignored
     assert freq[term] >= 2
     rows = (spark.read.parquet(eng.cat.table_path("query_log"))

@@ -11,7 +11,7 @@ SIGKILL. This tool proves the MUTATION path at the same scale:
    conflicts-TABLE growth matching the reported count;
 3. tombstone-delete 10k spread doc ids (base AND appended ranges);
 4. FULL QUERY PARITY: fingerprint the mutated index (multi-part
-   postings + tombstone anti-joins + df_delta-folded token_dict)
+   postings + tombstone anti-joins + the delete-committed token_dict)
    against a FRESH single-part build over the identical live corpus.
    Every fingerprint is keyed by text_hash / term — invariant to
    doc-id assignment, which legitimately differs (ids never recycle);
@@ -97,6 +97,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from konlspark import build, corpus, ingest
+    from konlspark.catalog import IndexCatalog, Snapshot
     from konlspark.query import SearchEngine
     from konlspark.session import get_spark
 
@@ -150,9 +151,11 @@ def main() -> None:
     dups = (tdf.orderBy("conv_id", "turn_idx").limit(dup_n)
             .withColumn("conv_id", F.concat(F.lit("dup-"), F.col("conv_id"))))
     batch = fresh.unionByName(dups)
-    # the base build already wrote its intra-corpus dup conflicts here;
-    # append APPENDS — assert the delta, not the absolute count
-    conflicts_before = spark.read.parquet(f"{root}/conflicts").count()
+    # the base build already committed its intra-corpus dup conflicts;
+    # the append adds a part — assert the delta, not the absolute count
+    def conflict_rows():
+        return Snapshot(spark, IndexCatalog(root)).read("conflicts").count()
+    conflicts_before = conflict_rows()
     t0 = time.time()
     res = ingest.append_batch(spark, root, batch)
     record["append_sec"] = round(time.time() - t0, 1)
@@ -161,7 +164,7 @@ def main() -> None:
     assert res["indexed"] + res["conflicts"] == args.append_turns, res
     # every dup-batch text already lives in the index → all conflict
     assert res["conflicts"] >= dup_n, (res, dup_n)
-    table_rows = spark.read.parquet(f"{root}/conflicts").count()
+    table_rows = conflict_rows()
     assert table_rows == conflicts_before + res["conflicts"], (
         "conflicts table != reported count", table_rows, res)
     print(f"  appended {res['indexed']}, conflicts {res['conflicts']} "
@@ -181,7 +184,7 @@ def main() -> None:
     # --- parity: mutated read path vs fresh build over same corpus ------
     eng_mut = SearchEngine(spark, root)
     assert not eng_mut.wand_safe, \
-        "pruning must auto-disable while tombstones/df_delta are live"
+        "pruning must auto-disable while tombstones are live"
     t0 = time.time()
     fp_mut = fingerprint(eng_mut)
     record["fingerprint_mut_sec"] = round(time.time() - t0, 1)

@@ -11,12 +11,16 @@ the plan properties we design for (SURVEY §4.2):
   no two-stage per-query top-k).
 
 Usage: python tools/explain_plans.py [index_root]
+(without a root, it builds a 3,000-turn index in a temp dir)
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,10 +36,11 @@ def main() -> None:
     if len(sys.argv) > 1:
         root = sys.argv[1]
     else:
-        root = "/tmp/konlspark_explain_idx"
-        if not os.path.exists(os.path.join(root, "_meta/manifest.json")):
-            pdf = corpus.make_transcripts(3000, seed=11)
-            build.build_index(spark, corpus.spark_transcripts(spark, pdf), root)
+        # a fresh build each run: a kept index may predate the format
+        root = tempfile.mkdtemp(prefix="konlspark_explain_")
+        atexit.register(shutil.rmtree, root, True)
+        pdf = corpus.make_transcripts(3000, seed=11)
+        build.build_index(spark, corpus.spark_transcripts(spark, pdf), root)
     eng = SearchEngine(spark, root)
 
     checks = []
@@ -76,9 +81,7 @@ def main() -> None:
     show("token_dict prefix scan",
          eng.token_dict.filter(F.col("decomposed").startswith("ㅌ"))
             .select("term").orderBy("term"),
-         # parquet PushedFilters (StringStartsWith) OR the cached
-         # InMemoryTableScan pushed predicate (token_dict is .cache()d
-         # by the engine; the filter pushes into the in-memory scan)
+         # parquet PushedFilters (StringStartsWith)
          ["StartsWith(decomposed"])
     show("phrase candidates join", eng.search(["마법", "특별"], "phrase",
                                               log=False), [])
