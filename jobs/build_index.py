@@ -6,9 +6,12 @@
         [--buckets 512] [--no-resume] [--positions]
 
 Input schema (BASELINE.json input_hint): conv_id string, turn_idx int,
-role string, text string, tool string, ts timestamp. On a cluster, set
-``--segments`` so one segment's postings fit comfortably in the
-executors (resume restarts at segment granularity).
+role string, text string, tool string, ts timestamp. ``--segments N``
+writes the postings as N contiguous term-bucket ranges (at most
+``--buckets``), each a final slice of the postings table with its own
+checkpoint; there is no merge pass. Every range reads all docs, so set
+it for restart granularity (resume reruns only unfinished ranges), not
+to bound memory.
 """
 
 from __future__ import annotations

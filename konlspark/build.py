@@ -21,11 +21,16 @@ table writer (:func:`write_tables`).
   (explicit skew split for head terms; AQE does not fix groupBy skew) →
   per-group sort → delta+varint block encoding (``codec``) with
   per-block max-score metadata for block-max WAND;
-- **resumable segmented build (B8/B7)**: postings built per doc-id-range
-  segment with a checkpoint + metrics (terms/sec, postings/partition,
-  skew ratio) per segment, fingerprinted by the docs' content digest
-  and the block layout, then merged with ``sortWithinPartitions``
-  segment merges.
+- **resumable segmented build (B8/B7)**: a segment is a contiguous
+  range of ``term_bucket``s cut to roughly equal postings. Each range
+  reads every doc and keeps its buckets' terms, so its posting lists are
+  complete and its blocks final: it writes straight into the one
+  ``postings`` table and no merge pass exists. Each range has a
+  checkpoint + metrics (terms/sec, postings/partition, skew ratio),
+  fingerprinted by the docs' content digest and the layout. The build,
+  a segmented build, an append and a compact share this one postings
+  writer. A positional layout tokenizes once: the docs carry each
+  token's occurrence indices, which the explode zips into the postings.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Callable, Iterator, List, Optional, Tuple
+from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -60,8 +65,9 @@ DEFAULT_N_BUCKETS = 32
 # Tokenize (P1-P4) — one Arrow pass
 # ---------------------------------------------------------------------------
 
-def _analyze_record_batch(batch) -> "object":
-    """One Arrow batch → same batch + tokens/tfs/doc_len/first_pos.
+def _analyze_record_batch(batch, positions: bool = False) -> "object":
+    """One Arrow batch → same batch + tokens/tfs/doc_len/first_pos, and
+    ``positions`` (each token's occurrence indices) when ``positions``.
 
     Hand-built ``ListArray``s (offsets + flat values): the pandas
     object-column → Arrow conversion that ``mapInPandas`` would do per
@@ -73,41 +79,47 @@ def _analyze_record_batch(batch) -> "object":
 
     texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
     toks, ords_, tfs, lens = tk.analyze_series(texts)
-    firsts = []
+    firsts, occs = [], []
     for token_set, ordered in zip(toks, ords_):
-        # first occurrence per token in the ordered morph stream,
-        # aligned with `tokens`; -1 = whitespace-set-only token
-        pos = {}
+        # occurrence indices per token in the ordered morph stream,
+        # aligned with `tokens`; [] (first_pos -1) = whitespace-set-only
+        # token, which no phrase can match
+        occ: dict = {}
         for i, t in enumerate(ordered):
-            if t not in pos:
-                pos[t] = i
-        firsts.append([pos.get(t, -1) for t in token_set])
-    offsets = np.zeros(len(toks) + 1, dtype=np.int32)
-    np.cumsum([len(x) for x in toks], out=offsets[1:])
-    off_arr = pa.array(offsets)
-    tokens_arr = pa.ListArray.from_arrays(
-        off_arr,
-        pa.array(list(itertools.chain.from_iterable(toks)), pa.string()))
-    tfs_arr = pa.ListArray.from_arrays(
-        off_arr,
-        pa.array(np.fromiter(itertools.chain.from_iterable(tfs),
-                             dtype=np.int32, count=int(offsets[-1]))))
-    firsts_arr = pa.ListArray.from_arrays(
-        off_arr,
-        pa.array(np.fromiter(itertools.chain.from_iterable(firsts),
-                             dtype=np.int32, count=int(offsets[-1]))))
-    lens_arr = pa.array(np.asarray(lens, dtype=np.int32))
+            occ.setdefault(t, []).append(i)
+        lists = [occ.get(t, ()) for t in token_set]
+        firsts.append([o[0] if o else -1 for o in lists])
+        if positions:
+            occs += lists
+
+    def nested(lists, values):
+        offsets = np.zeros(len(lists) + 1, dtype=np.int32)
+        np.cumsum([len(x) for x in lists], out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+    def ints(lists):
+        return nested(lists, pa.array(np.fromiter(
+            itertools.chain.from_iterable(lists), dtype=np.int32)))
+
+    cols = {"tokens": nested(toks, pa.array(
+                list(itertools.chain.from_iterable(toks)), pa.string())),
+            "tfs": ints(tfs),
+            "doc_len": pa.array(np.asarray(lens, dtype=np.int32)),
+            "first_pos": ints(firsts)}
+    if positions:
+        cols["positions"] = nested(toks, ints(occs))
     return pa.RecordBatch.from_arrays(
-        list(batch.columns) + [tokens_arr, tfs_arr, lens_arr, firsts_arr],
-        names=list(batch.schema.names)
-        + ["tokens", "tfs", "doc_len", "first_pos"])
+        list(batch.columns) + list(cols.values()),
+        names=list(batch.schema.names) + list(cols))
 
 
-def _analyzed_schema(schema: T.StructType) -> T.StructType:
+def _analyzed_schema(schema: T.StructType,
+                     positions: bool = False) -> T.StructType:
     return T.StructType.fromDDL(
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
         + ", tokens array<string>, tfs array<int>, doc_len int, "
-        "first_pos array<int>")
+        "first_pos array<int>"
+        + (", positions array<array<int>>" if positions else ""))
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +175,8 @@ def _survivors(batches, keys) -> Iterator:
 
 
 def rank(df: DataFrame, order_cols: Tuple[str, ...], start_id: int = 1,
-         dedup_keys: Tuple[str, ...] = (), analyze: bool = False) -> Ranked:
+         dedup_keys: Tuple[str, ...] = (), analyze: bool = False,
+         positions: bool = False) -> Ranked:
     """Dense ids ``start_id..`` (column ``doc_id``) in global
     ``order_cols`` order.
 
@@ -179,7 +192,8 @@ def rank(df: DataFrame, order_cols: Tuple[str, ...], start_id: int = 1,
     keys extend the within-partition sort so such rows are adjacent;
     ``n_dropped`` counts the repeats :func:`_survivors` drops.
     ``analyze`` tokenizes in the rank pass, which makes the docs stage
-    one Python stage.
+    one Python stage (with ``positions``: each token's occurrence
+    indices too).
     """
     import pyarrow as pa
     spark = df.sparkSession
@@ -235,9 +249,10 @@ def rank(df: DataFrame, order_cols: Tuple[str, ...], start_id: int = 1,
                 + [pa.array(np.arange(pos + 1, pos + 1 + n, dtype=np.int64))],
                 names=names)
             pos += n
-            yield _analyze_record_batch(out) if analyze else out
+            yield _analyze_record_batch(out, positions) if analyze else out
 
-    out_schema = _analyzed_schema(ids_schema) if analyze else ids_schema
+    out_schema = (_analyzed_schema(ids_schema, positions) if analyze
+                  else ids_schema)
     return Ranked(ranged.mapInArrow(rank_fn, out_schema),
                   acc - (start_id - 1), sum(r["tot"] - r["cnt"] for r in rows),
                   (ranged, b_off))
@@ -265,7 +280,8 @@ def dup_winner_map(hashed: DataFrame, key,
 
 
 def build_docs(transcripts: DataFrame, start_id: int = 1,
-               live: Optional[DataFrame] = None) -> Tuple[Ranked, DataFrame]:
+               live: Optional[DataFrame] = None,
+               positions: bool = False) -> Tuple[Ranked, DataFrame]:
     """Dedup + assign ids + analyze (one fused Python stage).
 
     Returns ``(docs, losers)``: ``docs`` is the :class:`Ranked` handle
@@ -278,7 +294,8 @@ def build_docs(transcripts: DataFrame, start_id: int = 1,
     ``live``: the live docs of the snapshot an append extends (the
     reference's hash-map probe). A row whose text a live doc holds is a
     loser to that doc — its whole hash group goes, so the winners among
-    the remaining rows are those a build would pick.
+    the remaining rows are those a build would pick. ``positions``: the
+    docs carry each token's occurrence indices (a positional layout).
 
     Dedup shape: duplicates are SPARSE in real corpora, so the decision
     is the narrow :func:`dup_winner_map` and survivors a broadcast-
@@ -319,7 +336,8 @@ def build_docs(transcripts: DataFrame, start_id: int = 1,
     # set, one Arrow round-trip) instead of two chained map stages
     try:
         docs = rank(survivors, ("conv_id", "turn_idx"), start_id,
-                    dedup_keys=_DEDUP_KEYS, analyze=True)
+                    dedup_keys=_DEDUP_KEYS, analyze=True,
+                    positions=positions)
     except BaseException:
         dup_winners.unpersist()
         raise
@@ -342,76 +360,45 @@ def build_docs(transcripts: DataFrame, start_id: int = 1,
 # Posting build (B3) — salted skew-split + block encoding
 # ---------------------------------------------------------------------------
 
-def explode_postings(docs: DataFrame) -> DataFrame:
-    """docs → (term, doc_id, tf, doc_len) rows."""
+def term_bucket(n_buckets: int, term="term") -> Column:
+    """The ``term_bucket`` partition of ``term`` (a column or its name)
+    — the one formula behind the postings layout, a segment's bucket
+    range and token_dict's stored bucket, which the query side filters
+    the postings scan on."""
+    return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
+
+
+def explode_postings(docs: DataFrame,
+                     buckets: Optional[Tuple[int, int, int]] = None
+                     ) -> DataFrame:
+    """docs → (term, doc_id, tf, doc_len) rows, plus ``positions`` when
+    the docs carry them (a positional layout). ``buckets = (lo, hi,
+    n_buckets)`` keeps only the terms whose ``term_bucket`` is in
+    ``[lo, hi)``, dropped from the zipped array before the explode."""
+    cols = [c for c in ("tokens", "tfs", "positions") if c in docs.columns]
+    zipped = F.arrays_zip(*cols)
+    if buckets is not None:
+        lo, hi, n = buckets
+        zipped = F.filter(zipped, lambda p: term_bucket(n, p["tokens"])
+                          .between(lo, hi - 1))
     return (
-        docs.select(
-            "doc_id", "doc_len",
-            F.explode(F.arrays_zip("tokens", "tfs")).alias("p"),
-        )
+        docs.select("doc_id", "doc_len", F.explode(zipped).alias("p"))
         .select(
             F.col("p.tokens").alias("term"),
             "doc_id",
             F.col("p.tfs").alias("tf"),
             "doc_len",
+            *[F.col(f"p.{c}").alias(c) for c in cols[2:]],
         )
     )
 
 
-def explode_postings_with_positions(docs: DataFrame) -> DataFrame:
-    """docs → (term, doc_id, tf, doc_len, positions) rows.
-
-    Positions are the token's occurrence indices in the SAME ordered
-    morph stream the contiguous-phrase recompute path walks
-    (``tk.tokenize_with_order(text)``) — stored-vs-recompute parity is
-    exact by construction. A whitespace-set-only token (in ``tokens``
-    but absent from the ordered stream) gets an empty list; neither
-    path can phrase-match it. One extra Arrow tokenize pass over the
-    docs — the documented cost of ``store_positions=True``.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms, ids, tfs, lens, poss = [], [], [], [], []
-            for doc_id, dlen, text, toks, tfv in zip(
-                    pdf["doc_id"], pdf["doc_len"], pdf["text"],
-                    pdf["tokens"], pdf["tfs"]):
-                pos: dict = {}
-                for i, t in enumerate(tk.tokenize_with_order(text)):
-                    pos.setdefault(t, []).append(i)
-                for t, tf in zip(toks, tfv):
-                    terms.append(t)
-                    ids.append(doc_id)
-                    tfs.append(tf)
-                    lens.append(dlen)
-                    poss.append(pos.get(t, []))
-            yield pd.DataFrame({
-                "term": terms,
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "tf": pd.Series(tfs, dtype="int32"),
-                "doc_len": pd.Series(lens, dtype="int32"),
-                "positions": poss,
-            })
-
-    return docs.select("doc_id", "doc_len", "text", "tokens", "tfs") \
-        .mapInPandas(fn, "term string, doc_id long, tf int, doc_len int, "
-                         "positions array<int>")
-
-
-def term_bucket(n_buckets: int) -> Column:
-    """The ``term_bucket`` partition of a ``term`` column — the one
-    formula behind the postings layout and token_dict's stored bucket,
-    which the query side filters the postings scan on."""
-    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-
-
-def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
-                   block_size: int = DEFAULT_BLOCK_SIZE,
-                   target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
-                   n_buckets: int = DEFAULT_N_BUCKETS,
-                   exploded: Optional[DataFrame] = None,
-                   store_positions: bool = False) -> DataFrame:
-    """Blocked, compressed postings from a docs DF, ``term_df`` giving
-    each term's (term, df) for the skew split.
+def build_postings(exploded: DataFrame, avgdl: float, term_df: DataFrame,
+                   block_size: int, target_per_split: int,
+                   n_buckets: int) -> DataFrame:
+    """Blocked, compressed postings from :func:`explode_postings` rows
+    (positional when they carry ``positions``), ``term_df`` giving each
+    term's (term, df) for the skew split.
 
     Skew handling: term df is Zipfian; a plain ``groupBy(term)`` routes a
     head term's entire posting list to one reducer. We pre-compute df,
@@ -421,13 +408,7 @@ def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
     term may overlap in doc-id range — readers never assume disjoint
     ranges (each doc appears in exactly one block per term).
     """
-    if store_positions:
-        # the shared tokens/tfs explode carries no positions — always
-        # derive the positional explode, even when a plain `exploded`
-        # was passed for the df computation
-        exploded = explode_postings_with_positions(docs)
-    elif exploded is None:
-        exploded = explode_postings(docs)
+    store_positions = "positions" in exploded.columns
     head = (
         term_df.filter(F.col("df") > target_per_split)
         .withColumn("n_splits",
@@ -489,18 +470,6 @@ def build_postings(docs: DataFrame, avgdl: float, term_df: DataFrame,
     return postings
 
 
-def build_token_dict(term_df: DataFrame) -> DataFrame:
-    """(term, df) → (term, df, decomposed) — replaces the reference trie
-    (``trie.py:139-154``): prefix search becomes a range predicate on the
-    sorted ``decomposed`` column (SURVEY §2.4 Q6)."""
-
-    @F.pandas_udf(T.StringType())
-    def decompose_udf(s: pd.Series) -> pd.Series:
-        return s.map(tk.decompose)
-
-    return term_df.withColumn("decomposed", decompose_udf("term"))
-
-
 # ---------------------------------------------------------------------------
 # Table writer — shared by the build, append and compaction
 # ---------------------------------------------------------------------------
@@ -539,29 +508,93 @@ def write_conflicts(cat: IndexCatalog, path: str, losers: DataFrame,
 
 
 def write_token_dict(cat: IndexCatalog, path: str, term_df: DataFrame,
-                     n_buckets: int, base: Optional[Snapshot] = None) -> None:
-    """Write the token_dict of ``term_df`` (term, df) to ``path``. With
-    ``base``, ``term_df`` holds df changes (negative for a delete) to
-    add to ``base``'s token_dict, and a term whose df reaches 0 is
+                     n_buckets: int, base: Optional[Snapshot] = None,
+                     new_terms: bool = True) -> None:
+    """Write the token_dict of ``term_df`` (term, df) to ``path``: each
+    term's df, ``decomposed`` form and ``term_bucket``. It replaces the
+    reference trie (``trie.py:139-154``): prefix search becomes a range
+    predicate on the sorted ``decomposed`` column (SURVEY §2.4 Q6).
+
+    With ``base``, ``term_df`` holds df changes (negative for a delete)
+    to add to ``base``'s token_dict, and a term whose df reaches 0 is
     dropped — the reference drops a term with its last posting
-    (``inverted_index.py:89-95``)."""
+    (``inverted_index.py:89-95``). Base rows carry their ``decomposed``
+    and ``term_bucket`` through, so only terms the base lacks are
+    decomposed (an append's Python stage passes the stored forms on);
+    ``new_terms=False`` (a delete, which only lowers df) runs no Python
+    stage."""
+
+    @F.pandas_udf(T.StringType())
+    def decompose_udf(term: pd.Series, stored: pd.Series) -> pd.Series:
+        new = stored.isna()  # a base row keeps its stored form
+        return stored.mask(new, term[new].map(tk.decompose))
+
+    # one aggregate, no branch: splitting the known rows from the new
+    # ones and re-joining them cost one more job per write
+    rows = term_df.select("term", "df",
+                          F.lit(None).cast("string").alias("decomposed"),
+                          F.lit(None).cast("int").alias("term_bucket"))
     if base is not None:
-        term_df = (base.read("token_dict").select("term", "df")
-                   .unionByName(term_df)
-                   .groupBy("term").agg(F.sum("df").alias("df"))
-                   .filter(F.col("df") > 0))
-    (build_token_dict(term_df)
-     .withColumn("term_bucket", term_bucket(n_buckets))
-     .repartitionByRange(max(1, n_buckets // 4), "decomposed")
+        rows = (base.read("token_dict").select(*rows.columns)
+                .unionByName(rows).groupBy("term")
+                .agg(F.sum("df").alias("df"),
+                     F.max("decomposed").alias("decomposed"),
+                     F.max("term_bucket").alias("term_bucket"))
+                .filter(F.col("df") > 0))
+    if new_terms:
+        rows = rows.withColumns({
+            "decomposed": decompose_udf("term", "decomposed"),
+            "term_bucket": F.coalesce("term_bucket", term_bucket(n_buckets))})
+    (rows.repartitionByRange(max(1, n_buckets // 4), "decomposed")
      .sortWithinPartitions("decomposed")
      .write.mode("overwrite").parquet(cat.table_path(path)))
+
+
+def bucket_ranges(term_df: DataFrame, n_buckets: int,
+                  n_segments: int) -> List[Tuple[int, int, np.ndarray]]:
+    """Cut ``[0, n_buckets)`` into ``n_segments`` contiguous
+    ``term_bucket`` ranges of roughly equal postings, from one small
+    aggregate of ``term_df``: ``(lo, hi, per)`` per range, ``per`` its
+    buckets' (postings, terms) rows."""
+    per = np.zeros((n_buckets, 2), dtype=np.int64)
+    for r in (term_df.groupBy(term_bucket(n_buckets))
+              .agg(F.sum("df"), F.count(F.lit(1))).collect()):
+        per[r[0]] = (r[1], r[2])
+    cum = np.cumsum(per[:, 0])
+    cuts = [0]
+    for k in range(1, n_segments):
+        # the bucket boundary nearest the k-th equal share of postings
+        end = int(np.abs(cum - cum[-1] * k / n_segments).argmin()) + 1
+        cuts.append(min(max(end, cuts[-1] + 1), n_buckets - n_segments + k))
+    cuts.append(n_buckets)
+    return [(lo, hi, per[lo:hi]) for lo, hi in zip(cuts, cuts[1:])]
+
+
+def _commit_range(cat: IndexCatalog, seg: int, fingerprint: str,
+                  lo: int, hi: int, per: np.ndarray, n_docs: int,
+                  elapsed: float) -> dict:
+    """Checkpoint range ``seg`` of a segmented build, its metrics taken
+    from its buckets' (postings, terms) rows; returns ``{id: entry}``."""
+    n, terms = (int(x) for x in per.sum(axis=0))
+    parts = [int(x) for x in per[:, 0]]
+    seg_id = f"segment={seg:05d}"
+    entry = {"fingerprint": fingerprint,
+             # every range reads all docs and writes its own buckets
+             "lineage": {"doc_id_range": [1, n_docs + 1],
+                         "term_buckets": [lo, hi], "input_docs_table": "docs"},
+             "metrics": {"elapsed_sec": elapsed, "postings": n, "terms": terms,
+                         "terms_per_sec": terms / elapsed if elapsed else 0.0,
+                         "postings_per_partition": parts,
+                         "skew_ratio": max(parts) / max(1.0, n / len(parts))}}
+    cat.commit_segment(seg_id, entry)
+    return {seg_id: entry}
 
 
 def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
                  ranked: Ranked, losers: Optional[DataFrame] = None,
                  base: Optional[Snapshot] = None,
-                 target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
-                 write_postings: Optional[Callable] = None) -> dict:
+                 n_segments: Optional[int] = None,
+                 resume: bool = True) -> dict:
     """Write the tables of one docs stage — the table writer of
     :func:`build_index`, ``ingest.append_batch`` and ``ingest.compact``:
 
@@ -573,22 +606,26 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
       (:func:`write_conflicts`) and the token_dict at
       ``paths["token_dict"]`` (:func:`write_token_dict`), as concurrent
       jobs;
-    - the postings at ``paths["postings"]``, or through
-      ``write_postings(docs, avgdl, term_df, digest)``.
+    - the postings at ``paths["postings"]``, one write per term-bucket
+      range: a build's ``n_segments`` ranges (:func:`bucket_ranges`) are
+      checkpointed, and ``resume`` skips a range whose checkpoint
+      matches; a build that skips none forgets them all, as its first
+      write clears the table. Later writes replace only their buckets.
 
-    ``layout`` holds the manifest's ``n_buckets``, ``block_size`` and
-    ``positions``. ``base`` is the snapshot an append extends: its live
-    docs resolve conflicts, its token_dict df is added in and its
-    ``avgdl_built`` weights the blocks; otherwise blocks are weighted
-    at the written docs' avgdl. Side jobs are joined and ``ranked``
-    released on every path. Returns
-    ``n_docs``, ``total_doc_len``, ``avgdl``, ``n_conflicts`` and the
-    ``phases`` timings.
+    ``layout`` holds the manifest's ``n_buckets``, ``block_size``,
+    ``target_per_split`` and ``positions``. ``base`` is the snapshot an
+    append extends: its live docs resolve conflicts, its token_dict df
+    is added in and its ``avgdl_built`` weights the blocks; otherwise
+    blocks are weighted at the written docs' avgdl. Side jobs are
+    joined and ``ranked`` released on every path. Returns ``n_docs``,
+    ``total_doc_len``, ``avgdl``, ``n_conflicts``, the
+    ``segment_metrics`` of the ranges written and the ``phases``
+    timings.
     """
     spark = ranked.df.sparkSession
     n_buckets, block_size = int(layout["n_buckets"]), int(layout["block_size"])
-    store_positions = bool(layout["positions"])
-    out: dict = {"phases": {}, "n_conflicts": 0}
+    target = int(layout["target_per_split"])
+    out: dict = {"phases": {}, "n_conflicts": 0, "segment_metrics": []}
     t = time.time()
 
     def mark(name: str) -> None:
@@ -604,7 +641,7 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
     try:
         # write docs FIRST: tokenization runs exactly once, streamed straight
         # into the parquet write (no wide-row cache); every downstream pass
-        # (explode, segments) re-reads the columnar file with column
+        # (explode, ranges) re-reads the columnar file with column
         # pruning — cheaper than caching tokenized rows in the block manager.
         # The corpus stats ride along as observe() metrics: CollectMetrics
         # folds them into the very write pass that produces the rows, so no
@@ -627,9 +664,9 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
                                          paths["conflicts"], losers, docs,
                                          base))
 
-        # explode once; term_df feeds token_dict AND the salting decision
-        # (cached — whichever concurrent consumer runs first fills it, the
-        # other reads the cache behind the block locks)
+        # explode once; term_df feeds token_dict, the salting decision
+        # and the range cuts (cached — whichever concurrent consumer runs
+        # first fills it, the others read the cache behind the block locks)
         exploded = explode_postings(docs)
         term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
                    .persist(StorageLevel.MEMORY_AND_DISK))
@@ -653,14 +690,37 @@ def write_tables(cat: IndexCatalog, layout: dict, paths: dict,
         # an append's blocks share the avgdl of the snapshot's others
         block_avgdl = (avgdl if base is None
                        else float(base.manifest["avgdl_built"]))
-        if write_postings is None:
-            (build_postings(docs, block_avgdl, term_df, block_size,
-                            target_per_split, n_buckets, exploded=exploded,
-                            store_positions=store_positions)
-             .write.mode("overwrite").partitionBy("term_bucket")
+        # a range reads every doc and keeps its buckets' terms, so its
+        # posting lists are complete and its blocks final, salted by the
+        # global term_df: the ranges' rows are a one-range write's rows
+        ranges, skip = [(0, n_buckets, None)], set()
+        if n_segments is not None and n_segments > 1:
+            ranges = bucket_ranges(term_df, n_buckets, n_segments)
+            key = (f"{n_docs}:{obs.get['digest']}:n{n_buckets}:bs{block_size}"
+                   f":t{target}:pos{int(bool(layout['positions']))}")
+            fps = [f"{key}:{i}/{n_segments}:b{lo}-{hi}"
+                   for i, (lo, hi, _) in enumerate(ranges)]
+            done = cat.read_segments()["segments"] if resume else {}
+            skip = {i for i, fp in enumerate(fps) if fp == done.get(
+                f"segment={i:05d}", {}).get("fingerprint")}
+        if n_segments is not None and not skip:
+            cat.drop_segments("segment=")
+        mode = "dynamic" if skip else "static"
+        for i, (lo, hi, per) in enumerate(ranges):
+            if i in skip:
+                continue
+            t1 = time.time()
+            rows = (exploded if per is None
+                    else explode_postings(docs, (lo, hi, n_buckets)))
+            (build_postings(rows, block_avgdl, term_df, block_size, target,
+                            n_buckets)
+             .write.mode("overwrite").option("partitionOverwriteMode", mode)
+             .partitionBy("term_bucket")
              .parquet(cat.table_path(paths["postings"])))
-        else:
-            write_postings(docs, block_avgdl, term_df, obs.get["digest"])
+            mode = "dynamic"
+            if per is not None:
+                out["segment_metrics"].append(_commit_range(
+                    cat, i, fps[i], lo, hi, per, n_docs, time.time() - t1))
     finally:
         side_jobs.shutdown()  # waits: no side job outlives the call
         if term_df is not None:
@@ -686,50 +746,44 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
                 store_positions: bool = False) -> dict:
     """Build a queryable index at ``root``; returns the manifest.
 
-    ``n_segments > 1`` builds postings per doc-id-range segment with a
-    fingerprinted checkpoint each (resume skips committed segments),
-    then merges segments into the final postings table.
+    ``n_segments > 1`` (at most ``n_buckets``) writes the postings as
+    that many term-bucket ranges, each with a fingerprinted checkpoint
+    that resume skips; no merge pass follows (:func:`write_tables`).
 
     ``n_buckets`` defaults to ``max(32, cluster parallelism)`` — the
     bucket count caps posting-write parallelism (one file per bucket),
     so it must grow with the cluster, not stay pinned at 32.
 
-    ``store_positions=True`` stores per-occurrence positions in the
-    posting blocks (codec.encode_positions) and records it in the
-    manifest; ``search_phrase_contiguous`` then verifies adjacency from
-    stored positions instead of re-tokenizing candidate docs — at the
-    100 TB target, a phrase of common morphs has a df(rarest)-bounded
-    but still huge candidate set, and the per-doc Python re-tokenize
-    becomes the floor the stored path removes. Appends and compaction
-    inherit the flag from the manifest.
+    ``store_positions=True`` stores per-occurrence positions in the docs
+    and the posting blocks (codec.encode_positions) and records it in
+    the manifest; ``search_phrase_contiguous`` then verifies adjacency
+    from stored positions instead of re-tokenizing candidate docs — at
+    the 100 TB target, a phrase of common morphs has a
+    df(rarest)-bounded but still huge candidate set, and the per-doc
+    Python re-tokenize becomes the floor the stored path removes.
+    Appends and compaction inherit the layout (``n_buckets``,
+    ``block_size``, ``target_per_split``, ``positions``) from the
+    manifest.
     """
     if n_buckets is None:
         n_buckets = max(DEFAULT_N_BUCKETS,
                         spark.sparkContext.defaultParallelism)
+    if n_segments > n_buckets:
+        raise ValueError(f"n_segments={n_segments} exceeds n_buckets="
+                         f"{n_buckets}: a segment is a term-bucket range")
     cat = IndexCatalog(root)
     t0 = time.time()
-    ranked, losers = build_docs(transcripts)
+    ranked, losers = build_docs(transcripts, positions=store_positions)
     phases = {"dedup_assign_ids": round(time.time() - t0, 2)}
     # n_docs / max_doc_id fall out of the ranked offsets (dense ids 1..n)
     n_docs = ranked.n_rows
-    build_metrics: List[dict] = []
-
-    def write_segments(docs: DataFrame, avgdl: float, term_df: DataFrame,
-                       digest: int) -> None:
-        seg_dirs = _build_segments(
-            spark, cat, docs, avgdl, n_docs, n_segments, block_size,
-            target_per_split, n_buckets, resume, build_metrics,
-            term_df=term_df, digest=digest, store_positions=store_positions)
-        merge_segments(spark, seg_dirs, cat.table_path("postings"),
-                       avgdl, block_size, n_buckets,
-                       store_positions=store_positions)
-
+    layout = {"n_buckets": n_buckets, "block_size": block_size,
+              "target_per_split": target_per_split,
+              "positions": store_positions}
     out = write_tables(
-        cat, {"n_buckets": n_buckets, "block_size": block_size,
-              "positions": store_positions},
+        cat, layout,
         {t: t for t in ("docs", "postings", "token_dict", "conflicts")},
-        ranked, losers, target_per_split=target_per_split,
-        write_postings=write_segments if n_segments > 1 else None)
+        ranked, losers, n_segments=n_segments, resume=resume)
     phases.update(out["phases"])
     manifest = {
         "format_version": FORMAT_VERSION,
@@ -743,117 +797,12 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
                    "token_dict": ["token_dict"], "tombstones": [],
                    "conflicts": ["conflicts"], "token_freq": []},
         "freq_offset": 0,
-        "n_buckets": n_buckets,
-        "block_size": block_size,
+        **layout,
         "bm25": {"k1": BM25_K1, "b": BM25_B},
         "build_seconds": time.time() - t0,
         "build_phases": phases,
         "n_segments": n_segments,
-        "segment_metrics": build_metrics,
-        "positions": store_positions,
+        "segment_metrics": out["segment_metrics"],
     }
     cat.commit_manifest(manifest)
     return manifest
-
-
-def _segment_fingerprint(n_docs: int, digest: Optional[int], seg: int,
-                         n_segments: int, block_size: int,
-                         target_per_split: int,
-                         store_positions: bool = False) -> str:
-    """A segment's checkpoint key: the docs' size and content digest
-    (:func:`write_tables`) and every setting its blocks depend on, so a
-    resume never keeps a segment of another corpus or layout."""
-    pos = ":pos" if store_positions else ""
-    return (f"v2:{n_docs}:{digest}:{seg}/{n_segments}:bs{block_size}"
-            f":t{target_per_split}{pos}")
-
-
-def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
-                    n_docs: int, n_segments: int, block_size: int,
-                    target_per_split: int, n_buckets: int, resume: bool,
-                    metrics_out: List[dict], term_df: DataFrame,
-                    digest: Optional[int],
-                    store_positions: bool = False) -> List[str]:
-    """Per-segment posting build with checkpoint + lineage + metrics."""
-    seg_dirs = []
-    bound = n_docs + 1
-    for seg in range(n_segments):
-        seg_id = f"segment={seg:05d}"
-        seg_dir = cat.table_path(f"_segments/{seg_id}")
-        seg_dirs.append(seg_dir)
-        fp = _segment_fingerprint(n_docs, digest, seg, n_segments,
-                                  block_size, target_per_split,
-                                  store_positions)
-        if resume and cat.segment_committed(seg_id, fp):
-            continue
-        t0 = time.time()
-        lo = 1 + seg * bound // n_segments
-        hi = 1 + (seg + 1) * bound // n_segments
-        seg_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        # global term_df over-estimates per-segment df → at worst a few
-        # extra salt splits for head terms; saves a per-segment agg pass
-        postings = build_postings(seg_docs, avgdl, term_df, block_size,
-                                  target_per_split, n_buckets,
-                                  store_positions=store_positions)
-        postings.write.mode("overwrite").parquet(seg_dir)
-        agg = spark.read.parquet(seg_dir).groupBy(
-            F.spark_partition_id().alias("_p")).agg(
-            F.sum("n").alias("postings"), F.countDistinct("term").alias("terms"))
-        rows = agg.collect()
-        postings_per_part = [int(r["postings"]) for r in rows] or [0]
-        n_postings = sum(postings_per_part)
-        n_terms = sum(int(r["terms"]) for r in rows)
-        elapsed = time.time() - t0
-        mean_p = max(1.0, n_postings / max(1, len(postings_per_part)))
-        entry = {
-            "fingerprint": fp,
-            "lineage": {"doc_id_range": [lo, hi], "input_docs_table": "docs"},
-            "metrics": {
-                "elapsed_sec": elapsed,
-                "postings": n_postings,
-                "terms": n_terms,
-                "terms_per_sec": n_terms / elapsed if elapsed > 0 else 0.0,
-                "postings_per_partition": postings_per_part,
-                "skew_ratio": max(postings_per_part) / mean_p,
-            },
-        }
-        cat.commit_segment(seg_id, entry)
-        metrics_out.append({seg_id: entry})
-    return seg_dirs
-
-
-def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
-                   avgdl: float, block_size: int, n_buckets: int,
-                   store_positions: bool = False) -> None:
-    """B7: union segment posting blocks → repartition by (term, salt) →
-    sortWithinPartitions → decode-concat-re-encode into final blocks.
-
-    Segments hold disjoint doc-id ranges, so concatenating their decoded
-    arrays in ``first_doc_id`` order is already globally sorted per term.
-    Positional segments re-encode the per-doc position lists alongside.
-    """
-    union = spark.read.parquet(*seg_dirs)
-
-    def merge_group(key, pdf):
-        import pyarrow as pa
-        term, salt = key
-        batch = pa.RecordBatch.from_pandas(pdf.sort_values("first_doc_id"),
-                                           preserve_index=False)
-        dec = codec.decode_blocks(batch, ("tf", "doc_len", "positions")
-                                  if store_positions else ("tf", "doc_len"))
-        order = np.argsort(dec["doc_id"], kind="stable")
-        positions = (dec["positions"].to_numpy(zero_copy_only=False)[order]
-                     if store_positions else None)
-        return codec.encode_blocks(
-            term, salt, dec["doc_id"][order], dec["tf"][order],
-            dec["doc_len"][order], avgdl, block_size, positions)
-
-    merged = (
-        union.repartition("term", "salt")
-        .groupBy("term", "salt")
-        .applyInPandas(merge_group,
-                       codec.BLOCK_POS_SCHEMA if store_positions
-                       else codec.BLOCK_SCHEMA)
-        .withColumn("term_bucket", term_bucket(n_buckets))
-    )
-    merged.write.mode("overwrite").partitionBy("term_bucket").parquet(out_path)

@@ -13,16 +13,21 @@ Layout of an index root (``<table>*`` = the table's part dirs):
 
     root/
       _meta/manifest.json   # the snapshot: stats + table → part dirs
-      _meta/segments.json   # per-segment build checkpoints + metrics
-      docs*/                # parquet, range-partitioned by doc_id
-      postings*/            # parquet, dir-partitioned by term_bucket
+      _meta/segments.json   # per-range build checkpoints + metrics
+      docs*/                # parquet, range-partitioned by doc_id; a
+                            # positional layout adds `positions`
+      postings*/            # parquet, dir-partitioned by term_bucket; a
+                            # segmented build writes each bucket range
       token_dict*/          # parquet, sorted by decomposed
       tombstones/, conflicts*/, token_freq_v*/
       query_log/            # append-only parquet, seq-id marker
 
 Every table except ``query_log`` is a manifest part list, read as
 written through :class:`Snapshot`; ``freq_offset`` is the last
-query-log seq id folded into ``token_freq``.
+query-log seq id folded into ``token_freq``. The manifest also holds
+the layout appends and compaction reuse: ``n_buckets``, ``block_size``,
+``target_per_split`` and ``positions``. Format 3 added
+``target_per_split`` and the positional docs' ``positions`` column.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ import time
 from typing import Any, Dict, Optional
 
 # the manifest layout this code writes and reads (see Snapshot)
-FORMAT_VERSION = 2
+FORMAT_VERSION = 3
 
 
 class IndexCatalog:
@@ -105,9 +110,13 @@ class IndexCatalog:
         state["segments"][segment_id] = entry
         self._write_json_atomic(self.segments_path, state)
 
-    def segment_committed(self, segment_id: str, fingerprint: str) -> bool:
-        entry = self.read_segments()["segments"].get(segment_id)
-        return bool(entry) and entry.get("fingerprint") == fingerprint
+    def drop_segments(self, prefix: str) -> None:
+        """Forget every checkpoint whose id starts with ``prefix``."""
+        state = self.read_segments()
+        kept = {k: v for k, v in state["segments"].items()
+                if not k.startswith(prefix)}
+        if len(kept) < len(state["segments"]):
+            self._write_json_atomic(self.segments_path, {"segments": kept})
 
     # sequence high-water markers (query-log hot path) -----------------------
     #

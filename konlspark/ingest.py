@@ -16,16 +16,19 @@ unreferenced files only):
   ``max_doc_id + 1`` (ids never reused: ``test_konlsearch.py:345-356``
   pins that a delete + re-index advances the id); ``build.write_tables``
   writes docs + postings + the batch's CONFLICT rows as NEW parts and
-  a token_dict of old + batch df.
+  a token_dict of old + batch df, decomposing only the new terms.
 - :func:`delete_docs` — a tombstone part (readers anti-join it) and a
-  token_dict of old − victim df, a term gone with its last posting.
+  token_dict of old − victim df, a term gone with its last posting (no
+  Python stage: every row keeps its stored ``decomposed``).
   BM25 global stats (n_docs, total_doc_len) are maintained in the
   manifest; block-max metadata goes stale until compaction, so the
   engine falls back from WAND pruning to the exact path while
   tombstones are live.
 - :func:`compact` — rewrites the live docs through ``build.write_tables``
-  into new versioned dirs (B7 merge shape), drops tombstones, folds the
-  conflict parts into one and restores exact block-max metadata.
+  into new versioned dirs with the manifest's layout (``n_buckets``,
+  ``block_size``, ``target_per_split``, ``positions``), drops
+  tombstones, folds the conflict parts into one and restores exact
+  block-max metadata.
 """
 
 from __future__ import annotations
@@ -62,7 +65,8 @@ def append_batch(spark: SparkSession, root: str,
     part = f"batch_{next_part:06d}"
     first_id = manifest["max_doc_id"] + 1
     docs, losers = B.build_docs(transcripts, start_id=first_id,
-                                live=snap.live_docs())
+                                live=snap.live_docs(),
+                                positions=manifest["positions"])
     n_new = docs.n_rows
     conflicts = f"conflicts_parts/{part}"
     snap.tables["conflicts"].append(conflicts)
@@ -125,7 +129,7 @@ def delete_docs(spark: SparkSession, root: str,
             cat, token_dict,
             victims.select(F.explode("tokens").alias("term"))
             .groupBy("term").agg((-F.count("*")).alias("df")),
-            manifest["n_buckets"], base=snap)
+            manifest["n_buckets"], base=snap, new_terms=False)
     finally:
         victims.unpersist()
 

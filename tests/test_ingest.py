@@ -231,6 +231,34 @@ def test_delete_commits_the_live_token_dict(spark, fresh_index):
     assert committed() == {t: len(ids) for t, ids in ora.postings.items()}
 
 
+def test_mutated_token_dict_equals_a_fresh_build(spark, fresh_index,
+                                                  tmp_path):
+    """An append decomposes only its new terms and a delete carries the
+    stored rows through: after append → delete, and again after compact,
+    the committed token_dict rows (term, df, decomposed, term_bucket)
+    equal a fresh build's over the live texts."""
+    root = fresh_index
+    # doc 133 adds terms, TITLES[5] is a conflict, doc 134 is deleted
+    texts = ["완전히 새로운 낱말 조합 qwertyuiop", TITLES[5], "기동전사 zxcvb"]
+    ingest.append_batch(spark, root, _batch_df(spark, texts))
+    ingest.delete_docs(spark, root, [38, 10, 134])
+
+    def rows(r):
+        return sorted(tuple(x) for x in _snap(spark, r).read("token_dict")
+                      .select("term", "df", "decomposed", "term_bucket")
+                      .collect())
+
+    live = [t for i, t in enumerate(TITLES, 1) if i not in (38, 10)]
+    fresh = str(tmp_path / "fresh")
+    build.build_index(spark, _batch_df(spark, live + texts[:1]), fresh)
+    want = rows(fresh)
+    assert ("qwertyuiop", 1) in {x[:2] for x in want}
+    assert "zxcvb" not in {x[0] for x in want}
+    assert rows(root) == want
+    ingest.compact(spark, root)
+    assert rows(root) == want
+
+
 def test_frequency_survives_append_and_compact(spark, fresh_index):
     """log → aggregate_frequency → append_batch → compact keeps
     search_by_frequency unchanged (each commit keeps token_freq and

@@ -105,9 +105,30 @@ def test_stored_positions_match_bruteforce(peng, zipf_corpus):
     assert got == want
 
 
+def test_positional_docs_store_occurrence_indices(spark, pos_index):
+    """A positional build tokenizes once: the docs' ``positions`` hold
+    each token's occurrence indices in ``tk.tokenize_with_order(text)``
+    (empty for a whitespace-set-only token), and ``first_pos`` each
+    list's first element, or -1 when it is empty."""
+    from konlspark import tokenizer as tk
+    rows = spark.read.parquet(f"{pos_index[0]}/docs").select(
+        "text", "tokens", "first_pos", "positions").collect()
+    assert len(rows) > 1000
+    n_empty = 0
+    for r in rows:
+        occ = {}
+        for i, t in enumerate(tk.tokenize_with_order(r["text"])):
+            occ.setdefault(t, []).append(i)
+        want = [occ.get(t, []) for t in r["tokens"]]
+        assert [list(p) for p in r["positions"]] == want
+        assert list(r["first_pos"]) == [p[0] if p else -1 for p in want]
+        n_empty += sum(not p for p in want)
+    assert n_empty > 0  # whitespace-set-only tokens are covered
+
+
 @pytest.fixture(scope="module")
 def pos_seg_root(spark, tmp_root, zipf_corpus):
-    """The pos_index build, split into 3 segments and merged."""
+    """The pos_index build, split into 3 term-bucket-range segments."""
     from konlspark import build, corpus
     root = f"{tmp_root}/pos_seg_index"
     tdf = corpus.spark_transcripts(spark, zipf_corpus)
@@ -128,9 +149,9 @@ def test_positions_survive_segment_merge(spark, pos_seg_root):
 
 def test_merged_positional_blocks_equal_built(pos_index, pos_seg_root,
                                               postings_rows):
-    """Merge and build share one block encoder: the merged positional
-    postings equal the 1-segment build's, pos_counts/positions
-    included."""
+    """Segments and the one-shot build share one postings writer: the
+    segmented positional postings equal the 1-segment build's,
+    pos_counts/positions included."""
     merged, built = postings_rows(pos_seg_root), postings_rows(pos_index[0])
     assert len(merged) > 0
     assert merged == built

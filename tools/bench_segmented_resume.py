@@ -10,8 +10,10 @@ this tool proves it at bench scale with a REAL mid-build kill:
 4. assert the re-run SKIPPED every previously-committed segment
    (manifest.segment_metrics lists only segments actually built in the
    final run) and rebuilt exactly the rest;
-5. run the bench golden check against the merged index (the stored
-   1M-turn key) — the resumed index must be bit-for-bit query-correct.
+5. run the bench golden check against the resumed index (the stored
+   key of that corpus size) — it must be bit-for-bit query-correct.
+   Each segment is a term-bucket range written straight into the one
+   postings table; there is no merge pass.
 
 Records evidence to BENCH/segmented_resume_r<round>.json.
 
@@ -141,7 +143,7 @@ def main() -> None:
     print(f"  resumed: skipped {len(committed_before)}, rebuilt "
           f"{len(rebuilt)} ({t2:.1f}s)")
 
-    # golden check on the merged index (same corpus key as bench.py)
+    # golden check on the resumed index (same corpus key as bench.py)
     import types
 
     import bench
