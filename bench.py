@@ -346,10 +346,14 @@ def main() -> None:
                      .orderBy(F.desc("df"), F.asc("term"))
                      .first()["term"])
         rh = ["topicmarker", head_term]
+        # the pruning probes test the Spark tier's plans, which a small
+        # request would skip for the driver tier (SearchEngine._local)
+        spark_eng = SearchEngine(spark, root)
+        spark_eng.LOCAL_MAX_POSTINGS = 0
         rh_wand = [(r["doc_id"], round(r["score"], 6)) for r in
-                   eng.bm25_topk(rh, k=10, use_wand=True).collect()]
+                   spark_eng.bm25_topk(rh, k=10, use_wand=True).collect()]
         rh_exact = [(r["doc_id"], round(r["score"], 6)) for r in
-                    eng.bm25_topk(rh, k=10, use_wand=False).collect()]
+                    spark_eng.bm25_topk(rh, k=10, use_wand=False).collect()]
         assert rh_wand == rh_exact, ("MaxScore != exact", rh_wand, rh_exact)
         guarded2("q10_bm25_rare_head_wand", lambda: eng.bm25_topk(
             rh, k=10, use_wand=True).collect())
@@ -424,28 +428,28 @@ def main() -> None:
 
         def batch_rows(use_wand):
             got = {}
-            for r in eng.bm25_topk_batch(batch_rh, k=10,
-                                         use_wand=use_wand).collect():
+            for r in spark_eng.bm25_topk_batch(batch_rh, k=10,
+                                               use_wand=use_wand).collect():
                 got.setdefault(r["query_id"], []).append(
                     (r["doc_id"], round(r["score"], 6)))
             return got
 
         brh_exact = batch_rows(False)
-        old_gate = eng.MAXSCORE_MIN_NE_POSTINGS
-        eng.MAXSCORE_MIN_NE_POSTINGS = 0
+        old_gate = spark_eng.MAXSCORE_MIN_NE_POSTINGS
+        spark_eng.MAXSCORE_MIN_NE_POSTINGS = 0
         try:
             # engagement: does the planner find a pruning plan for the
             # batch; parity: the public engaged plan equals exact
-            meta_b = eng._term_meta(
+            meta_b = spark_eng._term_meta(
                 [t for ts in batch_rh.values() for t in ts])
             extras["batch_maxscore_engaged"] = (
-                eng._prune_plan(batch_rh, meta_b, 10) is not None)
+                spark_eng._prune_plan(batch_rh, meta_b, 10) is not None)
             assert batch_rows(True) == brh_exact, "batch MaxScore != exact"
-            timed2("batch16_rh_wand", lambda: eng.bm25_topk_batch(
+            timed2("batch16_rh_wand", lambda: spark_eng.bm25_topk_batch(
                 batch_rh, k=10, use_wand=True).collect())
         finally:
-            eng.MAXSCORE_MIN_NE_POSTINGS = old_gate
-        timed2("batch16_rh_exact", lambda: eng.bm25_topk_batch(
+            spark_eng.MAXSCORE_MIN_NE_POSTINGS = old_gate
+        timed2("batch16_rh_exact", lambda: spark_eng.bm25_topk_batch(
             batch_rh, k=10, use_wand=False).collect())
         extras["batch_maxscore_gate_dropped_for_timing"] = True
 

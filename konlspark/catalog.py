@@ -39,6 +39,8 @@ import tempfile
 import time
 from typing import Any, Dict, Optional
 
+import pyarrow.dataset as ds
+
 # the manifest layout this code writes and reads (see Snapshot)
 FORMAT_VERSION = 3
 
@@ -192,6 +194,17 @@ class Snapshot:
                 out = df if out is None else out.unionByName(df)
             self._read[name] = out
         return self._read[name]
+
+    def dataset(self, name: str):
+        """One pyarrow dataset over every part of table ``name`` (None
+        when it has none), for driver-side reads that launch no Spark
+        job. ``term_bucket=`` dirs read as a partition column, and
+        ``_``/``.`` files (markers, checksums) are skipped as Spark
+        skips them."""
+        parts = [ds.dataset(self.cat.table_path(p), format="parquet",
+                            partitioning="hive")
+                 for p in self.tables.get(name) or []]
+        return ds.dataset(parts) if parts else None
 
     def live_docs(self):
         """The docs no tombstone names."""

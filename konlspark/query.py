@@ -5,28 +5,38 @@ golden outputs) while executing as pruned, mostly map-side DataFrame
 plans:
 
 - query terms → df + term_bucket per term from the snapshot's term
-  dictionary, collected to the driver once per :meth:`SearchEngine.refresh`
-  (footprint grows with the vocabulary, not the corpus): planning and
-  prefix suggestions launch no Spark job;
+  dictionary, read to the driver with pyarrow once per
+  :meth:`SearchEngine.refresh` (footprint grows with the vocabulary,
+  not the corpus): planning and prefix suggestions launch no Spark job;
 - ``postings`` scan filters ``term_bucket IN (...) AND term IN (...)``
   → directory-level partition pruning + row-group stats pruning; only
   buckets holding query terms are touched;
-- block decode is one batch decoder (:meth:`SearchEngine._decode`): an
-  Arrow ``mapInArrow`` over ``codec.decode_blocks`` — one numpy varint
-  pass per binary column per batch, its scan projected to the columns
-  the caller asks for, with optional per-term candidate-id block
-  skipping;
+- block decode and scoring is one kernel (:func:`_score_batch`) over
+  ``codec.decode_blocks`` — one numpy varint pass per binary column
+  per Arrow batch, its scan projected to the columns the caller asks
+  for, with optional per-term candidate-id block skipping; the Spark
+  tier runs it in a ``mapInArrow`` (:meth:`SearchEngine._decode`),
+  the driver tier on pyarrow batches;
 - one request core (:meth:`SearchEngine._request`) serves boolean
   and BM25, single and batched: AND/OR fold = per-doc count vs
   distinct (reference ``inverted_index.py:98-116``), BM25 = per-doc
-  score sum, then order/top-k. The plan follows the query count: one
-  query folds on doc_id and sorts (BM25: ``orderBy().limit(k)``);
-  more join a broadcast (query_id, term) map, fold on (query_id,
-  doc_id) and take a two-stage per-partition top-k;
+  score sum, then order/top-k;
+- two tiers behind one gate in that core, on the Σ df of the
+  request's terms (driver dictionary, no job). At most
+  ``LOCAL_MAX_POSTINGS`` the **driver tier** (:meth:`SearchEngine._local`)
+  reads the terms' ``term_bucket=`` dirs with pyarrow, runs the
+  kernel, drops tombstoned ids and folds each query in numpy; its
+  result is an Arrow table, a local relation whose
+  collect launches no job (empty results too). Above it the **Spark
+  tier** runs: one query folds on doc_id and sorts (BM25:
+  ``orderBy().limit(k)``); more join a broadcast (query_id, term)
+  map, fold on (query_id, doc_id) and take a two-stage per-partition
+  top-k;
 - PHRASE = AND + first-occurrence monotonicity over ``docs.first_pos``
-  (reference ``index.py:432-448``), complex = recursive set algebra
-  (``index.py:413-429``);
-- BM25 top-k, single or batched, with one lossless pruning core
+  (reference ``index.py:432-448``; driver-tier candidates are checked
+  on the driver), complex = recursive set algebra
+  (``index.py:413-429``; on the driver when both operands are);
+- Spark-tier BM25 top-k, single or batched, with one lossless pruning core
   (:meth:`SearchEngine._prune_plan`, MaxScore-style bound-then-verify):
   a driver-side df gate, one metadata-only stats job (σ and a provable
   τ per term), then a block floor for lone terms and, for asymmetric
@@ -39,11 +49,16 @@ plans:
 from __future__ import annotations
 
 import bisect
+import os
+import uuid
 from typing import Dict, Iterator, List, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +94,67 @@ def _cand_mask(cand: Dict[str, np.ndarray], names: List[str],
             rows = code == j
             keep[rows] = _holds(cand[t], lo[rows], hi[rows])
     return keep
+
+
+def _block_reads(cols: Sequence[str], cand: bool = False) -> tuple:
+    """(the :func:`codec.decode_blocks` columns, the block columns to
+    read) for postings with ``cols`` out of term, doc_id, tf, score and
+    positions; ``cand``: a candidate mask (:func:`_score_batch`) runs."""
+    wanted = {c for c in cols if c in codec.DECODE_READS}
+    if "score" in cols:
+        wanted |= {"tf", "doc_len"}
+    need = ["doc_ids_delta"] + [
+        b for c in sorted(wanted) for b in codec.DECODE_READS[c]]
+    if {"term", "score"} & set(cols) or cand:
+        need.append("term")
+    if cand:
+        need += ["first_doc_id", "last_doc_id"]
+    return wanted, need
+
+
+def _score_batch(batch: pa.RecordBatch, wanted, avgdl: float,
+                 idf: Optional[Dict[str, float]] = None,
+                 cand: Optional[Dict[str, np.ndarray]] = None) -> tuple:
+    """The one decode-and-score kernel, run per partition batch by
+    :meth:`SearchEngine._decode` and on the driver by
+    :meth:`SearchEngine._local`: an Arrow batch of block rows → (the
+    rows kept, their postings as :func:`codec.decode_blocks` gives them,
+    ``wanted`` columns). With ``idf`` ({term: idf}) the postings gain
+    ``score`` = idf · :func:`codec.bm25_w` (0 for a term not in it).
+    ``cand`` ({term: sorted candidate doc ids}): a listed term's blocks
+    holding none of its ids are dropped before decoding and its other
+    postings after; other terms pass."""
+    if cand is not None:
+        enc = batch.column("term").dictionary_encode()
+        names = enc.dictionary.to_pylist()
+        code = enc.indices.to_numpy()
+        kept = _cand_mask(cand, names, code,
+                          batch.column("first_doc_id").to_numpy(),
+                          batch.column("last_doc_id").to_numpy())
+        batch, code = batch.filter(kept), code[kept]
+    dec = codec.decode_blocks(batch, wanted)
+    if cand is not None:
+        keep = _cand_mask(cand, names, code[dec["block"]],
+                          dec["doc_id"], dec["doc_id"])
+        dec = {c: v[keep] for c, v in dec.items()}
+    if idf is not None:
+        block_idf = (batch.column("term").to_pandas().map(idf)
+                     .fillna(0.0).to_numpy())
+        dec["score"] = (codec.bm25_w(dec["tf"], dec["doc_len"], avgdl)
+                        * block_idf[dec["block"]])
+    return batch, dec
+
+
+# the typed columns of request results (Arrow side of their schemas)
+_DOC_ID = pa.field("doc_id", pa.int64())
+_SCORE = pa.field("score", pa.float64())
+_QUERY_ID = pa.field("query_id", pa.string())
+
+
+def _empty(*fields: pa.Field) -> pa.Table:
+    """A typed empty result: as a DataFrame its collect runs no job,
+    where ``createDataFrame([], ddl)`` runs one."""
+    return pa.schema(fields).empty_table()
 
 
 class ReadOnlyIndexError(RuntimeError):
@@ -130,18 +206,23 @@ class SearchEngine:
         self.postings = snap.read("postings")
         self.docs = snap.live_docs()
         self.tombstones = snap.read("tombstones")
-        # the token_dict as written (every mutation commits the live
-        # one) and the term dictionary on the driver, collected by one
-        # job: term → (df, bucket) for planning, and (decomposed, term)
-        # sorted for prefix ranges
         self.token_dict = snap.read("token_dict")
-        td = self.token_dict.select(
-            "term", "df", "term_bucket", "decomposed").toPandas()
-        self._terms = dict(zip(td["term"], zip(td["df"].tolist(),
-                                               td["term_bucket"].tolist())))
+        # the driver side, read with pyarrow (no job): term → (df,
+        # bucket) for planning, (decomposed, term) sorted for prefix
+        # ranges, the tombstoned ids sorted, and the postings and docs
+        # datasets the driver tier (:meth:`_local`) reads
+        td = snap.dataset("token_dict").to_table(
+            columns=["term", "df", "term_bucket", "decomposed"]).to_pydict()
+        self._terms = dict(zip(td["term"], zip(td["df"], td["term_bucket"])))
         by_dec = sorted(zip(td["decomposed"], td["term"]))
         self._decomposed = [d for d, _ in by_dec]
         self._dec_terms = [t for _, t in by_dec]
+        tomb = snap.dataset("tombstones")
+        self._tomb = np.sort(tomb.to_table(columns=["doc_id"])
+                             .column("doc_id").to_numpy()
+                             if tomb is not None else np.empty(0, np.int64))
+        self._postings_ds = snap.dataset("postings")
+        self._docs_ds = snap.dataset("docs")
 
     # -- term metadata lookup (driver-side, no job) ---------------------------
     def _term_meta(self, terms: Sequence[str]) -> Dict[str, dict]:
@@ -171,41 +252,17 @@ class SearchEngine:
         ``cand`` broadcasts {term: sorted candidate doc ids}: a listed
         term's blocks holding none of its ids are skipped before
         decoding and its other postings dropped; other terms pass."""
-        avgdl, idf = self.avgdl, idf or {}
-        wanted = {c for c in cols if c in codec.DECODE_READS}
-        if "score" in cols:
-            wanted |= {"tf", "doc_len"}
-        need = ["doc_ids_delta"] + [
-            b for c in sorted(wanted) for b in codec.DECODE_READS[c]]
-        if {"term", "score"} & set(cols) or cand is not None:
-            need.append("term")
-        if cand is not None:
-            need += ["first_doc_id", "last_doc_id"]
+        avgdl = self.avgdl
+        wanted, need = _block_reads(cols, cand is not None)
+        idf = (idf or {}) if "score" in cols else None
 
         def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                if cand is not None:
-                    enc = batch.column("term").dictionary_encode()
-                    names = enc.dictionary.to_pylist()
-                    code = enc.indices.to_numpy()
-                    kept = _cand_mask(
-                        cand.value, names, code,
-                        batch.column("first_doc_id").to_numpy(),
-                        batch.column("last_doc_id").to_numpy())
-                    batch, code = batch.filter(kept), code[kept]
-                dec = codec.decode_blocks(batch, wanted)
-                if cand is not None:
-                    keep = _cand_mask(cand.value, names, code[dec["block"]],
-                                      dec["doc_id"], dec["doc_id"])
-                    dec = {c: v[keep] for c, v in dec.items()}
+                batch, dec = _score_batch(
+                    batch, wanted, avgdl, idf,
+                    None if cand is None else cand.value)
                 if "term" in cols:
                     dec["term"] = batch.column("term").take(dec["block"])
-                if "score" in cols:
-                    block_idf = (batch.column("term").to_pandas().map(idf)
-                                 .fillna(0.0).to_numpy())
-                    dec["score"] = (codec.bm25_w(dec["tf"], dec["doc_len"],
-                                                 avgdl)
-                                    * block_idf[dec["block"]])
                 yield pa.RecordBatch.from_arrays([dec[c] for c in cols],
                                                  names=list(cols))
 
@@ -234,6 +291,11 @@ class SearchEngine:
     def search(self, tokens: Sequence[str], mode: str,
                log: bool = True) -> DataFrame:
         """Returns DataFrame(doc_id) ascending — inverted_index.py:98-116."""
+        return self._out(self._search(tokens, mode, log))
+
+    def _search(self, tokens: Sequence[str], mode: str, log: bool):
+        """:meth:`search`'s result: an Arrow table from the driver tier,
+        else a DataFrame."""
         if _mode(mode, ("or", "and", "phrase")) == "phrase":
             return self._search_phrase(tokens, log=log)
         out = self._request({None: tokens}, mode)
@@ -241,17 +303,27 @@ class SearchEngine:
             self._log_hits(tokens)
         return out
 
-    def _search_phrase(self, tokens: Sequence[str], log: bool = True) -> DataFrame:
+    def _out(self, result) -> DataFrame:
+        """A request result as a DataFrame: an Arrow table becomes a
+        local relation, whose collect launches no job."""
+        if isinstance(result, pa.Table):
+            return self.spark.createDataFrame(result)
+        return result
+
+    def _search_phrase(self, tokens: Sequence[str], log: bool = True):
         """AND + ordered-first-occurrence check (index.py:432-448).
 
         Candidates join ``docs.first_pos``; a candidate missing any query
-        morph is no-match (pinned Q4 semantics). No UDF — the positions
-        comparison is a codegen'd array expression.
+        morph is no-match (pinned Q4 semantics). Driver-tier candidates
+        are checked on the driver (:meth:`_local_phrase`); otherwise no
+        UDF — the positions comparison is a codegen'd array expression.
         """
-        candidates = self.search(tokens, "and", log=log)
+        candidates = self._search(tokens, "and", log)
         query_ordered = tk.tokenize_with_order(" ".join(tokens))
         if not query_ordered:
-            return self.spark.createDataFrame([], "doc_id long")
+            return _empty(_DOC_ID)
+        if isinstance(candidates, pa.Table):
+            return self._local_phrase(candidates, query_ordered)
 
         def first_pos_of(t):
             # first_pos is aligned with tokens; -1 / missing = token not
@@ -270,6 +342,28 @@ class SearchEngine:
         for i in range(len(query_ordered) - 1):
             cond = cond & (F.col(f"_p{i}") <= F.col(f"_p{i+1}"))
         return joined.filter(cond).select("doc_id").orderBy("doc_id")
+
+    def _local_phrase(self, candidates: pa.Table, q: List[str]) -> pa.Table:
+        """:meth:`_search_phrase`'s check on the driver: pyarrow reads
+        the candidates' ``tokens``/``first_pos`` from the docs parts, and
+        each query morph's first position (-1 when absent, or null) must
+        be ≥ 0 and not below the previous morph's."""
+        docs = self._docs_ds.to_table(
+            columns=["doc_id", "tokens", "first_pos"],
+            filter=ds.field("doc_id").isin(candidates.column("doc_id"))
+        ).combine_chunks()
+        flat = pc.list_flatten(docs.column("tokens"))
+        parent = np.asarray(pc.list_parent_indices(docs.column("tokens")))
+        first = np.asarray(pc.list_flatten(docs.column("first_pos"))
+                           .fill_null(-1))
+        pos = np.full((len(q), docs.num_rows), -1, dtype=np.int64)
+        for i, t in enumerate(q):
+            hit = np.flatnonzero(np.asarray(pc.equal(flat, t)))
+            rows, at = np.unique(parent[hit], return_index=True)
+            pos[i, rows] = first[hit[at]]
+        ok = (pos >= 0).all(axis=0) & (np.diff(pos, axis=0) >= 0).all(axis=0)
+        ids = np.sort(np.asarray(docs.column("doc_id"))[ok])
+        return pa.Table.from_arrays([ids], schema=pa.schema([_DOC_ID]))
 
     def search_phrase_contiguous(self, tokens: Sequence[str],
                                  log: bool = False,
@@ -304,7 +398,7 @@ class SearchEngine:
         import pandas as pd
         q = tk.tokenize_with_order(" ".join(tokens))
         if not q:
-            return self.spark.createDataFrame([], "doc_id long")
+            return self._out(_empty(_DOC_ID))
         stored = (self.has_positions if use_positions is None
                   else use_positions)
         if stored:
@@ -344,7 +438,7 @@ class SearchEngine:
         uniq = list(dict.fromkeys(q))
         meta = self._term_meta(uniq)
         if len(meta) < len(uniq):
-            return self.spark.createDataFrame([], "doc_id long")
+            return self._out(_empty(_DOC_ID))
         pos = (self._decode(self._blocks_for(meta),
                             cols=("term", "doc_id", "positions"))
                .join(candidates, "doc_id", "left_semi"))
@@ -383,11 +477,21 @@ class SearchEngine:
     def search_complex(self, req: Union[ComplexRequest, SearchRequest],
                        log: bool = True) -> DataFrame:
         """Recursive AND/OR set algebra over sub-searches (index.py:413-429)."""
+        return self._out(self._complex(req, log))
+
+    def _complex(self, req: Union[ComplexRequest, SearchRequest], log: bool):
+        """:meth:`search_complex`'s result: two driver-tier operands
+        combine on the driver, anything else as DataFrames."""
         if isinstance(req, SearchRequest):
-            return self.search(req.tokens, req.mode, log=log)
+            return self._search(req.tokens, req.mode, log)
         mode = _mode(req.mode)
-        r1 = self.search_complex(req.condition1, log=log)
-        r2 = self.search_complex(req.condition2, log=log)
+        r1 = self._complex(req.condition1, log)
+        r2 = self._complex(req.condition2, log)
+        if isinstance(r1, pa.Table) and isinstance(r2, pa.Table):
+            a, b = (np.asarray(r.column("doc_id")) for r in (r1, r2))
+            ids = np.intersect1d(a, b) if mode == "and" else np.union1d(a, b)
+            return pa.Table.from_arrays([ids], schema=pa.schema([_DOC_ID]))
+        r1, r2 = self._out(r1), self._out(r2)
         if mode == "and":
             return r1.intersect(r2).orderBy("doc_id")
         return r1.union(r2).distinct().orderBy("doc_id")
@@ -413,6 +517,15 @@ class SearchEngine:
     # (Σ over pruned terms of Σ df of the essential terms they are
     # pruned against). Terms past it decode in full, costliest first.
     MAXSCORE_MAX_TOTAL_CAND = 2_000_000
+    # The tier gate (:meth:`_request`): a request whose kept terms' Σ df
+    # is at most this runs on the driver (:meth:`_local`, no job). The
+    # bound is where the driver's whole request cost (c0 + s·P) reaches
+    # ONE Python-stage job's floor J, which every Spark-tier plan pays
+    # however fast its executors decode: MEASURED J 207 ms, c0 41 ms,
+    # s 0.235 ms per 1k postings on a 100k-turn index, 4 cores
+    # (BENCH/local_tier_fit_r12.json, tools/fit_local_tier.py). There
+    # the driver tier still ran 2.3× faster than the Spark tier.
+    LOCAL_MAX_POSTINGS = 710_000
 
     def bm25_topk(self, tokens: Sequence[str], k: int = 10, mode: str = "or",
                   use_wand: bool = True) -> DataFrame:
@@ -420,7 +533,7 @@ class SearchEngine:
         With ``use_wand`` an OR query decodes only the blocks the
         pruning planner (:meth:`_prune_plan`) keeps; results equal the
         unpruned plan's."""
-        return self._request({None: tokens}, mode, k, use_wand)
+        return self._out(self._request({None: tokens}, mode, k, use_wand))
 
     # -- batched multi-query execution ---------------------------------------
     # A production engine over this index serves a query LOG, not one
@@ -440,7 +553,7 @@ class SearchEngine:
                      mode: str = "or") -> DataFrame:
         """B boolean queries in one plan → DataFrame(query_id, doc_id),
         per-query rows identical to :meth:`search` (mode "or"/"and")."""
-        return self._request(queries, mode)
+        return self._out(self._request(queries, mode))
 
     def bm25_topk_batch(self, queries: Dict[str, Sequence[str]],
                         k: int = 10, mode: str = "or",
@@ -457,7 +570,7 @@ class SearchEngine:
         otherwise decode the head term's 10^9+ postings fully for the
         whole batch. Candidate pruning collects the B×k result rows
         (:meth:`_request`)."""
-        return self._request(queries, mode, k, use_wand)
+        return self._out(self._request(queries, mode, k, use_wand))
 
     def _batch_topk(self, scored: DataFrame, k: int) -> DataFrame:
         """Two-stage partial top-k per query over (query_id, doc_id,
@@ -482,21 +595,26 @@ class SearchEngine:
 
     def _request(self, queries: Dict[Optional[str], Sequence[str]],
                  mode: str, k: Optional[int] = None,
-                 use_wand: bool = False) -> DataFrame:
+                 use_wand: bool = False):
         """The one request core of :meth:`search`, :meth:`bm25_topk` and
         their batch forms (query id None: a single call, no query_id
         column): (query_id, doc_id) by (query_id, doc_id), or with ``k``
         each query's BM25 top-k, desc score, ties by ascending doc_id.
         An AND query with an unindexed term matches nothing
-        (inverted_index.py:110-113) and is dropped on the driver. One
-        query left folds on doc_id and sorts; more join a broadcast
-        (query_id, term) map and take :meth:`_batch_topk`. A candidate
-        broadcast from :meth:`_prune_plan` makes the result eager:
-        collected (Arrow, no job to rebuild) and released on any path."""
+        (inverted_index.py:110-113) and is dropped on the driver.
+
+        The tier gate: when the kept terms' Σ df is at most
+        ``LOCAL_MAX_POSTINGS`` the request runs on the driver
+        (:meth:`_local`) and returns an Arrow table; so does an empty
+        result. Above it the Spark plan runs: one query left folds on
+        doc_id and sorts; more join a broadcast (query_id, term) map and
+        take :meth:`_batch_topk`. A candidate broadcast from
+        :meth:`_prune_plan` makes the result eager: collected and
+        released on any path."""
         mode = _mode(mode)
         score = ["score"] if k is not None else []
-        schema = ("" if None in queries else "query_id string, ") + (
-            "doc_id long" + (", score double" if score else ""))
+        schema = pa.schema(([] if None in queries else [_QUERY_ID])
+                           + [_DOC_ID] + ([_SCORE] if score else []))
         meta = self._term_meta([t for ts in queries.values() for t in ts])
         qterms = {}
         for qid, tokens in queries.items():
@@ -505,10 +623,12 @@ class SearchEngine:
             if known and (mode == "or" or len(known) == len(uniq)):
                 qterms[qid] = known
         if not qterms or score and k <= 0:
-            return self.spark.createDataFrame([], schema)
+            return schema.empty_table()
         meta = {t: meta[t] for ts in qterms.values() for t in ts}
         idf = ({t: bm25_idf(self.n_docs, m["df"]) for t, m in meta.items()}
                if score else None)
+        if sum(m["df"] for m in meta.values()) <= self.LOCAL_MAX_POSTINGS:
+            return self._local(qterms, meta, mode, k, idf, schema)
         plan = (self._prune_plan(qterms, meta, k)
                 if use_wand and mode == "or" and self.wand_safe else None)
         keep, cand = plan or (None, None)
@@ -564,7 +684,66 @@ class SearchEngine:
         finally:
             if b_cand is not None:
                 b_cand.unpersist()
-        return self.spark.createDataFrame(pdf, schema)
+        return pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+
+    def _local(self, qterms: Dict[Optional[str], List[str]],
+               meta: Dict[str, dict], mode: str, k: Optional[int],
+               idf: Optional[Dict[str, float]],
+               schema: pa.Schema) -> pa.Table:
+        """The driver tier of :meth:`_request`, launching no job: pyarrow
+        reads the terms' blocks (their ``term_bucket=`` dirs, a ``term``
+        filter), :func:`_score_batch` decodes and scores them and the
+        tombstoned ids drop. Each query then folds in numpy: a doc's
+        weights sum term by term in query order (the oracle's order, so
+        ties at the k-th place break alike), AND keeps the docs every
+        term holds, and top-k orders by (score desc, doc_id asc)."""
+        terms = list(meta)
+        scored = idf is not None
+        wanted, need = _block_reads(("term", "doc_id", "score") if scored
+                                    else ("term", "doc_id"))
+        table = self._postings_ds.to_table(columns=need, filter=(
+            ds.field("term_bucket").isin(sorted({m["bucket"]
+                                                 for m in meta.values()}))
+            & ds.field("term").isin(terms)))
+        value_set = pa.array(terms, pa.string())
+        code, doc, score = ([np.empty(0, np.int64)], [np.empty(0, np.int64)],
+                            [np.empty(0)])
+        for batch in table.to_batches():
+            batch, dec = _score_batch(batch, wanted, self.avgdl, idf)
+            code.append(np.asarray(pc.index_in(
+                batch.column("term"), value_set=value_set))[dec["block"]])
+            doc.append(dec["doc_id"])
+            score.append(dec.get("score", np.empty(0)))
+        code, doc, score = (np.concatenate(a) for a in (code, doc, score))
+        live = ~_holds(self._tomb, doc, doc)
+        order = np.argsort(code[live], kind="stable")
+        code, doc = code[live][order], doc[live][order]
+        if scored:
+            score = score[live][order]
+        at = np.searchsorted(code, np.arange(len(terms) + 1))
+        span = {t: slice(at[j], at[j + 1]) for j, t in enumerate(terms)}
+        cols = {"query_id": [], "doc_id": [], "score": []}
+        for qid in sorted(qterms):
+            segs = [span[t] for t in qterms[qid]]
+            ids = np.unique(np.concatenate([doc[s] for s in segs]))
+            hits, acc = np.zeros(len(ids), np.int64), np.zeros(len(ids))
+            for s in segs:
+                i = np.searchsorted(ids, doc[s])
+                hits[i] += 1
+                if scored:
+                    acc[i] += score[s]
+            if mode == "and":
+                ids, acc = ids[hits == len(segs)], acc[hits == len(segs)]
+            if scored:
+                top = np.lexsort((ids, -acc))[:k]
+                ids, acc = ids[top], acc[top]
+            cols["query_id"] += [qid] * len(ids)
+            cols["doc_id"].append(ids)
+            cols["score"].append(acc)
+        cols["doc_id"] = np.concatenate(cols["doc_id"])
+        cols["score"] = np.concatenate(cols["score"])
+        return pa.Table.from_arrays(
+            [pa.array(cols[f.name], f.type) for f in schema], schema=schema)
 
     def _prune_plan(self, queries: Dict[str, Sequence[str]],
                     meta: Dict[str, dict], k: int) -> Optional[tuple]:
@@ -791,7 +970,8 @@ class SearchEngine:
         dp = tk.decompose(prefix)
         freq = Snapshot(self.spark, self.cat).read("token_freq")
         if freq is None:
-            return self.spark.createDataFrame([], "term string, freq long")
+            return self._out(_empty(pa.field("term", pa.string()),
+                                    pa.field("freq", pa.int64())))
         return (
             freq.join(self.token_dict.select("term", "decomposed"), "term")
             .filter(F.col("decomposed").startswith(dp))
@@ -818,19 +998,25 @@ class SearchEngine:
         return self.cat.marker_last("query_log")
 
     def _append_log(self, hits: List[str]) -> None:
+        """One parquet file of (seq_id, ts, token, size) rows, written by
+        pyarrow (no job) under a unique name; hidden (``.``-prefixed)
+        until complete, so a reader never sees part of it."""
         self._require_writable("query logging")
         last = self._last_log_seq()
         self.cat.marker_reserve("query_log", last + len(hits))
-        pdf = pd.DataFrame({
-            "seq_id": np.arange(last + 1, last + 1 + len(hits), dtype=np.int64),
-            "ts": pd.Timestamp.now(tz="UTC"),
-            "token": hits,
-            "size": np.int32(1),
+        n = len(hits)
+        table = pa.table({
+            "seq_id": pa.array(np.arange(last + 1, last + 1 + n), pa.int64()),
+            "ts": pa.array([pd.Timestamp.now(tz="UTC")] * n,
+                           pa.timestamp("us", tz="UTC")),
+            "token": pa.array(hits, pa.string()),
+            "size": pa.array(np.ones(n, np.int32)),
         })
-        df = self.spark.createDataFrame(
-            pdf, "seq_id long, ts timestamp, token string, size int")
-        df.coalesce(1).write.mode("append").parquet(
-            self.cat.table_path("query_log"))
+        path = self.cat.table_path("query_log")
+        name = f"part-{last + 1:020d}-{uuid.uuid4().hex}.parquet"
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(table, os.path.join(path, "." + name))
+        os.replace(os.path.join(path, "." + name), os.path.join(path, name))
 
     def _log_hits(self, tokens: Sequence[str]) -> None:
         """Append (token, 1) per query-token occurrence with ≥1 hit

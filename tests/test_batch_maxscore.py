@@ -45,6 +45,7 @@ def batch_engine(spark, tmp_root):
                       block_size=16)
     eng = SearchEngine(spark, root)
     eng.MAXSCORE_MIN_NE_POSTINGS = 0  # sandbox scale; see zipf_engine
+    eng.LOCAL_MAX_POSTINGS = 0  # the Spark tier, whose plans these are
     return eng
 
 
@@ -188,6 +189,7 @@ def test_batch_maxscore_parity_on_zipf(spark, zipf_index):
     root, _ = zipf_index
     eng = SearchEngine(spark, root)
     eng.MAXSCORE_MIN_NE_POSTINGS = 0
+    eng.LOCAL_MAX_POSTINGS = 0
     rows = (eng.token_dict.select("term", "df")
             .orderBy(F.desc("df"), F.asc("term")).collect())
     terms = [(r["term"], r["df"]) for r in rows]

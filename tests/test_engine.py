@@ -29,9 +29,11 @@ def zeng(spark, zipf_index):
 
 @pytest.fixture(scope="module")
 def zeng_pruned(spark, zipf_index):
-    """``zeng`` with the pruning gate open: no fixture df reaches it."""
+    """``zeng`` with the pruning gate open: no fixture df reaches it.
+    Pinned to the Spark tier, whose plans the pruning serves."""
     eng = SearchEngine(spark, zipf_index[0])
     eng.MAXSCORE_MIN_NE_POSTINGS = 0
+    eng.LOCAL_MAX_POSTINGS = 0
     return eng
 
 
@@ -350,10 +352,13 @@ def test_batch_bm25_empty_and_k0(zeng):
 
 @pytest.mark.parametrize("tokens", [["마법", "특별"], ["같은", "비스크", "마법"],
                                     ["마법", "없는말"]])
-def test_batch_of_one_runs_the_single_plan(eng, count_jobs, tokens):
+def test_batch_of_one_runs_the_single_plan(eng, count_jobs, tokens,
+                                           monkeypatch):
     """A one-query batch returns the single call's rows with query_id
     added, and launches the single call's jobs (no qmap join, no
-    two-stage top-k)."""
+    two-stage top-k). Pinned to the Spark tier, whose plans these are."""
+    monkeypatch.setattr(eng, "LOCAL_MAX_POSTINGS", 0)
+
     def run(make):
         rows = []
         n = count_jobs(lambda: rows.extend(map(tuple, make().collect())))

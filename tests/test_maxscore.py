@@ -12,8 +12,10 @@ def zipf_engine(spark, zipf_index):
     root, _ = zipf_index
     eng = SearchEngine(spark, root)
     # production gate: the skipped decode must beat the extra jobs —
-    # no fixture df reaches it, so open it for these tests
+    # no fixture df reaches it, so open it for these tests, on the
+    # Spark tier whose plans the pruning serves
     eng.MAXSCORE_MIN_NE_POSTINGS = 0
+    eng.LOCAL_MAX_POSTINGS = 0
     return eng
 
 
@@ -87,6 +89,7 @@ def clustered_engine(spark, tmp_root):
                       block_size=16)  # rare df 200 -> 13 blocks >= k=10
     eng = SearchEngine(spark, root)
     eng.MAXSCORE_MIN_NE_POSTINGS = 0  # see zipf_engine
+    eng.LOCAL_MAX_POSTINGS = 0
     return eng
 
 

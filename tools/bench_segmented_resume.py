@@ -177,6 +177,8 @@ def main() -> None:
     print(json.dumps(record))
     import shutil
     shutil.rmtree(root, ignore_errors=True)
+    if os.path.exists(f"{root}_child.log"):  # written by _run_child
+        os.remove(f"{root}_child.log")
 
 
 if __name__ == "__main__":

@@ -42,6 +42,9 @@ def main() -> None:
         pdf = corpus.make_transcripts(3000, seed=11)
         build.build_index(spark, corpus.spark_transcripts(spark, pdf), root)
     eng = SearchEngine(spark, root)
+    # the plans shown are the Spark tier's: at this scale every request
+    # would otherwise run on the driver (SearchEngine._local)
+    eng.LOCAL_MAX_POSTINGS = 0
 
     checks = []
 

@@ -73,6 +73,8 @@ def main() -> None:
     tdf.unpersist()
     exact_eng, pruned_eng = SearchEngine(spark, root), SearchEngine(spark, root)
     pruned_eng.MAXSCORE_MIN_NE_POSTINGS = 0
+    for eng in (exact_eng, pruned_eng):
+        eng.LOCAL_MAX_POSTINGS = 0  # both legs on the Spark tier
     head = (exact_eng.token_dict.select("term", "df")
             .orderBy(F.desc("df"), F.asc("term")).first())
     rh = ["topicmarker", head["term"]]
